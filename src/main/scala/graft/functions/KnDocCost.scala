@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   *
   * The tables ride in the expression (vocabulary-bounded — the same
   * bound that let the join path broadcast them); lookups hit
-  * transient two-level HashMaps built once per executor. Long sums
+  * transient two-level HashMaps built once per task. Long sums
   * are order-independent, so the scores are bit-identical to the
   * join path's (LangModelSpec asserts exact parity on the fixtures).
   */

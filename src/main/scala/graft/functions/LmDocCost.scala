@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The cost table rides in the expression (bounded: vocabulary ≤
   * charset³, the same bound that lets lmScore broadcast it); lookups
-  * hit a transient HashMap built once per executor. Lowercasing uses
+  * hit a transient HashMap built once per task. Lowercasing uses
   * root-locale String semantics — equivalent to Spark's lower() on
   * the ASCII/BMP text this pipeline processes (LangModelSpec asserts
   * exact parity with the join-based lmScore on the fixtures).

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * The set rides in the expression (the frozen benchmark gram set is
   * capped at 2^20 entries — the same bound that let the join path
   * broadcast it); probes hit a transient HashSet built once per
-  * executor. Fed a DISTINCT-gram array ([[WordNgrams]]'s contract)
+  * task. Fed a DISTINCT-gram array ([[WordNgrams]]'s contract)
   * the count equals the join path's per-document distinct-hit count
   * exactly (StreamPretrainSpec pins parity on the fixtures).
   */

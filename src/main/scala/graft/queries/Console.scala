@@ -155,10 +155,14 @@ object Console {
     case Stats(src, window, rollup) =>
       val base = catalog.resolve(spark, src)
       require(base.columns.contains("ts"), s"stats needs a ts column on $src")
-      val now = nowEpochSec.getOrElse(
-        base.agg(max(unix_timestamp(col("ts")))).head().getLong(0))
-      StatsRollup.statsQuery(base, "ts", Seq.empty,
-        windowSec = window, stepSec = rollup, nowEpochSec = now)
+      // an empty source has no latest stamp (the max is null): serve
+      // the stats schema with no rows
+      val now = nowEpochSec.orElse(Option(
+        base.agg(max(unix_timestamp(col("ts")))).head().get(0))
+        .map(_.asInstanceOf[Long]))
+      val stats = StatsRollup.statsQuery(base, "ts", Seq.empty,
+        windowSec = window, stepSec = rollup, nowEpochSec = now.getOrElse(0L))
+      if (now.isEmpty) stats.limit(0) else stats
     case Count(src) =>
       catalog.resolve(spark, src).agg(count(lit(1)).as("cnt"))
     case Search(sql, sources) =>

@@ -511,6 +511,8 @@ object StreamDedup {
     val touched = existingAll
       .join(relabelDf, Seq("cluster"), "left_semi").select("pl")
       .unionByName(withPl(freshDf).select("pl"))
+      // a string column when partition-type inference is off
+      .select(col("pl").cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
     // rewrite = every existing row of a touched directory (relabeled
     // through the broadcast map, identity elsewhere) ∪ the fresh rows;

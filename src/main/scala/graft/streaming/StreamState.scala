@@ -196,7 +196,16 @@ private[graft] object StreamState {
         hfs.mkdirs(p.getParent)
         hfs.create(p, true).close()
       }
-    ensure(awareMarkerPath(root))
+    // upgrading a legacy log: its tombstone rows predate the marker,
+    // so record them (one aggregate, once per root) BEFORE declaring
+    // the log marker-aware — in the other order a crash between the
+    // two would hide a committed delete
+    if (!hfs.exists(awareMarkerPath(root))) {
+      if (genLogExists(spark, root) &&
+          !readGenLog(spark, root).filter(col("del")).isEmpty)
+        ensure(tombMarkerPath(root))
+      ensure(awareMarkerPath(root))
+    }
     if (del) ensure(tombMarkerPath(root))
     ids.toDF("id").distinct()
       .withColumn("batch_id", lit(batchId))

@@ -2,84 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The in-window contention heartbeat (r14 verdict item 3): the
-  * fencepost brackets around a bench window sample the GAPS — a
-  * co-tenant that arrives after the opening probe and drains before
-  * the closing one inflates every batch inside the window and flags
-  * nothing. The heartbeat samples DURING the window; these tests pin
-  * the trip predicate's boundaries and prove a synthetically-injected
-  * busy-spinner trips it.
+/** Bench's contention signal: the Spark canary. A fixed warm plan is
+  * read after every bench window and compared against the run's
+  * min-so-far floor; these tests pin the trip predicate's boundaries
+  * and the floor's re-seed after a failed run.
   */
 class BenchHeartbeatSpec extends AnyFunSuite {
 
-  test("hbContended boundaries: ratio 1.6, n >= 3, ref > 0") {
-    // clean window: in-window median at / below 1.6x the idle ref → calm
-    assert(!Bench.hbContended(p50 = 0.080, ref = 0.050, n = 10))
-    assert(!Bench.hbContended(p50 = 0.050, ref = 0.050, n = 10))
-    // contended: past the ratio with enough samples
-    assert(Bench.hbContended(p50 = 0.081, ref = 0.050, n = 3))
-    // too few samples (a 1 s window) stays the fenceposts' call
-    assert(!Bench.hbContended(p50 = 0.500, ref = 0.050, n = 2))
-    // no reference (leg never measured one) → never trips
-    assert(!Bench.hbContended(p50 = 0.500, ref = -1.0, n = 10))
-    assert(!Bench.hbContended(p50 = 0.500, ref = 0.0, n = 10))
-  }
-
-  test("adjudication is median-based: one GC-pause-shaped spike among clean samples must not trip") {
-    // 19 clean samples + one 5x spike: nearest-rank p95 would read the
-    // spike (rank 19 of 20 = 0.25), the median stays at the floor —
-    // only SUSTAINED inflation (a real co-tenant) moves the median
-    val window = Seq.fill(19)(0.050) :+ 0.250
-    val med = Bench.p50(window)
-    assert(med == 0.050)
-    assert(!Bench.hbContended(med, ref = 0.050, n = window.size.toLong))
-    // sustained 2x inflation: every sample doubles, the median trips
-    val hot = window.map(_ * 2)
-    assert(Bench.hbContended(Bench.p50(hot), ref = 0.050, n = hot.size.toLong))
-  }
-
-  test("an injected busy-spinner trips the heartbeat; its samples inflate past 1.6x the idle reference") {
-    val cores = Runtime.getRuntime.availableProcessors()
-    // NOT load-monotone for heavy pre-load (r15 ADVICE): with L
-    // background runnable threads on n cores, the ref inflates too
-    // and the spinner's RELATIVE inflation is ~(L+2n+1)/(L+1), which
-    // drops below the 1.6 trip for L ≳ 5n — on an already-saturated
-    // host the injection can't separate itself from the noise, so
-    // skip rather than flake (the trip predicate's boundaries are
-    // pinned by the pure tests above either way).
-    val preLoad = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    assume(preLoad < cores.toDouble,
-      f"pre-test load $preLoad%.1f >= $cores cores — spinner inflation" +
-        " would sit under the trip; skipping the injection test")
-    // idle-ish reference: best-of-3, same as the bench legs take it
-    val ref = Seq.fill(3)(Bench.calibrateSmall()).min
-    // 2x-cores spinners: the heartbeat thread becomes one of 2n+1
-    // runnable threads on n cores → each sample runs at >= ~2x its
-    // uncontended wall, comfortably past the 1.6 trip
-    @volatile var spin = true
-    val spinners = Array.fill(2 * cores)(new Thread(() => {
-      var x = 1L
-      while (spin) { x = x * 6364136223846793005L + 1442695040888963407L }
-      if (x == 42L) println("")
-    }))
-    spinners.foreach { t => t.setDaemon(true); t.start() }
-    val hb = new Bench.Heartbeat(periodMs = 50L)
-    try Thread.sleep(2500L)
-    finally spin = false
-    val samples = hb.stop()
-    spinners.foreach(_.join(2000))
-    assert(samples.size >= 3, s"only ${samples.size} heartbeat samples")
-    val med = Bench.p50(samples)
-    assert(Bench.hbContended(med, ref, samples.size.toLong),
-      f"spinner window not flagged: median $med%.3f vs ref $ref%.3f x ${samples.size}")
-  }
-
   test("canaryContended: trips past 1.5x the attempt floor; silent without a floor or a reading") {
-    // the canary is the Spark-stack twin of the heartbeat: a fixed
-    // warm plan repeated between groups, sensitive to the bandwidth/
-    // LLC co-tenancy a register-resident serial probe cannot see
-    // (measured: queries inflated 4x while the hb median read 1.18x)
+    // a fixed warm plan repeated between groups, sensitive to the
+    // bandwidth/LLC co-tenancy a register-resident serial probe cannot
+    // see (measured: queries inflated 4x while a CPU probe read 1.18x)
     assert(!Bench.canaryContended(c = 0.52, floor = 0.35))
     assert(Bench.canaryContended(c = 0.53, floor = 0.35))
     assert(!Bench.canaryContended(c = 0.30, floor = 0.35)) // faster is fine
@@ -87,34 +20,24 @@ class BenchHeartbeatSpec extends AnyFunSuite {
     assert(!Bench.canaryContended(c = -1.0, floor = 0.35)) // failed canary
   }
 
-  test("samplesBetween slices a running heartbeat into per-group windows without draining it") {
-    val hb = new Bench.Heartbeat(periodMs = 30L)
-    val t0 = System.nanoTime()
-    Thread.sleep(700L)
-    val t1 = System.nanoTime()
-    Thread.sleep(700L)
-    val t2 = System.nanoTime()
-    val w1 = hb.samplesBetween(t0, t1)
-    val w2 = hb.samplesBetween(t1, t2)
-    val all = hb.stop()
-    assert(w1.size >= 3, s"window 1 got ${w1.size} samples")
-    assert(w2.size >= 3, s"window 2 got ${w2.size} samples")
-    // the windows partition the [t0, t2) span — nothing double-counted
-    assert(hb.samplesBetween(t0, t2).size == w1.size + w2.size)
-    // slicing never drained: stop() still returns everything
-    assert(all.size >= w1.size + w2.size)
-  }
-
-  test("a calm window's heartbeat collects samples without tripping against its own floor") {
-    // self-referential calm check (robust on a shared box): the ref is
-    // taken INSIDE the same window conditions as the samples, so even
-    // a loaded host can't make min(samples) > 1.6x min(samples)... the
-    // assertion pins that the p95/min spread of an idle window stays
-    // inside the trip ratio unless a co-tenant arrives mid-window.
-    val hb = new Bench.Heartbeat(periodMs = 50L)
-    Thread.sleep(1200L)
-    val samples = hb.stop()
-    assert(samples.size >= 3)
-    assert(samples.forall(_ > 0))
+  test("a failed seed run does not disable the Canary floor") {
+    val readings = Iterator(-1.0, 0.40, 0.90, -1.0, 0.45, 0.30)
+    val canary = new Bench.Canary(() => readings.next())
+    // the seed fails: no floor, nothing can trip yet
+    assert(!canary.read("seed").contended)
+    assert(canary.floor == -1.0)
+    // the first successful reading re-seeds the floor
+    assert(!canary.read("group 1").contended)
+    assert(canary.floor == 0.40)
+    // so a later inflated reading is still caught
+    val hot = canary.read("group 2")
+    assert(hot.contended && hot.floor == 0.40)
+    // a failure mid-run keeps the floor; readings fold min-so-far
+    assert(!canary.read("group 3").contended)
+    assert(canary.floor == 0.40)
+    assert(!canary.read("group 4").contended)
+    assert(canary.floor == 0.40)
+    assert(!canary.read("group 5").contended)
+    assert(canary.floor == 0.30)
   }
 }

@@ -50,6 +50,19 @@ class ConsoleSpec extends SparkSpec {
     assert(buckets.zip(buckets.tail).forall { case (a, b) => b - a == 7200 })
   }
 
+  test("stats over an empty source returns the stats schema with no rows") {
+    val empty = new Console.Catalog {
+      def resolve(s: SparkSession, name: String): DataFrame =
+        Cat.resolve(s, "ev").filter(lit(false))
+    }
+    val df = Console.compile(Console.parse("stats ev window 1d rollup 2h"),
+      empty, spark)
+    val full = Console.compile(Console.parse("stats ev window 1d rollup 2h"),
+      Cat, spark)
+    assert(df.schema == full.schema)
+    assert(df.collect().isEmpty)
+  }
+
   test("count emits COUNT(1) (F15)") {
     val got = Console.compile(Console.parse("count docs"), Cat, spark)
       .head().getLong(0)

@@ -706,4 +706,31 @@ class DedupSpec extends SparkSpec {
     assert(got == (for { a <- 1L to 6L; b <- 1L to 6L if a < b }
       yield (a, b)).toSet)
   }
+
+  test("label-rewriting upsert works with partition-type inference off") {
+    import graft.streaming.StreamDedup
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val root = java.nio.file.Files.createTempDirectory("dedup_pl").toString
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi"
+    val cfg = StreamDedup.Config(threshold = 0.5)
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      StreamDedup.upsertBatchWithLabels(
+        Seq((1L, base), (2L, base + " rho")).toDF("doc_id", "text"),
+        "doc_id", "text", root, cfg)
+      // a fresh near-dup of the labeled cluster: the fold rewrites the
+      // touched label directories, whose `pl` now reads as a string
+      StreamDedup.upsertBatchWithLabels(
+        Seq((3L, base + " rho sigma")).toDF("doc_id", "text"),
+        "doc_id", "text", root, cfg)
+      assert(StreamDedup.indexLabels(spark, root).as[(Long, Long)]
+        .collect().toSet == Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -193,6 +193,23 @@ class StreamCompactionSpec extends SparkSpec {
     assert(!StreamState.claimSidecar(spark, p, "32"))
   }
 
+  test("legacy generation log: a plain append after the upgrade keeps its committed deletion") {
+    // a pre-marker root: generation rows with one tombstone, no sidecars
+    val root = tmp("legacy_gens")
+    Seq((1L, 0L, false), (2L, 0L, false), (1L, 1L, true))
+      .toDF("id", "batch_id", "del")
+      .write.parquet(StreamState.genLogPath(root))
+    assert(StreamState.tombstonesExist(spark, root))
+    // the first marker-aware append must not make the log look delete-free
+    StreamState.appendGens(Seq(3L).toDF("id"), root, 2L)
+    assert(StreamState.tombstonesExist(spark, root))
+    assert(StreamState.tombstones(spark, root)
+      .select("id").as[Long].collect().toSeq == Seq(1L))
+    // the dead set every generation-tracked upsert excludes
+    assert(StreamState.updatedGens(spark, root).filter(col("_del"))
+      .select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   test("text index: deletes tombstone, resurrect, and physically retire at compaction") {
     val root = tmp("sci-idx-del")
     StreamTextIndex.upsertBatch(docs, "doc_id", "text", root, 0L)

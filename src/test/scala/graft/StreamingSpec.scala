@@ -701,25 +701,35 @@ class StreamingSpec extends SparkSpec {
     // ~1/4 the bench rate on the same full topology (parse → fan-out →
     // 1 s parquet results + 10 s windowed stats), so a healthy engine
     // clears the 1 s trigger with an order of magnitude of headroom.
-    // The bench's own contention armor (round-9 ADVICE: a wall-clock
-    // bound inside `sbt test` is flaky on a loaded CI box): measure
-    // the host BEFORE the run with the same serial/all-cores probes
-    // Bench uses, and keep the structural assertions strict while
-    // relaxing only the latency bound when the box is contended.
-    val calibSerial = Bench.calibrate()
-    val calibPar = Bench.calibrateParallel()
-    val contended = calibPar > 1.6 * calibSerial
+    // The bench's contention signal (round-9 ADVICE: a wall-clock
+    // bound inside `sbt test` is flaky on a loaded CI box): the Spark
+    // canary Bench reads after its streaming window. Its floor comes
+    // from warm runs BEFORE the stream and one reading follows right
+    // after it; only a reading past 1.5x the floor relaxes the latency
+    // bound, while the structural assertions stay strict. A CPU-only
+    // probe read this host as idle while the p95 doubled (r17); the
+    // canary runs scan + aggregate through the same executors, so it
+    // sees bandwidth and IO co-tenants too. The input is sf0.1: warm
+    // q1_agg must take well over 0.2 s so timer noise cannot trip the
+    // 1.5x ratio, and at sf0.01 it reads ~0.14 s once the suite's JVM
+    // is warm. A cold JVM needs ~4 readings to settle, hence the 4
+    // warm readings behind the floor.
+    val canary = Bench.Canary(spark, "/root/testdata/sf0.1")
+    (1 to 4).foreach(i => canary.read(s"warm $i"))
     val r = StreamBench.run(spark, ratePerSec = 5000L, runtimeSec = 20)
+    val after = canary.read("after stream")
+    info(f"canary ${after.sec}%.3f s vs floor ${after.floor}%.3f s " +
+      f"(ratio ${after.sec / after.floor}%.2f)")
     assert(r.resultsBatches >= 5,
       s"too few result triggers fired to judge cadence: $r")
     assert(r.resultsP95 >= 0, s"no results latency measured: $r")
-    if (!contended)
+    if (!after.contended)
       assert(r.resultsP95 < 1.0,
         s"results p95 ${r.resultsP95}s breaches the 1 s trigger on an " +
-          s"uncontended host (calib $calibSerial/$calibPar): $r")
+          s"uncontended host ($after): $r")
     else
-      info(f"host contended (calib serial $calibSerial%.2f s, parallel " +
-        f"$calibPar%.2f s) — latency bound relaxed; p95 was ${r.resultsP95}%.3f s")
+      info(f"host contended (canary ${after.sec}%.3f s vs floor " +
+        f"${after.floor}%.3f s) — latency bound relaxed; p95 was ${r.resultsP95}%.3f s")
     assert(r.rowsIn > 0 && r.rowsMatched > 0, s"no rows flowed: $r")
   }
 }
