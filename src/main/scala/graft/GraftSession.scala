@@ -16,6 +16,13 @@ import org.apache.spark.sql.SparkSession
   *    to 10 s stats) each run in their own pool so a long stats
   *    micro-batch cannot starve the results cadence — single-query
   *    batch work is unaffected (one pool, FIFO within it)
+  *  - `file:` through [[graft.sources.GraftLocalFileSystem]] and
+  *    [[graft.sources.GraftLocalFs]] (FileContext): the stock local FS
+  *    spawns a `chmod`/`readlink` process per create, mkdirs and
+  *    checkpoint rename when libhadoop is absent
+  *  - 20 retained SQL executions (default 1000): nothing reads them
+  *    with the UI off, and a long streaming session would keep every
+  *    micro-batch's plan on the heap
   */
 object GraftSession {
   def builder(cores: Int): SparkSession.Builder =
@@ -28,6 +35,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.GraftLocalFs].getName)
 
   /** Run `start` with the thread-local scheduler pool set, so the
     * streaming query it launches lands its micro-batch jobs in `pool`

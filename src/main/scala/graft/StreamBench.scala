@@ -234,9 +234,10 @@ object StreamBench {
       rowsIn, rowsMatched, sustained)
   }
 
+  /** `graft.StreamBench [rate lines/s] [seconds]`, defaults 20000 and 45. */
   def main(args: Array[String]): Unit = {
-    val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "20000").toLong
-    val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "45").toInt
+    val rate = args.lift(0).fold(20000L)(_.toLong)
+    val secs = args.lift(1).fold(45)(_.toInt)
     val spark = GraftSession.builder(GraftSession.defaultCores)
       .appName("graft-streambench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -718,7 +718,8 @@ class StreamingSpec extends SparkSpec {
     (1 to 4).foreach(i => canary.read(s"warm $i"))
     val r = StreamBench.run(spark, ratePerSec = 5000L, runtimeSec = 20)
     val after = canary.read("after stream")
-    info(f"canary ${after.sec}%.3f s vs floor ${after.floor}%.3f s " +
+    info(f"results p95 ${r.resultsP95}%.3f s over ${r.resultsBatches} triggers; " +
+      f"canary ${after.sec}%.3f s vs floor ${after.floor}%.3f s " +
       f"(ratio ${after.sec / after.floor}%.2f)")
     assert(r.resultsBatches >= 5,
       s"too few result triggers fired to judge cadence: $r")
