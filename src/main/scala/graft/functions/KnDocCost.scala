@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   * explode→3-broadcast-joins→per-doc-aggregate chain (the
   * [[LmDocCost]] shape applied to the bigram model): one sweep over
   * the document's token array, O(1) hash lookups per bigram, integer
-  * accumulation — no row expansion, no join, no shuffle.
+  * accumulation — no row expansion, no join, no shuffle. It is also
+  * the score inside [[graft.streaming.StreamPretrain]]'s KN gate
+  * (`knKeep`, one boolean Column in the ingest's gate filter, the
+  * per-lang threshold a map-literal lookup).
   *
   * Child is the token array (`tokens(lower(text))` — tokenization
   * stays in the shared compiled expression, so token boundaries are

@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Number of elements of a string array present in a FROZEN set —
-  * the compiled single-pass face of the decon gate's former
-  * explode→broadcast-join→groupBy-count chain
-  * ([[graft.streaming.StreamPretrain]]'s deconKeep): one sweep over
-  * the array, an O(1) hash probe per element, no row expansion, no
-  * join, no shuffle. NULL elements never match.
+  * the compiled single-pass core of [[graft.streaming.StreamPretrain]]'s
+  * decontamination gate (`deconKeep`, one boolean Column in the
+  * ingest's gate filter): one sweep over the array, an O(1) hash
+  * probe per element, no row expansion, no join, no shuffle. NULL
+  * elements never match.
   *
   * The set rides in the expression (the frozen benchmark gram set is
   * capped at 2^20 entries — the same bound that let the join path

@@ -258,7 +258,8 @@ object LangModel {
     * parity). Because it is one projection with no join or
     * aggregation, a caller can compute it BESIDE other per-row
     * columns (lang, source) in a single scan — the
-    * [[graft.streaming.StreamPretrain]] gate shape. */
+    * [[graft.streaming.StreamPretrain]] KN gate is this struct against
+    * a per-lang threshold, one conjunct of the ingest's gate filter. */
   def knDocCostStruct(textCol: Column,
       costs: (Map[(String, String), Long], Map[String, Long],
         Map[String, Long], Long)): Column = {
@@ -271,9 +272,8 @@ object LangModel {
   }
 
   /** [[knScore]] under FROZEN cost tables (the [[knCollectCosts]]
-    * tuple): fit once on the reference slice, score any batch — the
-    * streaming-gate face ([[graft.streaming.StreamPretrain]]), same
-    * split as [[lmScoreCompiled]]'s literal costs.
+    * tuple): fit once on the reference slice, score any batch, the
+    * same split as [[lmScoreCompiled]]'s literal costs.
     *
     * (r17) Computed by the compiled per-row path ([[knDocCostStruct]]
     * — the [[lmScoreCompiled]] shape applied to the bigram model):

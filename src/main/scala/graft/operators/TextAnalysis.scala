@@ -78,41 +78,67 @@ object TextAnalysis {
       maxEllipsisPpm: Long = 300000, minAlphaPpm: Long = 800000,
       stopWords: Seq[String] = GopherStopWords,
       minStopHits: Long = 2): DataFrame = {
-    val t = col(textCol)
+    val (metrics, keep) = gopher(col(textCol), stopWords, minWords,
+      maxWords, minMeanLen, maxMeanLen, maxSymbolPpm, maxBulletPpm,
+      maxEllipsisPpm, minAlphaPpm, minStopHits)
+    df.select(col(idCol) +: metrics: _*).withColumn("keep", keep(col))
+  }
+
+  /** [[gopherRules]]' `keep` verdict at the default thresholds as ONE
+    * per-row boolean Column, for a filter or a conditional count. The
+    * metrics are bound once through a single-element array (the
+    * verdict reads `n_words` five times; inlined, each read would
+    * re-split the text). */
+  def gopherKeep(text: Column,
+      stopWords: Seq[String] = GopherStopWords): Column = {
+    val (metrics, keep) = gopher(text, stopWords)
+    element_at(transform(array(struct(metrics: _*)),
+      m => keep(m.getField)), 1)
+  }
+
+  /** The Gopher metrics over `t` (named columns) and the keep verdict
+    * over them, given a by-name metric lookup — the one definition
+    * behind [[gopherRules]] and [[gopherKeep]]. */
+  private def gopher(t: Column, stopWords: Seq[String],
+      minWords: Long = 50, maxWords: Long = 100000,
+      minMeanLen: Long = 3, maxMeanLen: Long = 10,
+      maxSymbolPpm: Long = 100000, maxBulletPpm: Long = 100000,
+      maxEllipsisPpm: Long = 300000, minAlphaPpm: Long = 800000,
+      minStopHits: Long = 2): (Seq[Column], (String => Column) => Column) = {
     val ws = filter(split(t, "\\s+"), w => length(w) > 0)
     val ls = split(t, "\n")
     val lws = transform(ws, w => lower(w))
     val stopArr = array(stopWords.map(lit): _*)
-    df.select(
-        col(idCol),
-        size(ws).cast("long").as("n_words"),
-        coalesce(aggregate(ws, lit(0L), (acc, w) => acc + length(w)),
-          lit(0L)).as("word_chars"),
-        ((length(t) - length(replace(t, lit("#"), lit("")))) +
-          (length(t) - length(replace(t, lit("..."), lit("")))) / 3)
-          .cast("long").as("n_symbols"),
-        size(ls).cast("long").as("n_lines"),
-        size(filter(ls, l => trim(l).like("- %") || trim(l).like("* %") ||
-          trim(l).like("• %"))).cast("long").as("n_bullet"),
-        size(filter(ls, l => trim(l).like("%...")))
-          .cast("long").as("n_ellipsis"),
-        size(filter(ws, w => w.rlike("[A-Za-z]")))
-          .cast("long").as("n_alpha"),
-        size(filter(stopArr, s => exists(lws, w => w === s)))
-          .cast("long").as("n_stop"))
-      .withColumn("keep",
-        col("n_words").between(minWords, maxWords) &&
-          col("word_chars") >= lit(minMeanLen) * col("n_words") &&
-          col("word_chars") <= lit(maxMeanLen) * col("n_words") &&
-          col("n_symbols") * lit(1000000L) <=
-            lit(maxSymbolPpm) * col("n_words") &&
-          col("n_bullet") * lit(1000000L) <=
-            lit(maxBulletPpm) * col("n_lines") &&
-          col("n_ellipsis") * lit(1000000L) <=
-            lit(maxEllipsisPpm) * col("n_lines") &&
-          col("n_alpha") * lit(1000000L) >=
-            lit(minAlphaPpm) * col("n_words") &&
-          col("n_stop") >= minStopHits)
+    val metrics = Seq(
+      size(ws).cast("long").as("n_words"),
+      coalesce(aggregate(ws, lit(0L), (acc, w) => acc + length(w)),
+        lit(0L)).as("word_chars"),
+      ((length(t) - length(replace(t, lit("#"), lit("")))) +
+        (length(t) - length(replace(t, lit("..."), lit("")))) / 3)
+        .cast("long").as("n_symbols"),
+      size(ls).cast("long").as("n_lines"),
+      size(filter(ls, l => trim(l).like("- %") || trim(l).like("* %") ||
+        trim(l).like("• %"))).cast("long").as("n_bullet"),
+      size(filter(ls, l => trim(l).like("%...")))
+        .cast("long").as("n_ellipsis"),
+      size(filter(ws, w => w.rlike("[A-Za-z]")))
+        .cast("long").as("n_alpha"),
+      size(filter(stopArr, s => exists(lws, w => w === s)))
+        .cast("long").as("n_stop"))
+    def keep(m: String => Column): Column =
+      m("n_words").between(minWords, maxWords) &&
+        m("word_chars") >= lit(minMeanLen) * m("n_words") &&
+        m("word_chars") <= lit(maxMeanLen) * m("n_words") &&
+        m("n_symbols") * lit(1000000L) <=
+          lit(maxSymbolPpm) * m("n_words") &&
+        m("n_bullet") * lit(1000000L) <=
+          lit(maxBulletPpm) * m("n_lines") &&
+        m("n_ellipsis") * lit(1000000L) <=
+          lit(maxEllipsisPpm) * m("n_lines") &&
+        m("n_alpha") * lit(1000000L) >=
+          lit(minAlphaPpm) * m("n_words") &&
+        m("n_stop") >= minStopHits
+    (metrics, keep)
   }
 
   /** Corpus-wide heavy-hitter tokens: exact frequencies, top-k with a

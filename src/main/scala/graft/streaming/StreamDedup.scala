@@ -565,7 +565,7 @@ object StreamDedup {
     * a duplicate-free corpus. File-based: an existing but emptied
     * directory counts as no labels. */
   def labelsExist(spark: SparkSession, root: String): Boolean =
-    StreamState.listDataFiles(spark, labelsPath(root)).nonEmpty
+    StreamState.hasDataFiles(spark, labelsPath(root))
 
   /** The subset of `ids` currently labeled NON-canonical (an
     * earlier-id near-dup exists), read with partition pruning on the

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.TextFunctions
 import graft.ml.LinearQuality
 import graft.operators.{Bpe, Curate, Decontaminate, Dedup, LangModel, Scale, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -151,45 +151,24 @@ object StreamPretrain {
               deconN, deconMinShared)
           }))
         val m = mRef.get; val costs = costsRef.get; val dec = decRef.get
-        val gk = TextAnalysis.gopherRules(corpus, idCol, textCol,
-          stopWords = stopWords).filter(col("keep")).select(idCol)
-        val lk = LinearQuality.score(corpus, idCol, textCol, m)
-          .filter(col("keep")).select(idCol)
-        val dk = Dedup.exactKeepFirst(corpus, idCol, textCol).select(idCol)
         // the per-lang thresholds freeze over the corpus that survives
-        // the OTHER gates — including the decon gate when one is
-        // configured. KN scoring (the chain's most expensive frame)
-        // runs over the SURVIVORS of the cheap gates, not the whole
-        // corpus: the inner joins below intersect anyway, and the
-        // score is per-document, so the surviving
-        // (id, lang, mean_nll_micro) rows are identical (guide §2.3 —
-        // don't compute what you throw away). (r17) The score and the
-        // lang ride ONE projection ([[LangModel.knDocCostStruct]] —
-        // the compiled per-row scorer), so the gate chain under it
-        // evaluates once, not twice (the former form re-ran it for
-        // the id→lang join-back side).
-        val surv = corpus.join(gk, idCol).join(lk, idCol).join(dk, idCol)
-        val scored0 = surv
-          .select(col(idCol), col(langCol),
+        // the keep-first dedup and the OTHER gates ([[cheapGates]], the
+        // Columns [[ingestBatch]] applies). KN scoring (the chain's
+        // most expensive column) runs only over those survivors
+        // (guide §2.3 — don't compute what you throw away).
+        val scored = Dedup.exactKeepFirst(corpus, idCol, textCol)
+          .filter(cheapGates(col(textCol), stopWords, m, dec)
+            .map(_._2).reduce(_ && _))
+          .select(col(langCol),
             LangModel.knDocCostStruct(col(textCol), costs).as("_st"))
           .filter(col("_st").isNotNull)
-          .select(col(idCol), col(langCol),
-            col("_st.n_big").as("n_big"),
-            col("_st.nll_micro").as("nll_micro"))
-          .withColumn("mean_nll_micro", expr("nll_micro div n_big"))
-          .select(col(idCol), col(langCol), col("mean_nll_micro"))
-        val scored = dec match {
-          case None => scored0
-          case Some(d) =>
-            scored0.join(deconKeep(corpus, idCol, textCol, d), Seq(idCol),
-              "left_semi")
-        }
+          .select(col(langCol), knMean(col("_st")).as("mean_nll_micro"))
         // the head threshold IS the frozen value: t1 is an attained
         // score (see [[Curate.perplexityThresholds]]), so
         // max(score | bucket = head) = t1 — reading the threshold
         // relation directly skips perplexityBuckets' join-back, which
-        // evaluated the whole `scored` chain (four gate scans + the
-        // KN frame) a second time inside one action
+        // evaluated the whole `scored` chain a second time inside one
+        // action
         t1Ref.set(Curate.perplexityThresholds(scored, langCol,
             "mean_nll_micro")
           .select(col(langCol), col("_t1"))
@@ -272,33 +251,73 @@ object StreamPretrain {
       meta.getSeq[String](meta.fieldIndex("stop_words")), dec)
   }
 
-  /** Ids of `df` NOT contaminated under the frozen gate: count each
-    * document's distinct `n`-grams against the frozen benchmark gram
-    * set in ONE compiled pass ([[graft.functions.SetHitCount]] over
-    * [[Decontaminate.ngramSet]]'s distinct grams — an O(1) hash probe
-    * per gram), and drop documents with `minShared`+ hits. (r17) The
-    * former chain exploded every document's grams, pushed them
-    * through a broadcast join, counted in a hash aggregate (one
-    * corpus exchange on the id) and anti-joined the ids back; per
-    * UNIQUE id the hit count is identical (ngramSet emits distinct
-    * grams), so the kept set is unchanged — a null or sub-`n`-token
-    * document has zero hits and stays kept, exactly as it was never
-    * flagged before. */
-  private[graft] def deconKeep(df: DataFrame, idCol: String,
-      textCol: String, d: Decon): DataFrame = {
+  // ---- the frozen per-document gates, each ONE boolean Column ------
+  //
+  // A gate is a per-row predicate over the document's own columns, so
+  // every consumer — [[fit]]'s threshold corpus, [[ingestBatch]]'s
+  // kept chain and its gate accounting — applies the same Column: a
+  // filter conjunction (FilterExec stops at the first failing
+  // conjunct, so list cheap gates first) or a conditional count. No
+  // gate is an id relation re-joined on the document id.
+
+  /** The learned quality gate: [[LinearQuality.scoreColumn]] above the
+    * half-scale decision boundary ([[LinearQuality.score]]'s `keep`). */
+  private def qualityKeep(text: Column, m: LinearQuality.Model): Column =
+    LinearQuality.scoreColumn(text, m) * 2 > m.scale
+
+  /** The decontamination gate: a document is kept unless it shares
+    * `minShared`+ distinct `n`-grams with the frozen benchmark gram
+    * set, counted in ONE compiled pass ([[graft.functions.SetHitCount]]
+    * over [[Decontaminate.ngramSet]]'s distinct grams — an O(1) hash
+    * probe per gram). A null or sub-`n`-token document has zero hits
+    * and stays kept. */
+  private def deconKeep(text: Column, d: Decon): Column = {
     import org.apache.spark.sql.GraftExprBridge
     val hits = GraftExprBridge.column(graft.functions.SetHitCount(
-      GraftExprBridge.expression(
-        Decontaminate.ngramSet(col(textCol), d.n)),
+      GraftExprBridge.expression(Decontaminate.ngramSet(text, d.n)),
       d.grams))
-    df.filter(coalesce(hits, lit(0L)) < d.minShared).select(col(idCol))
+    coalesce(hits, lit(0L)) < d.minShared
   }
 
-  /** Run one micro-batch through the whole chain: gates → ledger →
-    * encode → manifest row. One scan for the three gates (all three
-    * compiled projections — the KN gate rides
-    * [[LangModel.knDocCostStruct]]), one anti-join against the
-    * fingerprint ledger, one encode projection over the survivors. */
+  /** Integer mean bigram cost of a [[LangModel.knDocCostStruct]]
+    * struct (`nll_micro div n_big`, the [[LangModel.knScoreWith]]
+    * score). */
+  private def knMean(st: Column): Column =
+    call_function("div", st("nll_micro"), st("n_big"))
+
+  /** The KN perplexity gate: the document's mean cost at or under its
+    * language's frozen head threshold, looked up in a map literal.
+    * NULL — so dropped by a filter and uncounted — for an unseen
+    * language or a sub-2-token document. The cost struct is bound once
+    * through a single-element array (the mean reads it twice). */
+  private def knKeep(text: Column, lang: Column, fz: Frozen): Column = {
+    val t1 = element_at(typedLit(fz.langT1), lang)
+    element_at(transform(array(LangModel.knDocCostStruct(text, fz.knCosts)),
+      st => knMean(st) <= t1), 1)
+  }
+
+  /** The gates [[fit]] freezes the KN thresholds behind, as
+    * (accounting column, gate), cheap first: Gopher, quality,
+    * decontamination (when configured). */
+  private def cheapGates(text: Column, stopWords: Seq[String],
+      m: LinearQuality.Model, decon: Option[Decon]): Seq[(String, Column)] =
+    Seq("n_gopher" -> TextAnalysis.gopherKeep(text, stopWords),
+      "n_quality" -> qualityKeep(text, m)) ++
+      decon.map(d => "n_decon" -> deconKeep(text, d))
+
+  /** Every frozen gate, cheap to expensive: [[cheapGates]], then KN. */
+  private def gates(fz: Frozen, text: Column,
+      lang: Column): Seq[(String, Column)] =
+    cheapGates(text, fz.stopWords, fz.quality, fz.decon) :+
+      ("n_kn" -> knKeep(text, lang, fz))
+
+  /** Run one micro-batch through the whole chain: ledger → gates →
+    * encode → manifest row. One anti-join against the fingerprint
+    * ledger, ONE filter over its survivors for every frozen gate
+    * ([[gates]], cheap first, so KN scores only what passed the
+    * others), one encode projection over the survivors. `recordStats`
+    * only decides whether the per-batch accounting row is written.
+    * PRECONDITION: `idCol` is unique within the batch. */
   def ingestBatch(batch: DataFrame, idCol: String, textCol: String,
       langCol: String, sourceCol: String, fz: Frozen, root: String,
       batchId: Long, recordStats: Boolean = false,
@@ -306,12 +325,10 @@ object StreamPretrain {
       semDup: Option[SemGate] = None): Unit =
     BatchTimer.timed("pretrain.ingest") {
     val spark = batch.sparkSession
-    import spark.implicits._
     // The incoming micro-batch is scanned by EVERY consumer below —
-    // the near/sem index upserts, each stateless gate, the
-    // fingerprint window, the opt-in stats counts — up to ~8 full
-    // re-evaluations per batch, and nothing guarantees the caller
-    // hands us a cheap scan (q_stream_pretrain_sem's batch is a
+    // the near/sem index upserts, the fingerprint window, the opt-in
+    // stats counts — and nothing guarantees the caller hands us a
+    // cheap scan (q_stream_pretrain_sem's batch is a
     // docs⋈embeddings JOIN that re-ran per gate; measured 5.7 s
     // bpe.encode vs 1.6 s on the plain-scan twin). Persist it for
     // the batch's lifetime (batch-sized, MEMORY_AND_DISK — never a
@@ -321,7 +338,7 @@ object StreamPretrain {
     try {
     val batch = batchP // shadow: every read below rides the persist
     // (r16) The index upserts and the gate chain OVERLAP: the
-    // stateless gate frames are defined first (they read only the
+    // stateless gate chain is defined first (it reads only the
     // persisted batch and pre-batch ledger state — nothing the
     // upserts write), `kept1` persists and a third driver thread
     // materializes it while the upserts run, so the per-batch wall
@@ -331,42 +348,12 @@ object StreamPretrain {
     // settles, exactly as before.
     val semRefusedRef =
       new java.util.concurrent.atomic.AtomicReference[DataFrame]
-    // stateless gates
-    val gop = TextAnalysis.gopherRules(batch, idCol, textCol,
-      stopWords = fz.stopWords).filter(col("keep")).select(idCol)
-    val lks = batch
-      .filter(LinearQuality.scoreColumn(col(textCol), fz.quality) * 2 >
-        fz.quality.scale)
-      .select(idCol)
-    val t1Df = broadcast(fz.langT1.toSeq.toDF(langCol, "_t1"))
-    // The KN gate is the chain's most expensive frame (it reads every
-    // surviving byte of text), and its keep decision is PER-DOCUMENT —
-    // a semi-join only ever consults membership, so the gate may be
-    // evaluated over any superset of the rows whose membership is
-    // consulted. When the per-gate counts are off (the normal ingest
-    // path), score only the documents that already survived the
-    // ledger and the two cheap gates instead of the whole batch
-    // (guide §2.3: don't compute what you throw away); the composed
-    // `kept` set is identical because semi-join intersection
-    // commutes. recordStats keeps the full-batch form: the accounting
-    // contract is each gate's INDIVIDUAL pass count over the whole
-    // batch. (r17) The score is the compiled per-row scorer
-    // ([[LangModel.knDocCostStruct]] — no explode, no joins, no
-    // per-doc aggregate), so the score and the lang ride ONE
-    // projection over src: the former knScoreWith + id→lang join-back
-    // evaluated the src chain twice per materialization.
-    def knKeepOf(src: DataFrame): DataFrame =
-      src.select(col(idCol), col(langCol),
-          LangModel.knDocCostStruct(col(textCol), fz.knCosts).as("_st"))
-        .filter(col("_st").isNotNull)
-        .join(t1Df, langCol)
-        .filter(expr("_st.nll_micro div _st.n_big") <= col("_t1"))
-        .select(idCol)
+    val gs = gates(fz, col(textCol), col(langCol))
     // keep-first ledger over ALL arrivals (gate-independent, so a
     // gated-out first copy still blocks its later duplicates — the
     // batch exactKeepFirst semantics), first-per-fp within the batch
     val wFp = Window.partitionBy("_fp").orderBy(col(idCol))
-    // persist marked HERE, before kept0a/kept1 nest it (r17): the
+    // persist marked HERE, before kept1 nests it (r17): the
     // kept1 materialization on the overlap thread below is the first
     // action over this frame, and the mark must precede it so that
     // run populates the cache the ledger append reads — marked after
@@ -378,33 +365,8 @@ object StreamPretrain {
       .filter(col("_rn") === 1).drop("_rn")
       .join(readLedger(spark, root), Seq("_fp"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept0a = freshAllP
-      .join(gop, Seq(idCol), "left_semi")
-      .join(lks, Seq(idCol), "left_semi")
-    val knk = if (recordStats) knKeepOf(batch) else knKeepOf(kept0a)
-    val kept0 = kept0a.join(knk, Seq(idCol), "left_semi")
-    // the frozen decontamination gate (when configured): stateless and
-    // deterministic like the others, so redelivery replays it exactly.
-    // Same reduced-input rule as the KN gate: the decision is
-    // per-document, so without recordStats it only scans the
-    // cheap-gate survivors (kept0a, NOT kept0 — kept0 nests the KN
-    // frame, and feeding it back in would re-evaluate KN once per
-    // appearance inside the one `kept` materialization).
-    val dkp =
-      if (recordStats) fz.decon.map(d => deconKeep(batch, idCol, textCol, d))
-      else fz.decon.map(d => deconKeep(kept0a, idCol, textCol, d))
-    val kept1 = dkp.fold(kept0)(k =>
-      kept0.join(k, Seq(idCol), "left_semi"))
-    // With recordStats every gate frame is consumed twice — once in
-    // the kept chain's semi-joins, once by its count job — so the
-    // id-only gate relations persist for the batch's lifetime (the
-    // near pre-filter's joins later). Marked BEFORE anything forces
-    // the chain, so whichever action materializes first populates
-    // the cache the counts read.
-    val statsPersistsA: Seq[DataFrame] =
-      if (!recordStats) Nil
-      else (Seq(gop, lks, knk) ++ dkp).map(_.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // every frozen gate in one conjunction over the fresh arrivals
+    val kept1 = freshAllP.filter(gs.map(_._2).reduce(_ && _))
     // kept1 persists whenever an index upsert runs beside it: the
     // third thread below materializes it (count() over the marked
     // plan populates the cache) while the upserts work, and every
@@ -512,13 +474,6 @@ object StreamPretrain {
     // freshAll's own persist is marked at its definition above.
     val kept = mixGate.fold(kept2)(g => g(kept2))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the near pre-filter is consumed twice under recordStats too
-    // (kept chain + its count job) — persist it beside the
-    // statsPersistsA gate relations marked above
-    val statsPersists: Seq[DataFrame] =
-      statsPersistsA ++ (if (!recordStats) Nil
-      else nkp.map(_.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     try {
     // encode + manifest BEFORE the ledger append (see header). The
     // two target DISJOINT roots and neither reads the other, so they
@@ -549,30 +504,32 @@ object StreamPretrain {
     // because every count can only shrink on a replay.
     if (recordStats) {
       import batch.sparkSession.implicits._
-      // ten independent read-only count jobs over persisted relations
-      // — run them concurrently (guide §2.6: each job's straggler
-      // tail back-fills the next one's ramp) instead of serially;
-      // results land in fixed slots so the row's column order is
-      // unchanged. batch.count() is evaluated once (it used to run
-      // twice: n_in and the n_sem subtraction).
-      val slots = new Array[java.lang.Long](10)
+      // n_in and every frozen gate's pass count are ONE aggregate over
+      // the batch (the same gate Columns the kept chain filters by);
+      // the other counts read index state or composed frames. The
+      // independent read-only jobs run concurrently (guide §2.6: each
+      // job's straggler tail back-fills the next one's ramp); results
+      // land in fixed slots so the row's column order is unchanged.
+      val gateRow = new java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.sql.Row]
+      val slots = new Array[java.lang.Long](5)
       def slot(i: Int)(f: => Long): () => Unit = () => slots(i) = f
       StreamState.inParallel((Seq(
-        slot(0)(batch.count()), slot(1)(freshAllP.count()),
-        slot(2)(gop.count()), slot(3)(lks.count()),
-        slot(4)(knk.count())) ++
-        dkp.map(d => slot(5)(d.count())) ++
-        nkp.map(k => slot(6)(k.count())) ++
-        semRefused.map(r => slot(7)(r.count())) ++
-        mixGate.map(g => slot(8)(g(batch).count())) ++
-        Seq(slot(9)(kept.count()))): _*)
-      val nIn: Long = slots(0)
-      Seq((batchId, nIn, slots(1): Long, slots(2): Long,
-          slots(3): Long, slots(4): Long,
-          Option(slots(5)).map(_.toLong),
-          Option(slots(6)).map(_.toLong),
-          Option(slots(7)).map(nIn - _.toLong),
-          Option(slots(8)).map(_.toLong), slots(9): Long))
+        () => gateRow.set(batch.agg(count(lit(1)).as("n_in"),
+          gs.map { case (n, g) => count(when(g, 1)).as(n) }: _*).head()),
+        slot(0)(freshAllP.count())) ++
+        nkp.map(k => slot(1)(k.count())) ++
+        semRefused.map(r => slot(2)(r.count())) ++
+        mixGate.map(g => slot(3)(g(batch).count())) ++
+        Seq(slot(4)(kept.count()))): _*)
+      val gr = gateRow.get
+      def n(c: String): Long = gr.getLong(gr.fieldIndex(c))
+      val nIn = n("n_in")
+      Seq((batchId, nIn, slots(0): Long, n("n_gopher"), n("n_quality"),
+          n("n_kn"), fz.decon.map(_ => n("n_decon")),
+          Option(slots(1)).map(_.toLong),
+          Option(slots(2)).map(nIn - _.toLong),
+          Option(slots(3)).map(_.toLong), slots(4): Long))
         .toDF("batch_id", "n_in", "n_fresh", "n_gopher", "n_quality",
           "n_kn", "n_decon", "n_near", "n_sem", "n_mix", "n_kept")
         .repartition(1)
@@ -588,7 +545,6 @@ object StreamPretrain {
       kept.unpersist(false)
       freshAllP.unpersist(false)
       kept1P.foreach(_.unpersist(false))
-      statsPersists.foreach(_.unpersist(false))
     }
     // the semantic delta's checkpoint blocks release once the batch's
     // last consumer (encode/kept/stats above) has run

@@ -76,14 +76,8 @@ object StreamSemDedup {
     * the probe joins. Micro-batches are orders of magnitude below it
     * in any sane trigger; it exists so a pathological batch degrades
     * to the shuffle join instead of failing at the broadcast /
-    * driver-memory limit. At dim-64 vectors 1M rows ≈ 0.6 GB.
-    * Env-tunable for clusters with bigger drivers. */
-  private val broadcastMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_SEM_BCAST_MAX_ROWS").map(_.toLong)
-      .getOrElse(1L << 20)
-
-  private def hasData(spark: SparkSession, path: String): Boolean =
-    StreamState.listDataFiles(spark, path).nonEmpty
+    * driver-memory limit. At dim-64 vectors 1M rows ≈ 0.6 GB. */
+  private val broadcastMaxRows: Long = 1L << 20
 
   /** The batch as (id, v, nrm, cl) under the frozen assignment — ONE
     * projection, no join: the old form joined the batch against its

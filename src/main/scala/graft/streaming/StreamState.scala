@@ -39,14 +39,31 @@ private[graft] object StreamState {
     val out = Seq.newBuilder[String]
     def walk(p: org.apache.hadoop.fs.Path): Unit =
       hfs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
+        if (!hidden(st)) {
           if (st.isDirectory) walk(st.getPath)
           else out += st.getPath.toString
         }
       }
     walk(rootPath)
     out.result()
+  }
+
+  /** Whether `root` holds any data file under [[listDataFiles]]' skip
+    * rules — the same answer as `listDataFiles(..).nonEmpty`, but the
+    * walk returns at the first data file instead of listing the tree. */
+  def hasDataFiles(spark: SparkSession, root: String): Boolean = {
+    val hfs = fs(spark, root)
+    def any(p: org.apache.hadoop.fs.Path): Boolean =
+      hfs.listStatus(p).exists(st =>
+        !hidden(st) && (!st.isDirectory || any(st.getPath)))
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    hfs.exists(rootPath) && any(rootPath)
+  }
+
+  // metadata sidecars and in-flight temp files are never data
+  private def hidden(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val name = st.getPath.getName
+    name.startsWith("_") || name.startsWith(".")
   }
 
   /** Drop the executor blocks behind an eagerly `localCheckpoint`ed
@@ -144,7 +161,7 @@ private[graft] object StreamState {
   // schema inference) or plain upserts into the require-batchId
   // branch. A log "exists" iff it has committed rows to read.
   def genLogExists(spark: SparkSession, root: String): Boolean =
-    listDataFiles(spark, genLogPath(root)).nonEmpty
+    hasDataFiles(spark, genLogPath(root))
 
   // Tombstone-presence marker (r17): `_docs/_has_tombstones`, an
   // empty underscore-prefixed sidecar (parquet scans and snapshots

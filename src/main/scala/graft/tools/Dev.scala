@@ -1,10 +1,13 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.model.FilterDef
 import graft.operators.Scale
 import graft.sources.Tables
+import graft.streaming.LogPipeline
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Developer tools behind one main:
   *
@@ -13,13 +16,14 @@ import org.apache.spark.sql.functions._
   * runMain graft.tools.Dev plans [sfDir] [query ...]     # formatted physical plans
   * runMain graft.tools.Dev entry-smoke                   # SparkEntry.entry on a vanilla session
   * runMain graft.tools.Dev scale-demo [sfDir]            # salted agg + bucketed join check
+  * runMain graft.tools.Dev stream-demo <sfDir> <workDir>  # file-source stream → results + stats
   * }}}
   */
 object Dev {
   private val Fixtures = "/root/testdata"
   private val usage =
     "usage: Dev probe <query> [sfDir] [runs] | plans [sfDir] [query ...] | " +
-      "entry-smoke | scale-demo [sfDir]"
+      "entry-smoke | scale-demo [sfDir] | stream-demo <sfDir> <workDir>"
 
   def main(args: Array[String]): Unit = args.toList match {
     case "probe" :: name :: rest =>
@@ -40,6 +44,8 @@ object Dev {
     case "scale-demo" :: rest =>
       withSession("scale-demo")(scaleDemo(_,
         rest.headOption.getOrElse(s"$Fixtures/sf0.01")))
+    case "stream-demo" :: sfDir :: workDir :: Nil =>
+      withSession("stream-demo")(streamDemo(_, sfDir, workDir))
     case _ => sys.error(usage)
   }
 
@@ -107,5 +113,44 @@ object Dev {
       .split("Exchange").length - 1
     println(s"BUCKETED_JOIN_EXCHANGES=$exchanges rows=${joined.count()}")
     spark.sql("DROP TABLE sd_orders"); spark.sql("DROP TABLE sd_lineitem")
+  }
+
+  /** The streaming ingest end to end on finite input: fixture
+    * documents → text-file "log" → file-source stream → parse →
+    * fan-out → {parquet results sink partitioned by (filter_id,
+    * date), windowed stats}, driven to completion; prints a summary
+    * line. */
+  private def streamDemo(spark: SparkSession, sfDir: String,
+      workDir: String): Unit = {
+    // stage fixture docs as timestamped syslog-ish lines
+    val linesDir = s"$workDir/lines"
+    Tables.load(spark, sfDir, "documents")
+      .select(concat(
+        lit("2025-07-20T11:"),
+        lpad((col("doc_id") % 60).cast("string"), 2, "0"),
+        lit(":00.000+00:00 host"), (col("doc_id") % 4).cast("string"),
+        lit(" app: "), col("text")).as("value"))
+      .coalesce(1).write.mode("overwrite").text(linesDir)
+    val filters = Seq(
+      FilterDef("f_spark", "spark", "spark"),
+      FilterDef("f_joinmerge", "join_or_merge", "(join|merge)"),
+      FilterDef("f_ci", "query_ci", "(?i)QUERY"))
+    val stream = spark.readStream.schema("value STRING").text(linesDir)
+    val matched =
+      LogPipeline.matches(LogPipeline.parse(stream, "value"), filters)
+    val results = LogPipeline.resultsQuery(matched,
+      s"$workDir/results", s"$workDir/ckpt_results",
+      Trigger.ProcessingTime("1 second"))
+    val stats = LogPipeline.statsQuery(matched, "demo_stats",
+      stepSec = 60, Trigger.ProcessingTime("1 second"))
+    results.processAllAvailable()
+    stats.processAllAvailable()
+    results.stop(); stats.stop()
+    val written = spark.read.parquet(s"$workDir/results")
+    val perFilter = written.groupBy("filter_id").count()
+      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(",")
+    val statRows = spark.table("demo_stats").count()
+    val partitions = written.select("filter_id", "date").distinct().count()
+    println(s"STREAM_DEMO results_per_filter{$perFilter} stats_rows=$statRows partitions=$partitions")
   }
 }

@@ -210,6 +210,29 @@ class StreamCompactionSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq == Seq(1L))
   }
 
+  test("existence probe: a marker-only _docs reads false, one data file in the last bucket reads true") {
+    import org.apache.hadoop.fs.Path
+    val root = tmp("probe")
+    assert(!StreamState.hasDataFiles(spark, root), "a missing root")
+    // a generation log whose marker sidecar landed before any parquet
+    val log = StreamState.genLogPath(root)
+    hfs.create(new Path(log, "_has_tombstones")).close()
+    assert(!StreamState.genLogExists(spark, root))
+    // the label table's bucket layout: every pl= directory present,
+    // only metadata and in-flight files until the last bucket's data
+    val labels = s"$root/labels"
+    (0 until 64).foreach(b => hfs.mkdirs(new Path(s"$labels/pl=$b")))
+    hfs.create(new Path(labels, "_SUCCESS")).close()
+    hfs.create(new Path(s"$labels/pl=3", ".part-0.parquet.inprogress")).close()
+    assert(!graft.streaming.StreamDedup.labelsExist(spark, root))
+    assert(StreamState.listDataFiles(spark, labels).isEmpty)
+    hfs.create(new Path(s"$labels/pl=63", "part-0.parquet")).close()
+    assert(graft.streaming.StreamDedup.labelsExist(spark, root))
+    assert(StreamState.listDataFiles(spark, labels).nonEmpty)
+    hfs.create(new Path(log, "part-0.parquet")).close()
+    assert(StreamState.genLogExists(spark, root))
+  }
+
   test("text index: deletes tombstone, resurrect, and physically retire at compaction") {
     val root = tmp("sci-idx-del")
     StreamTextIndex.upsertBatch(docs, "doc_id", "text", root, 0L)

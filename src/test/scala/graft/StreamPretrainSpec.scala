@@ -29,14 +29,19 @@ class StreamPretrainSpec extends SparkSpec {
     val lk = LinearQuality.score(corpus, "doc_id", "text", fz.quality)
       .filter(col("keep")).select("doc_id")
     val dk = Dedup.exactKeepFirst(corpus, "doc_id", "text").select("doc_id")
-    val t1Df = broadcast(fz.langT1.toSeq.toDF("lang", "_t1"))
-    val kk = LangModel.knScoreWith(corpus, "doc_id", "text", fz.knCosts)
-      .join(corpus.select("doc_id", "lang"), "doc_id")
-      .join(t1Df, "lang")
-      .filter(col("mean_nll_micro") <= col("_t1")).select("doc_id")
     corpus.join(gk, "doc_id").join(lk, "doc_id")
-      .join(dk, "doc_id").join(kk, "doc_id")
+      .join(dk, "doc_id").join(knKeepIds(corpus, fz), "doc_id")
   }
+
+  // the KN gate's batch-side reference: scored documents at or under
+  // their language's frozen threshold (an unseen language or a
+  // sub-2-token document has no row to join)
+  private def knKeepIds(corpus: org.apache.spark.sql.DataFrame,
+      fz: StreamPretrain.Frozen): org.apache.spark.sql.DataFrame =
+    LangModel.knScoreWith(corpus, "doc_id", "text", fz.knCosts)
+      .join(corpus.select("doc_id", "lang"), "doc_id")
+      .join(broadcast(fz.langT1.toSeq.toDF("lang", "_t1")), "lang")
+      .filter(col("mean_nll_micro") <= col("_t1")).select("doc_id")
 
   test("ordered splits + retry converge to the batch composition, manifest exact") {
     val root = tmp()
@@ -68,6 +73,74 @@ class StreamPretrainSpec extends SparkSpec {
     assert(mf.agg(sum("n_docs")).head().getLong(0) == keptIds.size)
     val totalPieces = Bpe.encodeIdsWith(surv, "doc_id", "text", fz.tokenizer).count()
     assert(mf.agg(sum("n_pieces")).head().getLong(0) == totalPieces)
+  }
+
+  test("the frozen gates are one filter: no semi-join or threshold-table join at ingest, and each gate's count still adds up") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val root = tmp()
+    val fz = StreamPretrain.fit(docs, "doc_id", "text", "lang")
+    val maxId = docs.agg(max("doc_id")).head().getLong(0)
+    // a survivor whose text is unique: its copy under a language the
+    // fit never saw passes Gopher, quality and the ledger, so only the
+    // KN gate can drop it; plus a sub-2-token row
+    val pid = batchSurvivors(docs, fz)
+      .join(docs.groupBy("text").count().filter(col("count") === 1),
+        "text")
+      .agg(min("doc_id")).head().getLong(0)
+    val orig = docs.filter(col("doc_id") === pid)
+    val batch = docs.filter(col("doc_id") =!= pid)
+      .union(orig.withColumn("doc_id", lit(maxId + 1))
+        .withColumn("lang", lit("zz")))
+      .union(orig.withColumn("doc_id", lit(maxId + 2))
+        .withColumn("text", lit("hello")))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      StreamPretrain.ingestBatch(batch, "doc_id", "text", "lang", "source",
+        fz, root, 0L, recordStats = true)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // every node of every query, looking through persisted frames
+    def nodes(p: LogicalPlan): Seq[LogicalPlan] = p.flatMap {
+      case r: InMemoryRelation => r +: nodes(r.cacheBuilder.logicalPlan)
+      case n => Seq(n)
+    }
+    val all = plans.asScala.toSeq.flatMap(nodes)
+    assert(all.nonEmpty, "the listener recorded no query")
+    val gateJoins = all.collect {
+      case j: Join if j.joinType == LeftSemi ||
+          (j.left.output ++ j.right.output).exists(_.name == "_t1") => j
+    }
+    assert(gateJoins.isEmpty,
+      s"a gate is a re-joined frame again:\n${gateJoins.mkString("\n")}")
+    // the batch composition, both extra rows dropped
+    val keptIds = StreamPretrain.keptDocs(spark, root)
+      .select("id").as[Long].collect().toSet
+    assert(keptIds ==
+      batchSurvivors(batch, fz).select("doc_id").as[Long].collect().toSet)
+    assert(!keptIds.contains(maxId + 1) && !keptIds.contains(maxId + 2))
+    // the accounting row: each gate's individual pass count over the
+    // whole batch, as the frame-per-gate reference counts it
+    val st = StreamPretrain.gateStats(spark, root).head()
+    def n(c: String): Long = st.getLong(st.fieldIndex(c))
+    assert(n("n_in") == batch.count())
+    assert(n("n_gopher") == TextAnalysis.gopherRules(batch, "doc_id", "text",
+      stopWords = fz.stopWords).filter(col("keep")).count())
+    assert(n("n_quality") == LinearQuality.score(batch, "doc_id", "text",
+      fz.quality).filter(col("keep")).count())
+    assert(n("n_kn") == knKeepIds(batch, fz).count())
+    assert(n("n_kept") == keptIds.size.toLong)
   }
 
   test("attach: the whole chain runs as one Structured Streaming job") {
