@@ -131,7 +131,7 @@ object StreamBench {
             .format("parquet")
             .option("path", s"$dir/results")
             .option("checkpointLocation", s"$dir/ckpt-results")
-            .partitionBy("filter_id", "date")
+            .partitionBy("date") // LogPipeline.resultsQuery's layout
             .trigger(Trigger.ProcessingTime("1 second"))
             .outputMode("append")
             .start()

@@ -1241,7 +1241,7 @@ object Similarity {
     * longs a query process needs to pick probe cells and build ADC
     * tables without touching the corpus. */
   def readIvfPqMeta(spark: SparkSession, path: String): IvfPqIndex = {
-    val r = spark.read.parquet(s"$path/_meta").head()
+    val r = graft.streaming.StreamState.readTable(spark, s"$path/_meta").head()
     val cents = r.getSeq[org.apache.spark.sql.Row](1)
       .map(x => x.getInt(0) -> x.getSeq[Long](1).toArray).toArray
     // nested list elements come back as mutable ArraySeq — type them
@@ -1282,7 +1282,7 @@ object Similarity {
     // live results, never a post-filtered stump.
     val byId = org.apache.spark.sql.expressions.Window
       .partitionBy(idCol).orderBy(col("batch_id").desc)
-    val probed = spark.read.parquet(path)
+    val probed = graft.streaming.StreamState.readTable(spark, path)
       .filter(col("cluster").isInCollection(probes))
     val live =
       if (excludeIds == null) probed

@@ -4,6 +4,7 @@ import graft.functions.LogFunctions
 import graft.ml.{BayesModel, ErrorClassifier}
 import graft.model.FilterDef
 import graft.operators.FilterFanout
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -38,9 +39,16 @@ object LogPipeline {
       .select("filter_id", "ts", "_raw")
 
   /** Results sink: append matched rows to a parquet table partitioned
-    * by (filter_id, date) — replaces the reference's name-mangled
-    * per-day BigQuery tables (`BigQueryInsertRunnable.java:31-37`)
-    * with real partition pruning. Retention = partition TTL job.
+    * by `date` alone, with `filter_id` a data column — replaces the
+    * reference's name-mangled per-day BigQuery tables
+    * (`BigQueryInsertRunnable.java:31-37`). Each write task opens one
+    * file per date it saw, so a micro-batch writes at most
+    * (write tasks × dates) files, however many filters matched; a
+    * `filter_id === x` read selects one filter through a pushed-down
+    * data filter. No sort here: the streaming file sink rejects one,
+    * so [[compactResults]] clusters closed dates by filter instead.
+    * A table that already holds `filter_id=` directories keeps that
+    * layout ([[partitionColumns]]). Retention = partition TTL job.
     */
   def resultsQuery(matchedStream: DataFrame, path: String,
       checkpoint: String,
@@ -52,36 +60,65 @@ object LogPipeline {
         .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .partitionBy("filter_id", "date")
+        .partitionBy(partitionColumns(matchedStream.sparkSession, path): _*)
         .trigger(trigger)
         .outputMode(OutputMode.Append)
         .start()
     }
 
+  /** The directory levels of the results or stats table at `path`:
+    * `date`, or `(filter_id, date)` when the root already holds
+    * `filter_id=` directories (a table first written in that layout).
+    * Writers decide this with one LIST when they start, never per
+    * trigger: a restarted sink must keep its table at one depth, or
+    * root reads fail on conflicting partition directories. */
+  private[graft] def partitionColumns(spark: SparkSession,
+      path: String): Seq[String] = {
+    val root = new Path(path)
+    val legacy =
+      try root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(root)
+        .exists(st => st.isDirectory && st.getPath.getName.startsWith("filter_id="))
+      catch { case _: java.io.FileNotFoundException => false }
+    if (legacy) Seq("filter_id", "date") else Seq("date")
+  }
+
+  /** Batch append into a results-layout table, rows sorted by
+    * `filter_id` within each file, so parquet row-group statistics let
+    * a one-filter read skip the other filters' row groups. */
+  private def appendResults(rows: DataFrame, parts: Seq[String],
+      path: String): Unit =
+    rows.sortWithinPartitions((parts :+ "filter_id").distinct.map(col): _*)
+      .write.mode("append")
+      .partitionBy(parts: _*)
+      .parquet(path)
+
   /** Results sink with a LIVE registry: the filter set is re-read at
     * every micro-batch (the reference's 1 s registry reload,
     * `MatchBolt.java:89-97`), so `registry.create(...)` mid-stream
     * starts matching on the next batch without restarting the query —
-    * filters are data, not plan structure.
+    * filters are data, not plan structure. Same layout as
+    * [[resultsQuery]].
     */
   def dynamicResultsQuery(parsedStream: DataFrame,
       registry: graft.operators.FilterRegistry, path: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+    val parts = partitionColumns(parsedStream.sparkSession, path)
     parsedStream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val filters = registry.list()
         if (filters.nonEmpty)
-          FilterFanout.explodeMatches(batch, "_raw", filters)
-            .select("filter_id", "ts", "_raw")
-            .withColumn("date", LogFunctions.dateSuffix(col("ts")))
-            .write.mode("append")
-            .partitionBy("filter_id", "date")
-            .parquet(path)
+          appendResults(
+            FilterFanout.explodeMatches(batch, "_raw", filters)
+              .select("filter_id", "ts", "_raw")
+              .withColumn("date", LogFunctions.dateSuffix(col("ts"))),
+            parts, path)
       }
       .start()
+  }
 
   /** Windowed stats aggregation (reference A1-A3 collapsed): tumbling
     * `stepSec` counts per (filter_id, metric=1). Watermark bounds state
@@ -158,12 +195,13 @@ object LogPipeline {
     * reference gives its stats series (supervisor BoltDB store +
     * 7-day purge every 5 minutes, `filter_manager.go:519-576`): each
     * update-mode micro-batch of windowed counts is APPENDED to a
-    * parquet table partitioned by (filter_id, date), stamped with its
+    * parquet table in the results layout (`date` directories, rows
+    * sorted by `filter_id`; see [[resultsQuery]]), stamped with its
     * micro-batch id; [[readStatsTable]] resolves last-write-wins per
     * (filter_id, metric, bucket). Append-with-stamp instead of
     * partition overwrite because a batch carries only the buckets it
-    * UPDATED — overwriting a (filter_id, date) partition with just
-    * those would drop the date's other buckets. Replayed batches
+    * UPDATED — overwriting a date partition with just those would
+    * drop the date's other buckets. Replayed batches
     * (failure recovery) rewrite identical rows under the same stamp,
     * so the read view is idempotent. Retention: [[expireStats]];
     * long-lived tables also get small-file compaction for free when
@@ -186,6 +224,7 @@ object LogPipeline {
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
     graft.GraftSession.inPool(statsStream.sparkSession, "stream_stats") {
+    val parts = partitionColumns(statsStream.sparkSession, path)
     statsStream
       .writeStream
       .outputMode(OutputMode.Update)
@@ -197,13 +236,12 @@ object LogPipeline {
         // micro-batch plan a second time every trigger
         batch.persist()
         try if (!batch.isEmpty)
-          batch
-            .withColumn("_b", lit(batchId))
-            .withColumn("date",
-              LogFunctions.dateSuffix(timestamp_seconds(col("bucket"))))
-            .write.mode("append")
-            .partitionBy("filter_id", "date")
-            .parquet(path)
+          appendResults(
+            batch
+              .withColumn("_b", lit(batchId))
+              .withColumn("date",
+                LogFunctions.dateSuffix(timestamp_seconds(col("bucket")))),
+            parts, path)
         finally batch.unpersist()
       }
       .start()
@@ -259,70 +297,99 @@ object LogPipeline {
       }
       .start()
 
+  /** One date partition of a results or stats table: its directory,
+    * its name under the root (`date=…`, or `filter_id=…/date=…` in the
+    * legacy layout), and whether the directory and the `.old-date=…`
+    * aside a crashed [[compactResults]] swap leaves beside it exist. */
+  private final case class DatePart(dir: Path, name: String,
+      hasDir: Boolean, hasAside: Boolean) {
+    def date: String = dir.getName.stripPrefix("date=")
+    def aside: Path = new Path(dir.getParent, s".old-${dir.getName}")
+  }
+
+  /** The one directory walk behind [[expireResults]] and
+    * [[compactResults]]: every date partition under `root`, at depth 1
+    * (the `date` layout) or under each `filter_id=` directory at depth
+    * 2 (the legacy layout), a date left only as an aside included. */
+  private def dateParts(fs: FileSystem, root: Path): Seq[DatePart] = {
+    def level(dir: Path, prefix: String): Seq[DatePart] = {
+      val names = fs.listStatus(dir).toSeq
+        .collect { case st if st.isDirectory => st.getPath.getName }.toSet
+      val dates = names.collect {
+        case n if n.startsWith("date=") => n
+        case n if n.startsWith(".old-date=") => n.stripPrefix(".old-")
+      }
+      val here = dates.toSeq.sorted.map(n => DatePart(new Path(dir, n),
+        prefix + n, names(n), names(s".old-$n")))
+      if (prefix.nonEmpty) here
+      else here ++ names.filter(_.startsWith("filter_id=")).toSeq.sorted
+        .flatMap(f => level(new Path(dir, f), s"$f/"))
+    }
+    if (fs.exists(root)) level(root, "") else Nil
+  }
+
   /** Retention job (S6's 168 h table expiry as a partition TTL): drop
-    * `date=yyyy_MM_dd` partitions of the results table older than
-    * `retentionDays`. Run from a scheduler; partition pruning means
-    * the job never reads row data.
+    * the `date=yyyy_MM_dd` partitions of a results table older than
+    * `retentionDays`, in either layout, with any compaction aside of
+    * theirs (so no later crash recovery restores an expired date). Run
+    * from a scheduler; the job lists directories and never reads row
+    * data. Returns the dropped partitions' names under the root.
     */
   def expireResults(spark: SparkSession, path: String, retentionDays: Int,
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
     val cutoff = java.time.Instant.ofEpochMilli(nowMillis)
       .minus(java.time.Duration.ofDays(retentionDays))
-    val root = new org.apache.hadoop.fs.Path(path)
+    def expired(p: DatePart): Boolean =
+      try java.time.LocalDate.parse(p.date.replace('_', '-'))
+        .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.isBefore(cutoff)
+      catch { case _: java.time.format.DateTimeParseException => false }
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val dropped = Seq.newBuilder[String]
-    fs.listStatus(root).filter(_.isDirectory).foreach { filterDir =>
-      fs.listStatus(filterDir.getPath).filter(_.isDirectory).foreach { dateDir =>
-        val name = dateDir.getPath.getName // date=yyyy_MM_dd
-        if (name.startsWith("date=")) {
-          val d = name.stripPrefix("date=")
-          try {
-            val partDate = java.time.LocalDate.parse(d.replace('_', '-'))
-              .atStartOfDay(java.time.ZoneOffset.UTC).toInstant
-            if (partDate.isBefore(cutoff)) {
-              fs.delete(dateDir.getPath, true)
-              dropped += s"${filterDir.getPath.getName}/$name"
-            }
-          } catch { case _: java.time.format.DateTimeParseException => () }
-        }
-      }
+    dateParts(fs, root).filter(expired).map { p =>
+      // the aside first: a crash after it leaves the partition for the
+      // next run to drop, never an aside a compaction would restore
+      if (p.hasAside) fs.delete(p.aside, true)
+      if (p.hasDir) fs.delete(p.dir, true)
+      p.name
     }
-    dropped.result()
   }
 
   /** Stats-table purge — the twin of [[expireResults]] for the durable
     * stats series (reference: entries older than 7 days dropped every
-    * 5 minutes, `supervisor/filter_manager.go:519-576`). The sink's
-    * layout is the same (filter_id=…/date=… partitions), so this IS
-    * the same partition-TTL walk with the reference's stats retention
-    * default.
+    * 5 minutes, `supervisor/filter_manager.go:519-576`). The sink
+    * writes the results layout (`date=…` partitions, or
+    * `filter_id=…/date=…` for a legacy table), so this IS the same
+    * partition-TTL walk with the reference's stats retention default.
     */
   def expireStats(spark: SparkSession, path: String, retentionDays: Int = 7,
       nowMillis: Long = System.currentTimeMillis()): Seq[String] =
     expireResults(spark, path, retentionDays, nowMillis)
 
   /** Small-file compaction for the streaming tables: a 1 s results
-    * trigger leaves one parquet file per micro-batch per partition, so
-    * a day of streaming is ~86k files per busy filter — the shape that
-    * slows every later scan (footer reads) and floods a namenode at
-    * cluster scale. The durable STATS sink shares the
-    * (filter_id, date) layout, so this job compacts it too (the `_b`
-    * stamp column rides along; last-write-wins reads are unaffected).
-    * Rewrites each (filter_id, date) leaf directory holding more than
-    * `maxFiles` data files into `ceil(bytes / targetFileBytes)` files
-    * — a busy partition never collapses into one multi-GB file —
-    * atomically per partition (write to a sibling temp dir, swap,
-    * delete). CLOSED partitions only, BY DEFAULT: with `skipDate` unset
-    * the job skips the CURRENT date's partitions (session timezone) —
-    * the ones a live sink is appending to — and additionally any
-    * partition holding a file modified within `graceMillis` (default
-    * 10 min), which covers a sink still draining into yesterday's
-    * partition just after midnight. Pass `skipDate` to pin a different
-    * live date; pass `graceMillis = 0` only when no writer can be
-    * active (tests, decommissioned tables). Row content is preserved
-    * bit-for-bit — only file boundaries change. Returns the rewritten
-    * partition paths.
+    * trigger leaves a few parquet files per micro-batch per date, so
+    * a day of streaming is hundreds of thousands of files — the shape
+    * that slows every later scan (footer reads) and floods a namenode
+    * at cluster scale. The durable STATS sink shares the layout, so
+    * this job compacts it too (the `_b` stamp column rides along;
+    * last-write-wins reads are unaffected). Rewrites each date
+    * partition holding more than `maxFiles` data files into
+    * `ceil(bytes / targetFileBytes)` files — a busy date never
+    * collapses into one multi-GB file — atomically per partition
+    * (write to a sibling temp dir, swap, delete). In the `date` layout
+    * the rewrite range-partitions and sorts the rows by `filter_id`,
+    * so each output file holds a disjoint, sorted run of filters and a
+    * one-filter read skips the rest by parquet row-group statistics;
+    * a legacy `filter_id=…/date=…` partition is simply coalesced.
+    * CLOSED partitions only, BY DEFAULT: with `skipDate` unset the job
+    * skips the CURRENT date's partitions (session timezone) — the ones
+    * a live sink is appending to — and additionally any partition
+    * holding a file modified within `graceMillis` (default 10 min),
+    * which covers a sink still draining into yesterday's partition
+    * just after midnight. Pass `skipDate` to pin a different live
+    * date; pass `graceMillis = 0` only when no writer can be active
+    * (tests, decommissioned tables). Row content is preserved
+    * bit-for-bit — only file boundaries and row order change. Returns
+    * the rewritten partitions' names under the root.
     *
     * TABLES WITH A FILE-SINK LOG: a live `writeStream.format("parquet")`
     * table carries `_spark_metadata`, and root-path reads resolve the
@@ -348,7 +415,7 @@ object LogPipeline {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     require(targetFileBytes > 0,
       s"targetFileBytes must be positive: $targetFileBytes")
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
     val sinkLog = new org.apache.hadoop.fs.Path(root, "_spark_metadata")
@@ -402,57 +469,49 @@ object LogPipeline {
         .format(java.time.format.DateTimeFormatter.ofPattern("yyyy_MM_dd"))
     }
     val freshCutoff = System.currentTimeMillis() - graceMillis
-    val done = Seq.newBuilder[String]
-    fs.listStatus(root).filter(_.isDirectory).foreach { filterDir =>
-      // crash recovery BEFORE compacting: an aside dir whose partition
-      // is missing holds the only copy — restore it; one whose
-      // partition exists is a completed swap's leftover — drop it
-      fs.listStatus(filterDir.getPath)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith(".old-date="))
-        .foreach { asideDir =>
-          val target = new org.apache.hadoop.fs.Path(filterDir.getPath,
-            asideDir.getPath.getName.stripPrefix(".old-"))
-          if (!fs.exists(target)) fs.rename(asideDir.getPath, target)
-          else fs.delete(asideDir.getPath, true)
-        }
-      fs.listStatus(filterDir.getPath).filter(_.isDirectory).foreach { dateDir =>
-        val name = dateDir.getPath.getName
-        val isLive = name == s"date=$liveDate"
-        if (name.startsWith("date=") && !isLive) {
-          val dataFiles = fs.listStatus(dateDir.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          val quiesced = dataFiles.isEmpty ||
-            dataFiles.map(_.getModificationTime).max < freshCutoff
-          if (dataFiles.length > maxFiles && quiesced) {
-            val bytes = dataFiles.map(_.getLen).sum
-            val nOut = math.max(1L,
-              (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-            val tmp = new org.apache.hadoop.fs.Path(
-              dateDir.getPath.getParent, s".compact-${dateDir.getPath.getName}")
-            spark.read.parquet(dateDir.getPath.toString)
-              .coalesce(nOut)
-              .write.mode("overwrite").parquet(tmp.toString)
-            // swap with no data-loss window: move the original ASIDE
-            // (restorable), move the compacted copy in, only then drop
-            // the original — a delete-then-rename order would lose the
-            // partition if the rename failed in between
-            val aside = new org.apache.hadoop.fs.Path(
-              dateDir.getPath.getParent, s".old-${dateDir.getPath.getName}")
-            if (!fs.rename(dateDir.getPath, aside))
-              throw new java.io.IOException(
-                s"compaction: cannot move ${dateDir.getPath} aside")
-            if (!fs.rename(tmp, dateDir.getPath)) {
-              fs.rename(aside, dateDir.getPath) // restore the original
-              throw new java.io.IOException(
-                s"compaction: swap failed for ${dateDir.getPath}; original restored")
-            }
-            fs.delete(aside, true)
-            done += s"${filterDir.getPath.getName}/$name"
+    dateParts(fs, root).flatMap { p =>
+      // crash recovery BEFORE compacting: an aside whose partition is
+      // missing holds the only copy — restore it; one whose partition
+      // exists is a completed swap's leftover — drop it
+      if (p.hasAside) {
+        if (p.hasDir) fs.delete(p.aside, true) else fs.rename(p.aside, p.dir)
+      }
+      if (p.date == liveDate) None
+      else {
+        val dataFiles = fs.listStatus(p.dir)
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        val quiesced = dataFiles.isEmpty ||
+          dataFiles.map(_.getModificationTime).max < freshCutoff
+        if (dataFiles.length <= maxFiles || !quiesced) None
+        else {
+          val bytes = dataFiles.map(_.getLen).sum
+          val nOut = math.max(1L,
+            (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+          val tmp = new Path(p.dir.getParent, s".compact-${p.dir.getName}")
+          val rows = spark.read.parquet(p.dir.toString)
+          val clustered =
+            if (rows.columns.contains("filter_id"))
+              rows.repartitionByRange(nOut, col("filter_id"))
+                .sortWithinPartitions("filter_id")
+            else rows.coalesce(nOut)
+          clustered.write.mode("overwrite").parquet(tmp.toString)
+          // swap with no data-loss window: move the original ASIDE
+          // (restorable), move the compacted copy in, only then drop
+          // the original — a delete-then-rename order would lose the
+          // partition if the rename failed in between
+          if (!fs.rename(p.dir, p.aside))
+            throw new java.io.IOException(
+              s"compaction: cannot move ${p.dir} aside")
+          if (!fs.rename(tmp, p.dir)) {
+            fs.rename(p.aside, p.dir) // restore the original
+            throw new java.io.IOException(
+              s"compaction: swap failed for ${p.dir}; original restored")
           }
+          fs.delete(p.aside, true)
+          Some(p.name)
         }
       }
     }
-    done.result()
   }
 
   /** Streaming exact dedup: drop duplicate lines within the watermark

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * small-file compaction a 1 s parquet sink makes necessary at scale.
   *
   * Conventions: `root/results` is the streaming results table,
-  * `root/stats` the durable stats table (both `filter_id=…/date=…`
-  * partitioned). Either may be absent — each step no-ops on a missing
+  * `root/stats` the durable stats table (both `date=…` partitioned,
+  * or `filter_id=…/date=…` when first written in the legacy layout). Either may be absent — each step no-ops on a missing
   * table. Order matters: TTL first (don't compact bytes about to be
   * deleted), then compaction of the surviving closed partitions. A
   * results table still carrying a `_spark_metadata` sink log skips

@@ -204,7 +204,7 @@ object StreamIvfPq {
     * ingest distribution and a re-fit is due. Reads code rows only
     * (m bytes per vector), never vectors. */
   def cellStats(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(resolve(spark, root))
+    StreamState.readTable(spark, resolve(spark, root))
       .groupBy("cluster").agg(count(lit(1)).as("rows"))
 
   /** [[cellStats]] folded to ONE drift number: max cell fill over mean

@@ -48,6 +48,21 @@ private[graft] object StreamState {
     out.result()
   }
 
+  /** The parquet table at `root`, read from its listed entries (data
+    * files and partition directories, [[listDataFiles]]' skip rules)
+    * with `root` as the partition base. Spark's file index treats an
+    * underscore-named root (`_docs`, `_meta`, `_vN`) as hidden and
+    * warns that all paths were ignored; naming the entries does not
+    * depend on how Spark treats such a root. */
+  def readTable(spark: SparkSession, root: String,
+      mergeSchema: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val entries = fs(spark, root).listStatus(new org.apache.hadoop.fs.Path(root))
+      .filterNot(hidden).map(_.getPath.toString)
+    spark.read.option("basePath", root)
+      .option("mergeSchema", mergeSchema.toString)
+      .parquet(entries.toIndexedSeq: _*)
+  }
+
   /** Whether `root` holds any data file under [[listDataFiles]]' skip
     * rules — the same answer as `listDataFiles(..).nonEmpty`, but the
     * walk returns at the first data file instead of listing the tree. */
@@ -234,13 +249,13 @@ private[graft] object StreamState {
 
   /** The log with the tombstone flag normalized (rows written before
     * deletions existed read as live generations). */
-  def readGenLog(spark: SparkSession, root: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(genLogPath(root))
+  def readGenLog(spark: SparkSession, root: String): DataFrame =
+    withDel(readTable(spark, genLogPath(root), mergeSchema = true))
+
+  private def withDel(raw: DataFrame): DataFrame =
     if (raw.columns.contains("del"))
       raw.withColumn("del", coalesce(col("del"), lit(false)))
     else raw.withColumn("del", lit(false))
-  }
 
   /** Documents whose history needs a read-side decision, with their
     * newest generation and whether it is a tombstone. */
@@ -405,12 +420,7 @@ private[graft] object StreamState {
     val log = genLogPath(root)
     val snap = listDataFiles(spark, log)
     if (snap.isEmpty) return
-    val raw = spark.read.option("mergeSchema", "true").parquet(snap: _*)
-    val withDel =
-      if (raw.columns.contains("del"))
-        raw.withColumn("del", coalesce(col("del"), lit(false)))
-      else raw.withColumn("del", lit(false))
-    withDel
+    withDel(spark.read.option("mergeSchema", "true").parquet(snap: _*))
       .groupBy("id")
       .agg(max(struct(col("batch_id"), col("del"))).as("_m"))
       .select(col("id"), col("_m.batch_id").as("batch_id"),

@@ -117,9 +117,9 @@ object Dev {
 
   /** The streaming ingest end to end on finite input: fixture
     * documents → text-file "log" → file-source stream → parse →
-    * fan-out → {parquet results sink partitioned by (filter_id,
-    * date), windowed stats}, driven to completion; prints a summary
-    * line. */
+    * fan-out → {parquet results sink partitioned by date, windowed
+    * stats}, driven to completion; prints a summary line
+    * (`partitions` counts distinct (filter_id, date) pairs). */
   private def streamDemo(spark: SparkSession, sfDir: String,
       workDir: String): Unit = {
     // stage fixture docs as timestamped syslog-ish lines

@@ -91,7 +91,8 @@ class EndToEndSpec extends SparkSpec {
       catalog, spark).as[String].collect().toSet
     assert(viaSql == expectedKept)
 
-    // 4. partition layout is (filter_id, date) — the pruning contract
+    // 4. every row carries its filter_id (a data column) and its date
+    // (the one partition level) — the pruning contract
     val parts = results.select(col("filter_id"), col("date")).distinct().collect()
     assert(parts.map(_.getString(0)).toSet == Set("f_errors"))
     assert(parts.map(_.getString(1)).forall(_.matches("\\d{4}_\\d{2}_\\d{2}")))

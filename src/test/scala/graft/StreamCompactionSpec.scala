@@ -210,6 +210,52 @@ class StreamCompactionSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq == Seq(1L))
   }
 
+  test("generation log reads name their files: no 'All paths were ignored' warning, same rows") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val root = tmp("gens_warn")
+    // a pre-tombstone file (no `del` column) beside marker-aware ones:
+    // the schema merge still has to happen
+    Seq((1L, 0L)).toDF("id", "batch_id").write.parquet(StreamState.genLogPath(root))
+    StreamState.appendGens(Seq(2L, 3L).toDF("id"), root, 1L)
+    StreamState.appendGens(Seq(2L).toDF("id"), root, 2L, del = true)
+    val ignored = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("paths-ignored", null, null, true,
+        Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("All paths were ignored")) ignored.add(m)
+      }
+    }
+    val logger = LoggerContext.getContext(false)
+      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+    val level = logger.getLevel
+    app.start()
+    logger.addAppender(app)
+    logger.setLevel(Level.WARN)
+    try {
+      val rows = StreamState.readGenLog(spark, root)
+        .select("id", "batch_id", "del").as[(Long, Long, Boolean)].collect()
+      assert(ignored.isEmpty, s"warned: $ignored")
+      assert(rows.sorted.toSeq ==
+        Seq((1L, 0L, false), (2L, 1L, false), (2L, 2L, true), (3L, 1L, false)))
+      // the directory read the log used before: same rows, and the
+      // warning this capture must see
+      val direct = spark.read.option("mergeSchema", "true")
+        .parquet(StreamState.genLogPath(root))
+        .select(col("id"), col("batch_id"), coalesce(col("del"), lit(false)))
+        .as[(Long, Long, Boolean)].collect()
+      assert(direct.sorted.toSeq == rows.sorted.toSeq)
+      assert(ignored.size == 1, s"capture saw: $ignored")
+    } finally {
+      logger.removeAppender(app)
+      logger.setLevel(level)
+      app.stop()
+    }
+  }
+
   test("existence probe: a marker-only _docs reads false, one data file in the last bucket reads true") {
     import org.apache.hadoop.fs.Path
     val root = tmp("probe")

@@ -5,6 +5,8 @@ import graft.streaming.LogPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class StreamingSpec extends SparkSpec {
 
   private val filters = Seq(
@@ -611,6 +613,182 @@ class StreamingSpec extends SparkSpec {
     assert(done == Seq("filter_id=f1/date=2024_01_02"), s"got $done")
   }
 
+  // ten filters over lines stamped on two dates; line i of batch b
+  // matches filter j unless (i + j + b) % 3 == 0, so the filters'
+  // row sets differ
+  private val layoutFilters = (0 until 10).map(j => FilterDef(s"f$j", s"n$j", s"tok$j"))
+
+  private def layoutLines(b: Int): Seq[String] = (0 until 40).map { i =>
+    val toks = (0 until 10).filter(j => (i + j + b) % 3 != 0).map(j => s"tok$j")
+    f"2015-07-${20 + i % 2}%02dT11:35:${i % 60}%02d.000+00:00 host$i app: " +
+      s"${toks.mkString(" ")} line $b-$i"
+  }
+
+  private def parquetFiles(path: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally s.close()
+  }
+
+  private def subdirs(path: String): Set[String] =
+    new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).toSet
+
+  /** [[LogPipeline.resultsQuery]], or (`legacy`) the file sink
+    * partitioned by (filter_id, date) that earlier tables were written
+    * with. */
+  private def resultsSink(matched: org.apache.spark.sql.DataFrame,
+      path: String, ckpt: String, legacy: Boolean) =
+    if (!legacy) LogPipeline.resultsQuery(matched, path, ckpt)
+    else matched
+      .withColumn("date", graft.functions.LogFunctions.dateSuffix(col("ts")))
+      .writeStream.format("parquet")
+      .option("path", path).option("checkpointLocation", ckpt)
+      .partitionBy("filter_id", "date").start()
+
+  /** Stream `batches` of lines through parse → matches into the
+    * results table at `path` over a 4-partition source and return how
+    * many parquet files each micro-batch added. */
+  private def streamResults(path: String, batches: Seq[Seq[String]],
+      legacy: Boolean = false): Seq[Int] = {
+    implicit val s = spark
+    import s.implicits._
+    val input = MemoryStream[String](spark, 4)
+    val q = resultsSink(LogPipeline.matches(
+      LogPipeline.parse(input.toDF(), "value"), layoutFilters),
+      path, s"$path-ckpt", legacy)
+    try batches.map { b =>
+      val before = parquetFiles(path).size
+      input.addData(b: _*)
+      q.processAllAvailable()
+      parquetFiles(path).size - before
+    } finally q.stop()
+  }
+
+  test("results sink: only date= directories, at most write tasks × dates files per micro-batch") {
+    val path = java.nio.file.Files.createTempDirectory("layout").toString + "/results"
+    val added = streamResults(path, Seq(layoutLines(1), layoutLines(2)))
+    // 4 write tasks × 2 dates; one directory per filter and date would
+    // take up to 4 × 10 × 2
+    assert(added.forall(n => n >= 2 && n <= 4 * 2), s"files per micro-batch: $added")
+    assert(subdirs(path) == Set("_spark_metadata", "date=2015_07_20", "date=2015_07_21"))
+    assert(spark.read.parquet(path).columns.toSet == Set("filter_id", "ts", "_raw", "date"))
+  }
+
+  test("results sink: a filter_id read returns the rows a legacy-layout write of the same input does") {
+    val root = java.nio.file.Files.createTempDirectory("layout-eq").toString
+    val batches = Seq(layoutLines(1), layoutLines(2))
+    streamResults(s"$root/new", batches)
+    streamResults(s"$root/legacy", batches, legacy = true)
+    assert(subdirs(s"$root/legacy").count(_.startsWith("filter_id=")) == 10)
+    def rows(path: String, f: String) = {
+      val df = spark.read.parquet(path).filter(col("filter_id") === f)
+      (df, df.select("filter_id", "ts", "_raw", "date").collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq)
+    }
+    layoutFilters.map(_.id).foreach { f =>
+      val (df, got) = rows(s"$root/new", f)
+      val want = rows(s"$root/legacy", f)._2
+      assert(got.nonEmpty && got == want, s"filter $f")
+      // the filter is a pushed-down data filter now, not a directory
+      val scan = df.queryExecution.executedPlan.toString
+      assert(scan.contains(s"EqualTo(filter_id,$f)"), scan)
+    }
+  }
+
+  test("results sink restarted on a legacy-layout table keeps writing (filter_id, date)") {
+    val root = java.nio.file.Files.createTempDirectory("layout-restart").toString
+    val (src, path, ckpt) = (s"$root/lines", s"$root/results", s"$root/ckpt")
+    new java.io.File(src).mkdirs()
+    def offer(name: String, ls: Seq[String]): Unit = {
+      val tmp = java.nio.file.Paths.get(root, name)
+      java.nio.file.Files.write(tmp, ls.mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(src, name))
+    }
+    def run(name: String, ls: Seq[String], legacy: Boolean): Unit = {
+      val q = resultsSink(LogPipeline.matches(LogPipeline.parse(
+        graft.sources.LogSources.textDir(spark, src), "value"), layoutFilters),
+        path, ckpt, legacy)
+      try { offer(name, ls); q.processAllAvailable() } finally q.stop()
+    }
+    // the first run is the sink as it was before the date layout
+    run("a.txt", layoutLines(1), legacy = true)
+    val first = parquetFiles(path).toSet
+    run("b.txt", layoutLines(2), legacy = false)
+    val second = parquetFiles(path).filterNot(first)
+    assert(second.nonEmpty)
+    val base = java.nio.file.Paths.get(path)
+    second.foreach { f =>
+      val rel = base.relativize(f).toString.split('/')
+      assert(rel.length == 3 && rel(0).startsWith("filter_id=") &&
+        rel(1).startsWith("date="), s"second batch file at ${rel.mkString("/")}")
+    }
+    assert(!subdirs(path).exists(_.startsWith("date=")))
+    val read = spark.read.parquet(path).select("_raw").collect().map(_.getString(0))
+    val expected = (layoutLines(1) ++ layoutLines(2)).map(l =>
+      l -> layoutFilters.count(f => l.contains(f.regex)))
+    assert(read.length == expected.map(_._2).sum)
+    assert(read.toSet == expected.filter(_._2 > 0).map(_._1).toSet)
+  }
+
+  test("retention and compaction on a date-layout table: one walk, filter-clustered output, asides recovered") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("datelayout").toString + "/results"
+    // twelve micro-batch appends, as the foreachBatch sinks write them:
+    // eight filters on an expired, a closed and a live date
+    (1 to 12).foreach { i =>
+      Seq("2024_01_01", "2024_06_01", "2024_06_05").flatMap(d =>
+          (0 until 8).map(j => (s"f${(i + j) % 8}", s"line $i-$j", d)))
+        .toDF("filter_id", "_raw", "date")
+        .write.mode("append").partitionBy("date").parquet(dir)
+    }
+    def dateFiles(d: String): Seq[java.io.File] =
+      new java.io.File(s"$dir/date=$d").listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    def all(): Seq[String] = spark.read.parquet(dir)
+      .select("filter_id", "_raw", "date").collect().map(_.toSeq.mkString("|"))
+      .sorted.toSeq
+    // an aside of the expired date (a crashed compaction swap) must go
+    // with it, or a later compaction would restore expired rows
+    val expiredAside = new java.io.File(s"$dir/.old-date=2024_01_01")
+    assert(expiredAside.mkdir())
+    val dropped = LogPipeline.expireResults(spark, dir, retentionDays = 7,
+      nowMillis = java.time.Instant.parse("2024-06-05T12:00:00Z").toEpochMilli)
+    assert(dropped == Seq("date=2024_01_01"))
+    assert(subdirs(dir) == Set("date=2024_06_01", "date=2024_06_05"))
+    val before = all()
+    val liveFiles = dateFiles("2024_06_05")
+    val bytes = dateFiles("2024_06_01").map(_.length).sum
+    val done = LogPipeline.compactResults(spark, dir, maxFiles = 2,
+      skipDate = Some("2024_06_05"), targetFileBytes = bytes / 3 + 1,
+      graceMillis = 0L)
+    assert(done == Seq("date=2024_06_01"), s"got $done")
+    assert(dateFiles("2024_06_05") == liveFiles, "live date must be untouched")
+    assert(all() == before, "compaction changed row content")
+    // each output file is one sorted run of filters, disjoint from the
+    // other files' runs
+    val runs = dateFiles("2024_06_01").map(f => spark.read.parquet(f.toString)
+      .select("filter_id").as[String].collect().toSeq)
+    assert(runs.size >= 2 && runs.size <= 3, s"output files: ${runs.size}")
+    runs.foreach(r => assert(r.nonEmpty && r == r.sorted, s"unsorted file: $r"))
+    val bounds = runs.map(r => (r.head, r.last)).sortBy(_._1)
+    bounds.zip(bounds.drop(1)).foreach { case (a, b) =>
+      assert(a._2 < b._1, s"overlapping files: $bounds") }
+    // crash recovery at the root: a date missing beside its aside is
+    // restored; an aside beside its date (a finished swap) is dropped
+    val part = new java.io.File(s"$dir/date=2024_06_01")
+    val aside = new java.io.File(s"$dir/.old-date=2024_06_01")
+    assert(part.renameTo(aside))
+    assert(LogPipeline.compactResults(spark, dir, maxFiles = 8,
+      skipDate = Some("2024_06_05"), graceMillis = 0L).isEmpty)
+    assert(part.exists() && !aside.exists(), "orphaned aside must be restored")
+    assert(aside.mkdir())
+    LogPipeline.compactResults(spark, dir, maxFiles = 8,
+      skipDate = Some("2024_06_05"), graceMillis = 0L)
+    assert(!aside.exists(), "a finished swap's aside must be dropped")
+    assert(all() == before)
+  }
+
   test("classifier group fold streams one-in-one-out (no micro-batch slice buffering)") {
     // one dominant filter_id: the fold must not materialize its whole
     // micro-batch slice (mirror of ClassifierSpec's foldSortedPartition
@@ -684,11 +862,12 @@ class StreamingSpec extends SparkSpec {
       val chart = repl.exec("show stats f_err")
       assert(chart.nonEmpty && !chart.startsWith("ERR"), s"chart: $chart")
       // the `maintain` verb runs the unified upkeep over the stats
-      // table's parent root: the fixture's 2015 partitions are long
-      // past the 7-day TTL and expire; nothing compacts (fresh files
-      // sit inside the default grace window — the safe default)
+      // table's parent root: the fixture's one remaining 2015 date
+      // partition is long past the 7-day TTL and expires; nothing
+      // compacts (fresh files sit inside the default grace window —
+      // the safe default)
       val maint = repl.exec("maintain")
-      assert(maint.contains("expired stats partitions: 2") &&
+      assert(maint.contains("expired stats partitions: 1 (date=2015_07_20)") &&
         maint.contains("compacted stats partitions: 0"), s"maintain: $maint")
     } finally q.stop()
   }
