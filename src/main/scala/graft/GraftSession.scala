@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    [[graft.sources.GraftLocalFs]] (FileContext): the stock local FS
   *    spawns a `chmod`/`readlink` process per create, mkdirs and
   *    checkpoint rename when libhadoop is absent
+  *  - partition discovery always on the driver (default: a Spark job
+  *    past 32 paths): the session is local, so a distributed listing
+  *    only adds a job (115–500 ms each) to every read of a root with
+  *    more than 32 partition directories (`StreamDedup`'s 64 `pb=`)
   *  - 20 retained SQL executions (default 1000): nothing reads them
   *    with the UI off, and a long streaming session would keep every
   *    micro-batch's plan on the heap
@@ -36,6 +40,7 @@ object GraftSession {
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.GraftLocalFs].getName)
 

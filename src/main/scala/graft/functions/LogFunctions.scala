@@ -67,9 +67,15 @@ object LogFunctions {
     to_timestamp(sniffIsoString(c), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
 
   /** Event time if the line carries one, else processing-time fallback —
-    * reference `ParseBolt.java:81-84`.
+    * reference `ParseBolt.java:81-84`. The fallback is the query's
+    * `current_timestamp()`: in a streaming query, the micro-batch's
+    * timestamp, so every unstamped row of one batch carries the same
+    * `ts`. It goes through [[BatchConst]], which keeps that value out
+    * of the generated code: written as a literal, it would change the
+    * whole-stage source and force a recompile every micro-batch.
     */
-  def tsOrNow(c: Column): Column = coalesce(parseIsoTs(c), current_timestamp())
+  def tsOrNow(c: Column): Column =
+    coalesce(parseIsoTs(c), BatchConst(current_timestamp()))
 
   /** Tumbling-bucket arithmetic `bucket = ts - (ts % step)` in epoch
     * seconds — reference `RollupStatsBolt.java:86`,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.LogFunctions
+import graft.functions.{BatchConst, LogFunctions}
 import graft.ml.{BayesModel, ErrorClassifier}
 import graft.model.FilterDef
 import graft.operators.FilterFanout
@@ -238,7 +238,7 @@ object LogPipeline {
         try if (!batch.isEmpty)
           appendResults(
             batch
-              .withColumn("_b", lit(batchId))
+              .withColumn("_b", BatchConst(lit(batchId)))
               .withColumn("date",
                 LogFunctions.dateSuffix(timestamp_seconds(col("bucket")))),
             parts, path)

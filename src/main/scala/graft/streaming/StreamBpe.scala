@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.BatchConst
 import graft.operators.{Bpe, Pack}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,7 +37,7 @@ object StreamBpe {
       learned: Bpe.Learned, root: String, batchId: Long): Unit =
     BatchTimer.timed("bpe.encode") {
     Bpe.encodeIdsWith(batch, idCol, textCol, learned)
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", BatchConst(lit(batchId)))
       .write.mode("append").parquet(root)
     // generation row LAST (the StreamTextIndex crash contract): a
     // crash above leaves the previous version fully served

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.BatchConst
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -166,7 +167,7 @@ object StreamIvfPq {
       idx.centroids, idx.scale)
     Similarity.pqEncode(batch, idCol, vecCol, idx.codebooks, idx.scale)
       .join(cells, Seq(idCol))
-      .select(col(idCol), col("codes"), lit(batchId).as("batch_id"),
+      .select(col(idCol), col("codes"), BatchConst(lit(batchId)).as("batch_id"),
         col("cluster"))
       // one file per touched cell, not tasks×cells (the StreamDedup
       // append lesson: partitioned appends from a many-partition frame

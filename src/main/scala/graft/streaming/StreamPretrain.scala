@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.TextFunctions
+import graft.functions.{BatchConst, TextFunctions}
 import graft.ml.LinearQuality
 import graft.operators.{Bpe, Curate, Decontaminate, Dedup, LangModel, Scale, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -488,7 +488,7 @@ object StreamPretrain {
         encRoot(root), batchId),
       () => BatchTimer.timed("pretrain.manifest") {
         kept.select(col(idCol).as("id"), col(sourceCol).as("source"))
-          .withColumn("batch_id", lit(batchId))
+          .withColumn("batch_id", BatchConst(lit(batchId)))
           .repartition(1)
           .write.mode("append").parquet(keptRoot(root))
       })
@@ -537,7 +537,7 @@ object StreamPretrain {
     }
     BatchTimer.timed("pretrain.ledger") {
       freshAllP.select(col("_fp"))
-        .withColumn("batch_id", lit(batchId))
+        .withColumn("batch_id", BatchConst(lit(batchId)))
         .repartition(1)
         .write.mode("append").parquet(ledgerRoot(root))
     }

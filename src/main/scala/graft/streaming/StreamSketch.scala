@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.BatchConst
 import graft.operators.Sketch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,7 +56,7 @@ object StreamSketch {
       return
     }
     Sketch.cmsSketch(batch, textCol, depth, hexDigits)
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", BatchConst(lit(batchId)))
       // one file per row-partition (the StreamDedup append lesson —
       // the delta is depth×width rows; tasks×depth files is litter)
       .repartition(col("r"))

@@ -164,6 +164,7 @@ private[graft] object StreamState {
   // after, broadcastable beside any pruned read. No corpus-wide
   // window anywhere on the read path.
 
+  import graft.functions.BatchConst
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
@@ -240,7 +241,7 @@ private[graft] object StreamState {
     }
     if (del) ensure(tombMarkerPath(root))
     ids.toDF("id").distinct()
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", BatchConst(lit(batchId)))
       .withColumn("del", lit(del))
       // one file per batch; the distinct stays parallel
       .repartition(1)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.TextFunctions
+import graft.functions.{BatchConst, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -140,7 +140,7 @@ object StreamTextIndex {
     batch.select(col(idCol).as("id"),
         explode(TextFunctions.tokenSet(lower(col(textCol)))).as("tok"))
       .withColumn("bucket", pmod(hash(col("tok")), lit(b)))
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", BatchConst(lit(batchId)))
       .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(root)
     // generation row LAST: a crash above leaves the previous version

@@ -15,7 +15,8 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** graft's `file:` file system (`graft/sources/LocalFs.scala`) answers like
-  * Hadoop's stock local FS, without starting a process per call. */
+  * Hadoop's stock local FS, without starting a process per call, and a
+  * graft session lists local roots on the driver. */
 class LocalFsSpec extends SparkSpec {
 
   private def conf = spark.sparkContext.hadoopConfiguration
@@ -105,5 +106,25 @@ class LocalFsSpec extends SparkSpec {
     assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
     assert(spark.read.parquet(out).count() == 4)
     assert(spark.read.parquet(root.resolve("table").toString).count() == 64)
+  }
+
+  test("reading a parquet root with 64 partition directories starts no Spark job") {
+    val root = Files.createTempDirectory("localfs-list").resolve("t").toString
+    spark.range(64).selectExpr("id", "cast(id as int) as pb")
+      .write.partitionBy("pb").parquet(root)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a given schema: this read lists the root, it infers nothing
+      val df = spark.read.schema("id long, pb int").parquet(root)
+      assert(df.inputFiles.length == 64)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"listing the root started ${jobs.get} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

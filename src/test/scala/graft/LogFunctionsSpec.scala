@@ -35,6 +35,26 @@ class LogFunctionsSpec extends SparkSpec {
     assert(one("no timestamp here", tsOrNow(col("x"))) != null)
   }
 
+  test("BatchConst passes its value through references: two values, one generated source") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{LongType, StructField}
+    def code(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+        .map(_._2)
+    def plan(v: Long) = spark.range(3)
+      .select(graft.functions.BatchConst(lit(v)).as("b"),
+        tsOrNow(col("id").cast("string")).as("ts"))
+    val (one, two) = (plan(1L), plan(2L))
+    assert(one.collect().map(_.getLong(0)).toSeq == Seq(1L, 1L, 1L))
+    assert(two.collect().map(_.getLong(0)).toSeq == Seq(2L, 2L, 2L))
+    assert(one.select("ts").distinct().count() == 1)
+    val (c1, c2) = (code(one), code(two))
+    assert(c1.nonEmpty && c1 == c2)
+    assert(one.schema("b") == StructField("b", LongType, nullable = false))
+    val e = graft.functions.BatchConst(Literal(5L))
+    assert(!e.foldable && e.eval() == 5L)
+  }
+
   test("bucket arithmetic = ts - ts % step in epoch seconds") {
     import spark.implicits._
     val got = Seq("2024-01-02T03:04:05.000+00:00").toDF("x")

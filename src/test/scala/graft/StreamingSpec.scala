@@ -110,6 +110,82 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(fallback - System.currentTimeMillis() / 1000) < 300)
   }
 
+  /** Janino compiles so far in this JVM (Spark's code cache serves a
+    * repeated source without a compile). */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** [[LogPipeline.resultsQuery]] of `input` into `dir`, on a 100 ms trigger. */
+  private def resultsOver(input: MemoryStream[String], dir: String) =
+    LogPipeline.resultsQuery(
+      LogPipeline.matches(LogPipeline.parse(input.toDF(), "value"), filters),
+      s"$dir/results", s"$dir/ckpt",
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+
+  test("a results query compiles once: unstamped micro-batches 2 and 3 generate identical code, batches 3-5 compile nothing") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("results-codegen").toString
+    val input = MemoryStream[String](spark)
+    val q = resultsOver(input, dir)
+    def batch(i: Int): (Long, Seq[String]) = {
+      input.addData(s"error $i in checkout", s"checkout $i ok", s"plain line $i")
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+      val n = compiles // read first: codegenStringSeq compiles for its byte-code stats
+      // the generated sources (the code cache's key); the plan trees
+      // printed beside them show each batch's timestamp
+      (n, org.apache.spark.sql.execution.debug.codegenStringSeq(exec.executedPlan).map(_._2))
+    }
+    try {
+      val runs = (1 to 5).map(batch)
+      assert(runs(1)._2.nonEmpty)
+      assert(runs(1)._2 == runs(2)._2, "micro-batches 2 and 3 generated different code")
+      assert(runs(4)._1 == runs(2)._1,
+        s"batches 4-5 compiled ${runs(4)._1 - runs(2)._1} classes")
+      assert(spark.read.parquet(s"$dir/results").count() == 15)
+    } finally q.stop()
+  }
+
+  test("unstamped rows of one results micro-batch share one ts, taken between addData and the commit") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("results-ts").toString
+    val input = MemoryStream[String](spark)
+    val q = resultsOver(input, dir)
+    try {
+      val windows = Seq("a", "b").map { tag =>
+        val before = System.currentTimeMillis()
+        input.addData(s"error $tag one", s"error $tag two in checkout", s"checkout $tag")
+        q.processAllAvailable()
+        tag -> (before, System.currentTimeMillis())
+      }
+      val rows = spark.read.parquet(s"$dir/results")
+        .select(col("_raw"), col("ts")).as[(String, java.sql.Timestamp)].collect()
+      assert(rows.length == 8)
+      for ((tag, (before, after)) <- windows) {
+        val ts = rows.filter(_._1.contains(s" $tag")).map(_._2.getTime).distinct
+        assert(ts.length == 1, s"batch $tag carries ${ts.length} timestamps")
+        assert(before <= ts.head && ts.head <= after,
+          s"batch $tag ts ${ts.head} outside [$before, $after]")
+      }
+    } finally q.stop()
+  }
+
+  test("a per-batch writer called with a second batch id compiles nothing new and writes both ids") {
+    implicit val s = spark
+    import s.implicits._
+    import graft.streaming.StreamState
+    val root = java.nio.file.Files.createTempDirectory("gens-codegen").toString
+    StreamState.appendGens(Seq(1L, 2L, 2L).toDF("doc"), root, batchId = 7L)
+    val before = compiles
+    StreamState.appendGens(Seq(3L, 4L).toDF("doc"), root, batchId = 8L)
+    assert(compiles == before, s"the second batch compiled ${compiles - before} classes")
+    assert(StreamState.readGenLog(spark, root).select("id", "batch_id")
+      .as[(Long, Long)].collect().toSet == Set((1L, 7L), (2L, 7L), (3L, 8L), (4L, 8L)))
+  }
+
   test("outlier sink flags a spiking filter from the streaming stats table") {
     implicit val s = spark
     import s.implicits._
