@@ -1423,15 +1423,13 @@ object SparkEntry {
       // scored by integer micro-nat cost — floor(-ln p · 1e6) per
       // VOCABULARY entry, BIGINT sums per doc, integer-division mean —
       // so the whole train-and-score chain replays exactly in SQL.
-      // Scoring runs the compiled per-row path (lmScoreCompiled: the
-      // bounded cost table collected once, one projection over the
-      // corpus, zero shuffle) — the join-based lmScore is its
-      // spec-asserted reference twin.
+      // Scoring is one compiled per-row projection (lmScore: the
+      // bounded cost table collected once, zero shuffle).
       (s: SparkSession, dir: String) => {
         val docs = t(s, dir, "documents")
         val model = graft.operators.LangModel.lmTrain(
           docs.filter(col("lang") === "en"), "text")
-        graft.operators.LangModel.lmScoreCompiled(docs, "doc_id", "text",
+        graft.operators.LangModel.lmScore(docs, "doc_id", "text",
           model)
       },
       Some(s"""WITH $lmScoreCtesSql
@@ -1467,7 +1465,7 @@ object SparkEntry {
         val docs = t(s, dir, "documents")
         val model = graft.operators.LangModel.lmTrain(
           docs.filter(col("lang") === "en"), "text")
-        val scored = graft.operators.LangModel.lmScoreCompiled(
+        val scored = graft.operators.LangModel.lmScore(
           docs, "doc_id", "text", model)
         Curate.perplexityBuckets(
             scored.join(docs.select("doc_id", "lang"), "doc_id"),
@@ -1489,7 +1487,7 @@ object SparkEntry {
         val docs = t(s, dir, "documents")
         val model = graft.operators.LangModel.lmTrain(
           docs.filter(col("lang") === "en"), "text")
-        val scored = graft.operators.LangModel.lmScoreCompiled(
+        val scored = graft.operators.LangModel.lmScore(
           docs, "doc_id", "text", model)
         val kept = Curate.perplexityBuckets(
             scored.join(docs.select("doc_id", "lang"), "doc_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge}
 import org.apache.spark.sql.functions._
 
 /** Character n-gram language-model quality scoring — the CCNet-style
@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): training is one map-side-combinable count
   * aggregate over the reference slice; the cost table is bounded by
-  * the charset cubed (≪ memory for any text corpus) and BROADCAST to
-  * the scoring join, so the corpus itself never shuffles on gram —
-  * the only corpus-wide movement is the per-(doc, gram) partial
-  * aggregate feeding the per-doc sum, both combiner-friendly.
+  * the charset cubed (≪ memory for any text corpus), collected once
+  * and FROZEN into the per-row scorer ([[graft.functions.FrozenLookup]]),
+  * so scoring touches the corpus once, row by row, with no join and no
+  * shuffle.
   */
 object LangModel {
 
@@ -56,16 +56,16 @@ object LangModel {
     * (gram → cost) map plus the OOV cost, same micro-nat arithmetic
     * as [[lmScore]]. Bounded collect — the vocabulary is capped by
     * the charset cubed (tens of thousands of entries for any text
-    * corpus), the same bound that lets [[lmScore]] broadcast it.
+    * corpus).
     */
   def collectCosts(model: DataFrame, scale: Long = 1000000L)
       : (Map[String, Long], Long) = {
     // ONE execution of the model aggregate; totals, per-gram costs and
     // the OOV cost all derive from the collected counts with the same
     // double arithmetic the SQL form uses (Math.log, double division,
-    // floor), so values are bit-identical to lmScore's cost table —
-    // re-deriving them through Spark plans instead would re-run the
-    // corpus-wide training scan once per derived value.
+    // floor), so values are bit-identical to the SQL oracle's cost
+    // table — re-deriving them through Spark plans instead would re-run
+    // the corpus-wide training scan once per derived value.
     val rows = model.select(col("gram"), col("c").cast("long")).collect()
     val total = rows.foldLeft(0L)(_ + _.getLong(1))
     val denom = (total + rows.length).toDouble
@@ -79,50 +79,19 @@ object LangModel {
   }
 
   /** Per-row (n_tri, nll_micro) struct of `c` under a collected
-    * model — the STATELESS face of [[lmScore]] (identical arithmetic,
-    * asserted by LangModelSpec): one compiled pass, O(1) hash lookup
-    * per trigram ([[graft.functions.LmDocCost]]). NULL below 3 chars.
+    * model: one compiled pass, O(1) hash lookup per trigram
+    * ([[graft.functions.LmDocCost]]). NULL below 3 chars.
     */
-  def docCost(c: Column, costs: Map[String, Long], oovCost: Long): Column = {
-    import org.apache.spark.sql.GraftExprBridge
+  def docCost(c: Column, costs: Map[String, Long], oovCost: Long): Column =
     GraftExprBridge.column(graft.functions.LmDocCost(
       GraftExprBridge.expression(c), costs, oovCost))
-  }
 
-  /** Per-row mean micro-nat cost — [[docCost]]'s nll_micro div n_tri,
-    * computed as exact integer arithmetic ((a − a mod b) / b: every
-    * step is an exactly representable double, so the quotient matches
-    * [[lmScore]]'s SQL `div` bit-for-bit). Because it is one
-    * projection with no join or aggregation, it composes with any
-    * streaming trigger/watermark — the at-ingest LM quality gate.
-    */
-  def meanNllColumn(c: Column, costs: Map[String, Long],
-      oovCost: Long): Column = {
-    val st = docCost(c, costs, oovCost)
-    val a = st.getField("nll_micro")
-    val b = st.getField("n_tri")
-    ((a - pmod(a, b)) / b).cast("long")
-  }
-
-  /** [[lmScore]] by the compiled per-row path: collect the bounded
-    * cost table once ([[collectCosts]] — O(charset³) driver state, the
-    * same bound that lets [[lmScore]] broadcast it), then score the
-    * corpus in ONE projection via [[docCost]] — no exploded corpus, no
-    * join, and no shuffle at all beyond [[lmTrain]]'s model aggregate.
-    * Output schema and every integer are [[lmScore]]'s exactly
-    * (LangModelSpec asserts parity), so the two share an oracle. This
-    * is the shape the 100 TB scorer takes: the corpus is touched once,
-    * row by row, embarrassingly parallel.
-    */
-  def lmScoreCompiled(docs: DataFrame, idCol: String, textCol: String,
-      model: DataFrame, scale: Long = 1000000L): DataFrame = {
-    val (costs, oov) = collectCosts(model, scale)
-    docs.select(col(idCol), docCost(col(textCol), costs, oov).as("st"))
-      .filter(col("st").isNotNull)
-      .select(col(idCol), col("st.n_tri").as("n_tri"),
-        col("st.nll_micro").as("nll_micro"))
-      .withColumn("mean_nll_micro", expr("nll_micro div n_tri"))
-  }
+  /** Integer mean cost of a [[docCost]] or [[knDocCostStruct]] struct,
+    * `nll_micro div <count>`: the score the LM and KN gates threshold
+    * on. One projection with no join or aggregation, so a gate on it
+    * composes with any streaming trigger/watermark. */
+  def meanNll(st: Column, count: String): Column =
+    call_function("div", st("nll_micro"), st(count))
 
   /** Score each document against a trained model: per-doc trigram
     * count `n_tri`, total cost `nll_micro` (micro-nats under add-one
@@ -131,63 +100,30 @@ object LangModel {
     * the integer mean `mean_nll_micro` — the log-perplexity proxy a
     * quality gate thresholds on. Documents shorter than 3 chars have
     * no trigrams and are absent from the output.
+    *
+    * The bounded cost table is collected once ([[collectCosts]]), then
+    * the corpus is scored in ONE projection via [[docCost]]: touched
+    * once, row by row, no exploded corpus, no join, and no shuffle
+    * beyond [[lmTrain]]'s model aggregate. LangModelSpec keeps the
+    * explode→broadcast-join→aggregate form as the reference it must
+    * equal. PRECONDITION: `idCol` is unique per row.
     */
   def lmScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, scale: Long = 1000000L): DataFrame = {
-    // one-row model summary, broadcast into the cost table
-    val totals = model.agg(sum(col("c")).as("total"), count(lit(1)).as("v"))
-    val denom = (col("total") + col("v")).cast("double")
-    val costs = model.crossJoin(broadcast(totals))
-      .select(col("gram"),
-        floor(-log((col("c") + 1).cast("double") / denom) * scale)
-          .as("cost"))
-    val oov = totals.select(
-      floor(-log(lit(1.0) / denom) * scale).as("oov_cost"))
-
-    // exploded grams go STRAIGHT through the broadcast join into the
-    // per-doc aggregate — a (doc, gram) pre-aggregation would add a
-    // full shuffle of the exploded corpus to dedup grams that are
-    // mostly unique within a document anyway; the per-doc sum is
-    // map-side combinable either way
-    docs.select(col(idCol), lower(col(textCol)).as("_s"))
-      .select(col(idCol), explode(charTrigramsOf(col("_s"))).as("gram"))
-      .join(broadcast(costs), Seq("gram"), "left")
-      .crossJoin(broadcast(oov))
-      .groupBy(idCol)
-      .agg(sum(coalesce(col("cost"), col("oov_cost"))).as("nll_micro"),
-        count(lit(1)).as("n_tri"))
-      .withColumn("mean_nll_micro", expr("nll_micro div n_tri"))
-      .select(col(idCol), col("n_tri"), col("nll_micro"),
-        col("mean_nll_micro"))
+    val (costs, oov) = collectCosts(model, scale)
+    scoreFrame(docs, idCol, docCost(col(textCol), costs, oov), "n_tri")
   }
 
-  /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;
-    * Chen & Goodman 1998 eq. 4.25) — the smoothing a KenLM-style
-    * corpus quality model uses — as EXACT RATIONALS, so the table
-    * replays bit-for-bit in any engine with 64-bit integers:
-    *
-    *   P(w2|w1) = max(c(w1w2) − d, 0)/c(w1·)
-    *            + d·N1+(w1·)/c(w1·) · N1+(·w2)/N1+(··)
-    *
-    * with discount d = 3/4. Put over the common denominator
-    * 4·c(w1·)·N1+(··):
-    *
-    *   p_num = max(4·c12 − 3, 0)·n_bi + 3·n1fw(w1)·ncw(w2)
-    *   p_den = 4·c1·n_bi
-    *
-    * — all BIGINT products of corpus counts (no float, no gcd; the
-    * fraction is unreduced but canonical because the denominator is
-    * determined by (w1)). Output: one row per observed bigram type
-    * (w1, w2, c12, p_num, p_den).
-    *
-    * Scale shape: the only corpus-wide movement is the (w1, w2) hash
-    * aggregate — map-side combinable, shuffle bounded by bigram TYPES
-    * per partition, not tokens. The continuation/left statistics are
-    * windows over that types table (vocabulary-bounded, ≪ corpus).
-    * Overflow bound: p_num/p_den stay in 64 bits while
-    * 4·c(w1·)·N1+(··) < 2^63 — beyond that (≫ 10^18 token corpora)
-    * scale out the counts before smoothing.
-    */
+  /** (id, count, nll_micro, mean_nll_micro) of every row whose cost
+    * struct `st` is not NULL — the output frame of both scorers. */
+  private def scoreFrame(docs: DataFrame, idCol: String, st: Column,
+      count: String): DataFrame =
+    docs.select(col(idCol), st.as("_st"))
+      .filter(col("_st").isNotNull)
+      .select(col(idCol), col("_st")(count).as(count),
+        col("_st.nll_micro").as("nll_micro"),
+        meanNll(col("_st"), count).as("mean_nll_micro"))
+
   /** Driver-side KN cost tables for [[knScore]], derived from ONE
     * execution of [[knBigrams]] (plus its per-side statistics): seen
     * pairs cost floor(−ln(p_num/p_den)·1e6) micro-nats; an unseen
@@ -237,10 +173,8 @@ object LangModel {
     * grids fixed by [[knCollectCosts]]).
     *
     * Scale shape: train is one (w1,w2) combinable aggregate over the
-    * reference slice; the three cost tables are vocabulary-bounded
-    * broadcasts; scoring explodes doc bigrams straight through
-    * broadcast joins into a map-side-combinable per-doc sum — the
-    * corpus never shuffles by gram.
+    * reference slice; the three cost tables are vocabulary-bounded and
+    * frozen into the per-row scorer ([[knScoreWith]]).
     */
   def knScore(docs: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refTextCol: String,
@@ -251,11 +185,7 @@ object LangModel {
   /** Per-row (n_big, nll_micro) struct of a text column under frozen
     * KN cost tables — one compiled pass ([[graft.functions
     * .KnDocCost]]): tokenize, then an O(1) lookup per bigram. NULL
-    * below 2 tokens. Per bigram the cost is exactly the join path's
-    * `coalesce(_pc, _b1 + _cc, oov)`; sums are order-independent
-    * BIGINTs, so scores are bit-identical to the former
-    * explode→3-broadcast-joins→aggregate chain (LangModelSpec pins
-    * parity). Because it is one projection with no join or
+    * below 2 tokens. Because it is one projection with no join or
     * aggregation, a caller can compute it BESIDE other per-row
     * columns (lang, source) in a single scan — the
     * [[graft.streaming.StreamPretrain]] KN gate is this struct against
@@ -263,7 +193,6 @@ object LangModel {
   def knDocCostStruct(textCol: Column,
       costs: (Map[(String, String), Long], Map[String, Long],
         Map[String, Long], Long)): Column = {
-    import org.apache.spark.sql.GraftExprBridge
     val (pairCost, b1Cost, cCost, oov) = costs
     GraftExprBridge.column(graft.functions.KnDocCost(
       GraftExprBridge.expression(
@@ -272,32 +201,44 @@ object LangModel {
   }
 
   /** [[knScore]] under FROZEN cost tables (the [[knCollectCosts]]
-    * tuple): fit once on the reference slice, score any batch, the
-    * same split as [[lmScoreCompiled]]'s literal costs.
-    *
-    * (r17) Computed by the compiled per-row path ([[knDocCostStruct]]
-    * — the [[lmScoreCompiled]] shape applied to the bigram model):
-    * the former chain exploded every document into ~token-count
-    * bigram rows, pushed each through three broadcast hash joins, and
-    * re-assembled documents in a hash aggregate (one corpus exchange
-    * on the id). Now the corpus is touched once, row by row, no
-    * explode, no join, no shuffle; every integer is unchanged.
-    * PRECONDITION carried from every existing caller: `idCol` is
-    * unique per row. The former per-id aggregate would have merged
-    * duplicate ids into one summed row; the per-row form scores each
-    * row independently (the [[lmScoreCompiled]] contract). */
+    * tuple): fit once on the reference slice, score any batch by the
+    * compiled per-row path ([[knDocCostStruct]]) — no explode, no
+    * join, no shuffle. LangModelSpec keeps the
+    * explode→3-broadcast-joins→aggregate form as the reference it must
+    * equal. PRECONDITION: `idCol` is unique per row (the [[lmScore]]
+    * contract). */
   def knScoreWith(docs: DataFrame, idCol: String, textCol: String,
       costs: (Map[(String, String), Long], Map[String, Long],
         Map[String, Long], Long)): DataFrame =
-    docs.select(col(idCol),
-        knDocCostStruct(col(textCol), costs).as("_st"))
-      .filter(col("_st").isNotNull)
-      .select(col(idCol), col("_st.n_big").as("n_big"),
-        col("_st.nll_micro").as("nll_micro"))
-      .withColumn("mean_nll_micro", expr("nll_micro div n_big"))
-      .select(col(idCol), col("n_big"), col("nll_micro"),
-        col("mean_nll_micro"))
+    scoreFrame(docs, idCol, knDocCostStruct(col(textCol), costs), "n_big")
 
+  /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;
+    * Chen & Goodman 1998 eq. 4.25) — the smoothing a KenLM-style
+    * corpus quality model uses — as EXACT RATIONALS, so the table
+    * replays bit-for-bit in any engine with 64-bit integers:
+    *
+    *   P(w2|w1) = max(c(w1w2) − d, 0)/c(w1·)
+    *            + d·N1+(w1·)/c(w1·) · N1+(·w2)/N1+(··)
+    *
+    * with discount d = 3/4. Put over the common denominator
+    * 4·c(w1·)·N1+(··):
+    *
+    *   p_num = max(4·c12 − 3, 0)·n_bi + 3·n1fw(w1)·ncw(w2)
+    *   p_den = 4·c1·n_bi
+    *
+    * — all BIGINT products of corpus counts (no float, no gcd; the
+    * fraction is unreduced but canonical because the denominator is
+    * determined by (w1)). Output: one row per observed bigram type
+    * (w1, w2, c12, p_num, p_den).
+    *
+    * Scale shape: the only corpus-wide movement is the (w1, w2) hash
+    * aggregate — map-side combinable, shuffle bounded by bigram TYPES
+    * per partition, not tokens. The continuation/left statistics are
+    * windows over that types table (vocabulary-bounded, ≪ corpus).
+    * Overflow bound: p_num/p_den stay in 64 bits while
+    * 4·c(w1·)·N1+(··) < 2^63 — beyond that (≫ 10^18 token corpora)
+    * scale out the counts before smoothing.
+    */
   def knBigrams(df: DataFrame, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // materialize tokens BEFORE slicing: an inlined tokens(lower(..))

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.{BatchConst, LogFunctions}
 import graft.ml.{BayesModel, ErrorClassifier}
 import graft.model.FilterDef
-import graft.operators.FilterFanout
+import graft.operators.{FilterFanout, LangModel}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -557,8 +557,8 @@ object LogPipeline {
     */
   def lmGateStream(parsed: DataFrame, costs: Map[String, Long],
       oovCost: Long, maxMeanNll: Long, textCol: String = "_raw"): DataFrame = {
-    val mean = graft.operators.LangModel.meanNllColumn(
-      col(textCol), costs, oovCost)
+    val mean = LangModel.meanNll(
+      LangModel.docCost(col(textCol), costs, oovCost), "n_tri")
     parsed.withColumn("_nll", mean)
       .filter(col("_nll").isNotNull && col("_nll") <= maxMeanNll)
       .drop("_nll")

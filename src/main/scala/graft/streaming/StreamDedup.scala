@@ -73,12 +73,6 @@ object StreamDedup {
   private def sigsPath(root: String): String = s"$root/sigs"
   private def labelsPath(root: String): String = s"$root/labels"
 
-  private def hasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-
   /** Ids whose newest generation is a tombstone, or null when no
     * deletion ever happened (the common case — zero read-side cost
     * until then). Deletions are compliance events, so the set is
@@ -144,10 +138,10 @@ object StreamDedup {
         // from these frames can never see the batch's own just-written
         // rows even while the appends run concurrently
         val histBands =
-          if (!hasData(spark, bandsPath(root))) None
+          if (!StreamState.hasDataFiles(spark, bandsPath(root))) None
           else Some(spark.read.parquet(bandsPath(root)))
         val histSigs =
-          if (!hasData(spark, sigsPath(root))) None
+          if (!StreamState.hasDataFiles(spark, sigsPath(root))) None
           else Some(spark.read.parquet(sigsPath(root)))
         // PROBE→VERIFY and the two index APPENDS run concurrently (r14
         // verdict item 4 — at sf0.1 the sequential form paid

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.{BatchConst, TextFunctions}
 import graft.ml.LinearQuality
 import graft.operators.{Bpe, Curate, Decontaminate, Dedup, LangModel, Scale, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -162,7 +162,8 @@ object StreamPretrain {
           .select(col(langCol),
             LangModel.knDocCostStruct(col(textCol), costs).as("_st"))
           .filter(col("_st").isNotNull)
-          .select(col(langCol), knMean(col("_st")).as("mean_nll_micro"))
+          .select(col(langCol),
+            LangModel.meanNll(col("_st"), "n_big").as("mean_nll_micro"))
         // the head threshold IS the frozen value: t1 is an attained
         // score (see [[Curate.perplexityThresholds]]), so
         // max(score | bucket = head) = t1 — reading the threshold
@@ -272,18 +273,11 @@ object StreamPretrain {
     * probe per gram). A null or sub-`n`-token document has zero hits
     * and stays kept. */
   private def deconKeep(text: Column, d: Decon): Column = {
-    import org.apache.spark.sql.GraftExprBridge
     val hits = GraftExprBridge.column(graft.functions.SetHitCount(
       GraftExprBridge.expression(Decontaminate.ngramSet(text, d.n)),
       d.grams))
     coalesce(hits, lit(0L)) < d.minShared
   }
-
-  /** Integer mean bigram cost of a [[LangModel.knDocCostStruct]]
-    * struct (`nll_micro div n_big`, the [[LangModel.knScoreWith]]
-    * score). */
-  private def knMean(st: Column): Column =
-    call_function("div", st("nll_micro"), st("n_big"))
 
   /** The KN perplexity gate: the document's mean cost at or under its
     * language's frozen head threshold, looked up in a map literal.
@@ -293,7 +287,7 @@ object StreamPretrain {
   private def knKeep(text: Column, lang: Column, fz: Frozen): Column = {
     val t1 = element_at(typedLit(fz.langT1), lang)
     element_at(transform(array(LangModel.knDocCostStruct(text, fz.knCosts)),
-      st => knMean(st) <= t1), 1)
+      st => LangModel.meanNll(st, "n_big") <= t1), 1)
   }
 
   /** The gates [[fit]] freezes the KN thresholds behind, as
@@ -616,9 +610,7 @@ object StreamPretrain {
     * sources-sized, never corpus-sized. */
   def liveSourceTokens(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val encP = new org.apache.hadoop.fs.Path(encRoot(root))
-    if (!encP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(encP))
+    if (!StreamState.hasDataFiles(spark, encRoot(root)))
       return Seq.empty[(String, Long)].toDF("source", "dom_tokens")
     val enc = StreamBpe.readEncoded(spark, encRoot(root))
     val idc = enc.columns.head
@@ -784,10 +776,7 @@ object StreamPretrain {
       .filter(col("id") =!= col("cluster")).select("id")
 
   private def readLedger(spark: SparkSession, root: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(ledgerRoot(root))
-    val exists =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (!exists) {
+    if (!StreamState.hasDataFiles(spark, ledgerRoot(root))) {
       import spark.implicits._
       Seq.empty[String].toDF("_fp")
     } else spark.read.parquet(ledgerRoot(root)).select(col("_fp")).distinct()

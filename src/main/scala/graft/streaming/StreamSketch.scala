@@ -111,12 +111,10 @@ object StreamSketch {
     * side of any crash or interleaving.
     */
   def readSketch(spark: SparkSession, root: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val exists =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (!exists) {
-      // nothing ingested yet: the empty sketch (estimates coalesce
-      // to zero), not a read error
+    if (!StreamState.hasDataFiles(spark, root)) {
+      // nothing ingested yet (or only a killed first append's
+      // `_temporary/`): the empty sketch (estimates coalesce to zero),
+      // not a read error
       import spark.implicits._
       return Seq.empty[(Int, String, Long)].toDF("r", "b", "cnt")
     }

@@ -169,10 +169,7 @@ object StreamTextIndex {
     * posting — the batch index's shape, so every
     * [[graft.sources.TextIndex]] consumer pattern applies. */
   def readIndex(spark: SparkSession, root: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val exists =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (!exists) {
+    if (!StreamState.hasDataFiles(spark, root)) {
       import spark.implicits._
       return Seq.empty[(String, Long, Int)].toDF("tok", "id", "bucket")
     }

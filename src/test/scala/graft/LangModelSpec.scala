@@ -7,6 +7,32 @@ import org.apache.spark.sql.functions._
 class LangModelSpec extends SparkSpec {
   import spark.implicits._
 
+  // the join-based reference twin of the compiled LangModel.lmScore:
+  // explode each document into trigrams, one broadcast join against the
+  // cost table (derived in SQL from the model counts), per-doc aggregate
+  private def lmScoreJoin(docs: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, model: org.apache.spark.sql.DataFrame,
+      scale: Long = 1000000L): org.apache.spark.sql.DataFrame = {
+    val totals = model.agg(sum(col("c")).as("total"), count(lit(1)).as("v"))
+    val denom = (col("total") + col("v")).cast("double")
+    val costs = model.crossJoin(broadcast(totals))
+      .select(col("gram"),
+        floor(-log((col("c") + 1).cast("double") / denom) * scale)
+          .as("cost"))
+    val oov = totals.select(
+      floor(-log(lit(1.0) / denom) * scale).as("oov_cost"))
+    docs.select(col(idCol), lower(col(textCol)).as("_s"))
+      .select(col(idCol), explode(LangModel.charTrigrams(col("_s"))).as("gram"))
+      .join(broadcast(costs), Seq("gram"), "left")
+      .crossJoin(broadcast(oov))
+      .groupBy(idCol)
+      .agg(sum(coalesce(col("cost"), col("oov_cost"))).as("nll_micro"),
+        count(lit(1)).as("n_tri"))
+      .withColumn("mean_nll_micro", expr("nll_micro div n_tri"))
+      .select(col(idCol), col("n_tri"), col("nll_micro"),
+        col("mean_nll_micro"))
+  }
+
   test("charTrigrams: sliding window, lowercased, empty below 3 chars") {
     val df = Seq("Abcd", "xy", "", "hello").toDF("t")
       .select(LangModel.charTrigrams(col("t")).as("g"))
@@ -44,24 +70,25 @@ class LangModelSpec extends SparkSpec {
     assert(got.getAs[Long]("mean_nll_micro") == 549306L)
   }
 
-  test("docCost/meanNllColumn: compiled per-row path equals the join-based lmScore exactly") {
+  test("lmScore: compiled per-row path equals the explode+join reference exactly") {
     val docs = Tables.load(spark, sfDir, "documents").limit(200)
     val model = LangModel.lmTrain(
       docs.filter(col("lang") === "en"), "text")
     val (costs, oov) = LangModel.collectCosts(model)
 
-    val joined = LangModel.lmScore(docs, "doc_id", "text", model)
+    val joined = lmScoreJoin(docs, "doc_id", "text", model)
       .select("doc_id", "n_tri", "nll_micro", "mean_nll_micro")
     val perRow = docs.select(col("doc_id"),
         LangModel.docCost(col("text"), costs, oov).as("st"),
-        LangModel.meanNllColumn(col("text"), costs, oov).as("mean_nll_micro"))
+        LangModel.meanNll(LangModel.docCost(col("text"), costs, oov), "n_tri")
+          .as("mean_nll_micro"))
       .filter(col("st").isNotNull)
       .select(col("doc_id"), col("st.n_tri").as("n_tri"),
         col("st.nll_micro").as("nll_micro"), col("mean_nll_micro"))
     assert(joined.exceptAll(perRow).isEmpty && perRow.exceptAll(joined).isEmpty)
 
-    // the packaged fast path (what q_lm_quality runs) is the same rows
-    val packaged = LangModel.lmScoreCompiled(docs, "doc_id", "text", model)
+    // the shipped scorer (what q_lm_quality runs) is the same rows
+    val packaged = LangModel.lmScore(docs, "doc_id", "text", model)
     assert(joined.exceptAll(packaged).isEmpty &&
       packaged.exceptAll(joined).isEmpty)
   }
@@ -176,6 +203,24 @@ class LangModelSpec extends SparkSpec {
     assert(reference.exceptAll(compiled).isEmpty &&
       compiled.exceptAll(reference).isEmpty)
     assert(compiled.count() > 0)
+  }
+
+  test("frozen lookups: a wrong input type is an analysis error naming the expression") {
+    import graft.functions.{KnDocCost, LmDocCost, SetHitCount}
+    import org.apache.spark.sql.GraftExprBridge.{column, expression}
+    val df = Seq((1, "a b")).toDF("i", "s")
+      .select(col("i"), col("s"), split(col("s"), " ").as("a"))
+    Seq(
+      "lmdoccost" -> LmDocCost(expression(col("a")), Map("abc" -> 1L), 2L),
+      "kndoccost" -> KnDocCost(expression(col("s")), Map(("a", "b") -> 1L),
+        Map("a" -> 1L), Map("b" -> 1L), 2L),
+      "sethitcount" -> SetHitCount(expression(col("i")), Seq("a"))
+    ).foreach { case (name, e) =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(column(e)))
+      assert(err.getMessage.contains(s"$name expects"),
+        s"$name: ${err.getMessage}")
+    }
   }
 
   test("knBigrams: every smoothed probability is a valid rational in (0, 1]") {

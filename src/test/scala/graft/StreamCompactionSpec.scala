@@ -279,6 +279,20 @@ class StreamCompactionSpec extends SparkSpec {
     assert(StreamState.genLogExists(spark, root))
   }
 
+  test("a root holding only hidden entries reads as the empty sketch and the empty index") {
+    import org.apache.hadoop.fs.Path
+    // what a killed first append plus a stray in-flight file leave
+    Seq("sketch", "index").foreach { kind =>
+      val root = tmp(s"hidden-$kind")
+      hfs.mkdirs(new Path(s"$root/_temporary/0"))
+      hfs.create(new Path(root, ".part-0.parquet.crc")).close()
+      val read =
+        if (kind == "sketch") StreamSketch.readSketch(spark, root)
+        else StreamTextIndex.readIndex(spark, root)
+      assert(read.isEmpty, s"$kind on hidden-only root")
+    }
+  }
+
   test("text index: deletes tombstone, resurrect, and physically retire at compaction") {
     val root = tmp("sci-idx-del")
     StreamTextIndex.upsertBatch(docs, "doc_id", "text", root, 0L)

@@ -277,6 +277,36 @@ class StreamPretrainSpec extends SparkSpec {
     assert(flagged.as[Long].collect().toSet.intersect(got).isEmpty)
   }
 
+  test("a killed first append's _temporary residue does not wedge the ingest") {
+    // a first append killed before its job commit leaves only
+    // `<table>/_temporary/0/`: the table directory exists but holds no
+    // data file, so a reader gated on the directory alone fails
+    // parquet's schema inference on every later batch
+    val fz = StreamPretrain.fit(docs, "doc_id", "text", "lang")
+    val near = Some(graft.streaming.StreamDedup.Config())
+    val maxId = docs.agg(max("doc_id")).head().getLong(0)
+    val b0 = docs.filter(col("doc_id") * 3 <= maxId)
+    def keptAfterIngest(residue: Option[String]): Set[Long] = {
+      val root = tmp()
+      residue.foreach(r => assert(
+        new java.io.File(s"$root/$r/_temporary/0").mkdirs()))
+      StreamPretrain.ingestBatch(b0, "doc_id", "text", "lang", "source",
+        fz, root, 0L, nearDup = near)
+      StreamPretrain.keptDocs(spark, root).select("id").as[Long]
+        .collect().toSet
+    }
+    val clean = keptAfterIngest(None)
+    assert(clean.nonEmpty)
+    Seq("ledger", "near/bands", "near/sigs").foreach { r =>
+      assert(keptAfterIngest(Some(r)) == clean, s"residue under $r")
+    }
+    // the mix-control read of the encoded table answers empty too
+    val encOnly = tmp()
+    assert(new java.io.File(
+      s"${StreamPretrain.encRoot(encOnly)}/_temporary/0").mkdirs())
+    assert(StreamPretrain.liveSourceTokens(spark, encOnly).isEmpty)
+  }
+
   test("the near-dup cluster gate composes at ingest: canonical-only survives, and it bites") {
     val root = tmp()
     val fz = StreamPretrain.fit(docs, "doc_id", "text", "lang")

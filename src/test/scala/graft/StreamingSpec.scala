@@ -463,9 +463,9 @@ class StreamingSpec extends SparkSpec {
     val garbage = "2015-07-20T11:35:42.851+00:00 zzqx wvvj qqkk xxyyzz jjqq wwvv"
     // threshold from the batch scores: the gate must separate the two
     val batchMeans = Seq(inDomain, garbage).toDF("_raw")
-      .select(graft.operators.LangModel
-        .meanNllColumn(org.apache.spark.sql.functions.col("_raw"), costs, oov)
-        .as("m")).as[Long].collect()
+      .select(graft.operators.LangModel.meanNll(graft.operators.LangModel
+        .docCost(org.apache.spark.sql.functions.col("_raw"), costs, oov),
+        "n_tri").as("m")).as[Long].collect()
     assert(batchMeans(0) < batchMeans(1),
       s"in-domain must score below garbage: ${batchMeans.toSeq}")
     val threshold = (batchMeans(0) + batchMeans(1)) / 2
