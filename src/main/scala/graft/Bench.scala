@@ -139,7 +139,7 @@ object Bench {
     val timedRows = timings.groupBy(_.kind).toSeq.sortBy(_._1)
       .map { case (kind, xs) =>
         val ds = xs.map(_.value)
-        f""""$kind":{"n":${ds.size},"p95_sec":${graft.streaming.BatchTimer.p95(ds)}%.3f}"""
+        f""""$kind":{"n":${ds.size},"p95_sec":${graft.streaming.BatchTimer.percentile(ds, 0.95)}%.3f}"""
       }
     val noteRows = notes.groupBy(_.kind).toSeq.sortBy(_._1)
       .map { case (kind, xs) =>

@@ -27,6 +27,19 @@ import org.apache.spark.sql.SparkSession
   *  - 20 retained SQL executions (default 1000): nothing reads them
   *    with the UI off, and a long streaming session would keep every
   *    micro-batch's plan on the heap
+  *  - cached plans may change their output partitioning, and bucketed
+  *    scans are not chosen per plan (Spark 4.1 defaults: no, yes):
+  *    while either default holds, every `persist` plans its frame in a
+  *    cloned session with those settings turned off, and each clone,
+  *    once collected, is cleaned with an `rm -rf` process — one spawn
+  *    per persist (the per-batch ingest frames of
+  *    [[graft.streaming.StreamPretrain]], the durable stats sink's
+  *    per-trigger persist). Both must change: with the first alone the
+  *    session is still cloned. A streaming micro-batch already runs
+  *    without AQE, so its cached plans are unchanged; a batch persist
+  *    keeps AQE. Reads of bucketed tables
+  *    ([[graft.operators.Scale.writeBucketed]]) always scan by bucket.
+  *    `LocalFsSpec` counts zero spawns over 20 persist rounds and a GC
   */
 object GraftSession {
   def builder(cores: Int): SparkSession.Builder =
@@ -43,6 +56,8 @@ object GraftSession {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.GraftLocalFs].getName)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
 
   /** Run `start` with the thread-local scheduler pool set, so the
     * streaming query it launches lands its micro-batch jobs in `pool`

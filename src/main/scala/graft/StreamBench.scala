@@ -1,10 +1,10 @@
 package graft
 
 import graft.model.FilterDef
-import graft.streaming.LogPipeline
+import graft.streaming.{BatchTimer, LogPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** Streaming-cadence benchmark (BASELINE.md: "1 s results / 10 s stats
   * triggers sustained without backlog at generator rate", mirroring the
@@ -72,19 +72,13 @@ object StreamBench {
     FilterDef("f_re", "warn_or_slow", "(warn|slow)"),
     FilterDef("f_svc", "svc0", "service-0 "))
 
-  private def percentile(xs: Seq[Double], p: Double): Double =
-    if (xs.isEmpty) -1.0
-    else {
-      val s = xs.sorted
-      s(math.min(s.size - 1, math.ceil(p * s.size).toInt - 1).max(0))
-    }
-
   def run(spark: SparkSession, ratePerSec: Long = 20000L,
       runtimeSec: Int = 45): Result = {
     val dir = java.nio.file.Files.createTempDirectory("streambench").toString
-    // per-query trigger durations, keyed by query name
+    // per-query trigger durations, keyed by query id (the results
+    // sink names no query)
     val durations = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.ConcurrentLinkedQueue[(Double, Long)]]()
+      java.util.UUID, java.util.concurrent.ConcurrentLinkedQueue[(Double, Long)]]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
@@ -93,7 +87,7 @@ object StreamBench {
         val d = Option(p.durationMs.get("triggerExecution"))
           .map(_.toDouble / 1000.0).getOrElse(-1.0)
         if (d >= 0 && p.numInputRows > 0) {
-          durations.computeIfAbsent(p.name,
+          durations.computeIfAbsent(p.id,
             _ => new java.util.concurrent.ConcurrentLinkedQueue[(Double, Long)]())
             .add((d, p.numInputRows))
         }
@@ -116,50 +110,31 @@ object StreamBench {
     val (rd, sd, warmupMax, rowsIn, rowsMatched) = try {
       val parsed = LogPipeline.parse(generator(spark, ratePerSec))
       val matched = LogPipeline.matches(parsed, registry)
-      var results: org.apache.spark.sql.streaming.StreamingQuery = null
-      var stats: org.apache.spark.sql.streaming.StreamingQuery = null
+      var results: StreamingQuery = null
+      var stats: StreamingQuery = null
       try {
-        // each query in its own FAIR pool: a multi-second stats
-        // micro-batch every 10 s otherwise starves the 1 s results
+        // the shipped sinks, each in its own FAIR pool: a multi-second
+        // stats micro-batch every 10 s otherwise starves the 1 s results
         // cadence — the overlap showed up as a p95 tail (~1.1 s) at
         // 40k+ lines/s
-        results = GraftSession.inPool(spark, "stream_results") {
-          matched
-            .withColumn("date",
-              graft.functions.LogFunctions.dateSuffix(col("ts")))
-            .writeStream.queryName("bench_results")
-            .format("parquet")
-            .option("path", s"$dir/results")
-            .option("checkpointLocation", s"$dir/ckpt-results")
-            .partitionBy("date") // LogPipeline.resultsQuery's layout
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .outputMode("append")
-            .start()
-        }
-        stats = GraftSession.inPool(spark, "stream_stats") {
-          // the stats state is keyed by (filter_id, window) — a
-          // handful of live keys, so 32 state-store partitions are
-          // pure per-trigger commit overhead; 8 is plenty and frees
-          // cores the results query's cadence needs. The conf is
-          // captured at query START, so scoping the set/restore here
-          // affects only this query.
-          val prev = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
-          try LogPipeline.statsFrame(matched, stepSec = 10)
-            .writeStream
-            .format("memory").queryName("bench_stats")
-            .outputMode("update")
-            .trigger(Trigger.ProcessingTime("10 seconds"))
-            .start()
-          finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-        }
+        results = LogPipeline.resultsQuery(matched, s"$dir/results",
+          s"$dir/ckpt-results")
+        // the stats state is keyed by (filter_id, window) — a handful of
+        // live keys, so 32 state-store partitions are pure per-trigger
+        // commit overhead; 8 is plenty and frees cores the results
+        // query's cadence needs. The conf is captured at query START, so
+        // scoping the set/restore here affects only this query.
+        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        try stats = LogPipeline.statsQuery(matched, "bench_stats", stepSec = 10)
+        finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
         Thread.sleep(runtimeSec * 1000L)
       } finally {
         // stop each query independently, null-safe: if the stats
         // start() itself threw, the already-running results query must
         // still be stopped and the listener removed — otherwise it
         // keeps writing in the shared session Bench continues to use
-        def quietStop(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+        def quietStop(q: StreamingQuery): Unit =
           if (q != null)
             try q.stop()
             catch { case e: Throwable =>
@@ -167,16 +142,16 @@ object StreamBench {
             }
         quietStop(results); quietStop(stats)
       }
-      def stat(name: String): (Seq[Double], Long) = {
-        val q = durations.get(name)
+      def stat(query: StreamingQuery): (Seq[Double], Long) = {
+        val q = durations.get(query.id)
         if (q == null) (Seq.empty, 0L)
         else {
           val xs = scala.jdk.CollectionConverters.CollectionHasAsScala(q).asScala.toSeq
           (xs.map(_._1), xs.map(_._2).sum)
         }
       }
-      val (rdAll, rRows) = stat("bench_results")
-      val (sdAll, _) = stat("bench_stats")
+      val (rdAll, rRows) = stat(results)
+      val (sdAll, _) = stat(stats)
       // The first few results triggers pay one-time costs (whole-stage
       // codegen compile, parquet sink/committer init) that exist at any
       // rate — the reference's Storm workers pay the same JIT ramp
@@ -224,12 +199,13 @@ object StreamBench {
     // accumulated against the generator.
     val offered = ratePerSec * (runtimeSec - 5).max(1)
     val sustained = rd.nonEmpty && sd.nonEmpty &&
-      percentile(rd, 0.95) < 1.0 && percentile(sd, 0.95) < 10.0 &&
+      BatchTimer.percentile(rd, 0.95) < 1.0 &&
+      BatchTimer.percentile(sd, 0.95) < 10.0 &&
       rowsIn >= (offered * 0.9)
     Result(ratePerSec, runtimeSec,
-      rd.size, percentile(rd, 0.5), percentile(rd, 0.95),
+      rd.size, BatchTimer.percentile(rd, 0.5), BatchTimer.percentile(rd, 0.95),
       if (rd.isEmpty) -1 else rd.max, warmupMax,
-      sd.size, percentile(sd, 0.5), percentile(sd, 0.95),
+      sd.size, BatchTimer.percentile(sd, 0.5), BatchTimer.percentile(sd, 0.95),
       if (sd.isEmpty) -1 else sd.max,
       rowsIn, rowsMatched, sustained)
   }

@@ -77,11 +77,13 @@ object BatchTimer {
     out.toSeq
   }
 
-  /** Nearest-rank p95 (the StreamBench convention). */
-  def p95(xs: Seq[Double]): Double =
+  /** Nearest-rank `p` percentile (0 < p ≤ 1) of `xs`, −1 when empty —
+    * the batch-sample p95 and [[graft.StreamBench]]'s trigger
+    * percentiles. */
+  def percentile(xs: Seq[Double], p: Double): Double =
     if (xs.isEmpty) -1.0
     else {
       val s = xs.sorted
-      s(math.min(s.size - 1, math.ceil(s.size * 0.95).toInt - 1))
+      s(math.min(s.size - 1, math.ceil(p * s.size).toInt - 1).max(0))
     }
 }

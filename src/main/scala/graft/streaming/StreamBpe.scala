@@ -36,21 +36,31 @@ object StreamBpe {
   def encodeBatch(batch: DataFrame, idCol: String, textCol: String,
       learned: Bpe.Learned, root: String, batchId: Long): Unit =
     BatchTimer.timed("bpe.encode") {
-    Bpe.encodeIdsWith(batch, idCol, textCol, learned)
-      .withColumn("batch_id", BatchConst(lit(batchId)))
-      .write.mode("append").parquet(root)
+    appendEncoded(Bpe.encodeIdsWith(batch, idCol, textCol, learned)
+      .withColumn("batch_id", BatchConst(lit(batchId))), root)
     // generation row LAST (the StreamTextIndex crash contract): a
     // crash above leaves the previous version fully served
     StreamState.appendGens(batch.select(col(idCol)), root, batchId)
   }
+
+  // The encoded table is the one state table not written through
+  // [[StreamState.append]]: its rows land as the frame producing them
+  // is partitioned (the encode projection, the compaction fold's
+  // distinct), with no repartition. It is unpartitioned, so
+  // `StreamState.append` would make every append — compaction folds of
+  // a corpus-sized token table included — one file from one task.
+  // How many files an encode batch should write is a layout decision of
+  // its own (ROADMAP Direction B), so this writer keeps today's count.
+  private def appendEncoded(df: DataFrame, root: String): Unit =
+    df.write.mode("append").parquet(root)
 
   /** DELETE documents from the live encoded table — the compliance
     * path a training-data store needs: one tombstone generation per
     * id ([[StreamState.appendGens]]), the document's pieces stop
     * serving from the next read, a later [[encodeBatch]] under a
     * higher batch id resurrects it, and [[compact]] physically
-    * retires the dead rows (same race-proof guard as
-    * [[StreamTextIndex.compactSnapshot]]). */
+    * retires the dead rows (the race-proof guard of
+    * [[StreamState.newestLive]]). */
   def deleteDocs(ids: DataFrame, idCol: String, root: String,
       batchId: Long): Unit =
     BatchTimer.timed("bpe.delete") {
@@ -101,26 +111,13 @@ object StreamBpe {
     StreamState.compactGenLog(spark, root)
   }
 
+  /** The compaction body over an explicit snapshot: each document's
+    * newest live generation ([[StreamState.newestLive]]), distinct. */
   private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit = {
-    if (snapshot.isEmpty) return
-    val df = spark.read.parquet(snapshot: _*)
-    val idc = df.columns.head
-    val byId = org.apache.spark.sql.expressions.Window.partitionBy(idc)
-    val newest = df.withColumn("_g", max("batch_id").over(byId))
-      .filter(col("batch_id") === col("_g"))
-    // physical retire of tombstoned documents — the StreamTextIndex
-    // guard: drop only when the tombstone is at least the newest
-    // IN-SNAPSHOT generation (monotone batch ids make that safe
-    // beside a concurrent resurrection)
-    val tombs = StreamState.tombstones(spark, root)
-    val kept =
-      if (tombs == null) newest
-      else newest.join(
-          broadcast(tombs.withColumnRenamed("id", idc)), Seq(idc), "left")
-        .filter(col("_tomb").isNull || col("_tomb") < col("_g"))
-    kept.select(df.columns.map(col): _*).distinct()
-      .write.mode("append").parquet(root)
-    StreamState.deleteFiles(spark, root, snapshot)
-  }
+      snapshot: Seq[String]): Unit =
+    StreamState.mergeAndRetire(spark, root, snapshot) { snap =>
+      appendEncoded(
+        StreamState.newestLive(snap, root, snap.columns.head).distinct(),
+        root)
+    }
 }

@@ -73,20 +73,6 @@ object StreamDedup {
   private def sigsPath(root: String): String = s"$root/sigs"
   private def labelsPath(root: String): String = s"$root/labels"
 
-  /** Ids whose newest generation is a tombstone, or null when no
-    * deletion ever happened (the common case — zero read-side cost
-    * until then). Deletions are compliance events, so the set is
-    * broadcast-small by assumption, like the text index's exclusion.
-    * (r17) The no-delete-ever case is answered by the tombstone-
-    * presence marker — one FS probe — instead of a groupBy aggregate
-    * over the generation log: every generation-tracked upsert
-    * consulted deadIds per micro-batch, so an ingest that never
-    * deletes paid a log-sized job per batch for an always-empty set. */
-  private def deadIds(spark: SparkSession, root: String): DataFrame =
-    if (!StreamState.tombstonesExist(spark, root)) null
-    else StreamState.updatedGens(spark, root)
-      .filter(col("_del")).select("id")
-
   private def dropDead(df: DataFrame, dead: DataFrame): DataFrame =
     if (dead == null) df
     else df.join(broadcast(dead), Seq("id"), "left_anti")
@@ -121,7 +107,7 @@ object StreamDedup {
     } else if (batchId >= 0) {
       StreamState.appendGens(batch.select(col(idCol)), root, batchId)
     }
-    val dead = deadIds(spark, root)
+    val dead = StreamState.deadIds(spark, root)
     // the batch's signature relation feeds banding, verification, and
     // the index append — persist or it recomputes per branch
     val sig = Dedup.signatureRelation(batch, idCol, textCol,
@@ -155,15 +141,6 @@ object StreamDedup {
         // settle, the micro-batch retries everything, and the readers
         // are duplicate-proof (dropDuplicates on sigs, distinct() on
         // candidates), so a replayed append is absorbed.
-        // Append layout: repartition ON the partition column first
-        // (the StreamTextIndex bucket-write precedent): the persisted
-        // 32-partition frames each hold all dirBuckets values, so a
-        // direct partitionBy write fans out to tasks×dirBuckets ≈
-        // 2,000 tiny files PER APPEND — measured as the dominant
-        // per-batch cost (dedup.upsert p95 15 s at sf0.1 vs 0.6 s for
-        // the whole-corpus batch operator; file creation plus every
-        // later probe listing the litter). One small shuffle buys one
-        // file per touched directory.
         val sigOut = sig
           .withColumn("pid", pmod(hash(col("id")), lit(cfg.dirBuckets)))
         @volatile var pairs: DataFrame = null
@@ -229,11 +206,8 @@ object StreamDedup {
           },
           () => BatchTimer.timed("dedup.upsert.append") {
             StreamState.inParallel(
-              () => banded.repartition(col("pb")).write.mode("append")
-                .partitionBy("pb").parquet(bandsPath(root)),
-              () => sigOut.repartition(col("pid"))
-                .write.mode("append").partitionBy("pid")
-                .parquet(sigsPath(root)))
+              () => StreamState.append(banded, bandsPath(root), Some("pb")),
+              () => StreamState.append(sigOut, sigsPath(root), Some("pid")))
           })
         pairs
       } finally banded.unpersist(false)
@@ -304,7 +278,7 @@ object StreamDedup {
       .join(affected, Seq("cluster"), "left_semi").select("id", "pl")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val liveMembers = dropDead(members, deadIds(spark, root))
+      val liveMembers = dropDead(members, StreamState.deadIds(spark, root))
       // the affected components' live pair set, recomputed from the
       // index's own signatures (pairs only ever exist inside one
       // cluster, so the member set closes over every edge we touch);
@@ -347,10 +321,7 @@ object StreamDedup {
         try {
           val outDirs = out.select("pl").distinct()
             .collect().map(_.getInt(0)).toSet
-          if (outDirs.nonEmpty)
-            out.repartition(col("pl")).write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("pl").parquet(path)
+          if (outDirs.nonEmpty) StreamState.overwriteDirs(out, path, "pl")
           // dynamic overwrite only rewrites directories it has rows
           // for — a directory whose every row was affected and got no
           // replacement must be emptied by hand
@@ -418,9 +389,7 @@ object StreamDedup {
       val labels = Dedup.clustersDeltaScoped(deltaPairs)
       try {
         if (!labels.isEmpty)
-          withPl(labels).repartition(col("pl"))
-            .write.mode("overwrite").partitionBy("pl")
-            .parquet(path)
+          StreamState.overwriteDirs(withPl(labels), path, "pl")
       } finally StreamState.release(labels)
     } else {
     val existing = spark.read.parquet(path).select("id", "cluster")
@@ -443,10 +412,7 @@ object StreamDedup {
           .join(touched, Seq("pl"), "left_semi")
           .localCheckpoint(true)
         try {
-          if (!toWrite.isEmpty)
-            toWrite.repartition(col("pl")).write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("pl").parquet(path)
+          if (!toWrite.isEmpty) StreamState.overwriteDirs(toWrite, path, "pl")
         } finally StreamState.release(toWrite)
       } finally StreamState.release(updated)
     } else if (edges.isEmpty) {
@@ -519,11 +485,8 @@ object StreamDedup {
         coalesce(col("_nc"), col("cluster")).as("cluster"))
       .unionByName(freshDf)
       .localCheckpoint(true)
-    try {
-      withPl(toWrite).repartition(col("pl")).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pl").parquet(path)
-    } finally StreamState.release(toWrite)
+    try StreamState.overwriteDirs(withPl(toWrite), path, "pl")
+    finally StreamState.release(toWrite)
     } // relabel/fresh non-empty
     } // driver union-find branch
     } // labels-exist branch
@@ -549,7 +512,7 @@ object StreamDedup {
     // same call, so dead rows only exist inside a crashed delete's
     // redelivery window (and cost nothing when no delete ever ran)
     dropDead(spark.read.parquet(labelsPath(root)).select("id", "cluster"),
-      deadIds(spark, root))
+      StreamState.deadIds(spark, root))
   }
 
   /** Whether any labels are currently folded ([[upsertBatchWithLabels]]
@@ -590,7 +553,7 @@ object StreamDedup {
     */
   def indexPairs(spark: SparkSession, root: String,
       cfg: Config = Config()): DataFrame = {
-    val dead = deadIds(spark, root)
+    val dead = StreamState.deadIds(spark, root)
     val banded = dropDead(spark.read.parquet(bandsPath(root)), dead)
       .select("id", "band", "bucket").distinct()
     val cand = banded.as("a").join(banded.as("b"),
@@ -635,17 +598,13 @@ object StreamDedup {
     // the fold. Safe beside a concurrent resurrection: resurrecting IS
     // an upsert, so the id's fresh rows land outside the snapshot and
     // survive the retire regardless of what the fold dropped
-    val dead = deadIds(spark, root)
+    val dead = StreamState.deadIds(spark, root)
     def fold(path: String, snapshot: Seq[String], keyCols: Seq[String],
-        partCol: String): Unit = {
-      if (snapshot.isEmpty) return
-      dropDead(spark.read.option("basePath", path).parquet(snapshot: _*),
-          dead)
-        .dropDuplicates(keyCols)
-        .repartition(col(partCol))
-        .write.mode("append").partitionBy(partCol).parquet(path)
-      StreamState.deleteFiles(spark, path, snapshot)
-    }
+        partCol: String): Unit =
+      StreamState.mergeAndRetire(spark, path, snapshot) { snap =>
+        StreamState.append(dropDead(snap, dead).dropDuplicates(keyCols),
+          path, Some(partCol))
+      }
     fold(bandsPath(root), bandsSnap, Seq("id", "band", "bucket"), "pb")
     fold(sigsPath(root), sigsSnap, Seq("id"), "pid")
     // fold the generation log itself (newest row per id, tombstones

@@ -152,7 +152,7 @@ object StreamIvfPq {
       nprobe: Int = 2, shortlist: Int = 200): DataFrame =
     Similarity.queryIvfPqTable(spark, resolve(spark, root), corpus,
       idCol, vecCol, queryVec, kTop, nprobe, shortlist,
-      excludeIds = deadDocs(spark, root))
+      excludeIds = StreamState.deadIds(spark, root))
 
   /** Encode + append one micro-batch under the frozen model at
     * `path`. One scan of the batch; writes only the touched cell
@@ -165,15 +165,12 @@ object StreamIvfPq {
     val idx = Similarity.readIvfPqMeta(spark, path)
     val cells = Similarity.assignCells(batch, idCol, vecCol,
       idx.centroids, idx.scale)
-    Similarity.pqEncode(batch, idCol, vecCol, idx.codebooks, idx.scale)
-      .join(cells, Seq(idCol))
-      .select(col(idCol), col("codes"), BatchConst(lit(batchId)).as("batch_id"),
-        col("cluster"))
-      // one file per touched cell, not tasks×cells (the StreamDedup
-      // append lesson: partitioned appends from a many-partition frame
-      // litter the directory and every later probe pays the listing)
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster").parquet(path)
+    StreamState.append(
+      Similarity.pqEncode(batch, idCol, vecCol, idx.codebooks, idx.scale)
+        .join(cells, Seq(idCol))
+        .select(col(idCol), col("codes"),
+          BatchConst(lit(batchId)).as("batch_id"), col("cluster")),
+      path, Some("cluster"))
     // generation row LAST (the StreamTextIndex crash contract): a
     // crash above is healed by the at-least-once redelivery, which
     // re-appends deterministic rows AND the generation
@@ -189,16 +186,6 @@ object StreamIvfPq {
       batchId: Long): Unit =
     StreamState.appendGens(ids.select(col(idCol)), root, batchId,
       del = true)
-
-  /** Ids whose newest generation-log entry is a tombstone — the
-    * read-side exclusion set (single `id` column; null when no log
-    * exists). Empty until a delete happens, tiny after, broadcast
-    * beside the partition-pruned probe read. */
-  private[graft] def deadDocs(spark: SparkSession,
-      root: String): DataFrame =
-    if (!StreamState.genLogExists(spark, root)) null
-    else StreamState.updatedGens(spark, root).filter(col("_del"))
-      .select("id")
 
   /** Per-cell row counts — the fill-imbalance signal that tells an
     * operator when the frozen coarse quantizer has drifted from the
@@ -246,34 +233,21 @@ object StreamIvfPq {
 
   /** The compaction body over an explicit snapshot — split out so the
     * interleaving spec can pin the snapshot, land a concurrent
-    * `upsertBatch`, and prove the late batch survives. */
+    * `upsertBatch`, and prove the late batch survives. Latest-wins PER
+    * ID ACROSS ALL CELLS: this is the point where a re-ingested id's
+    * older encoding — possibly in a different cell partition — is
+    * actually removed, and tombstoned ids ([[deleteVecs]]) retire
+    * under [[StreamState.newestLive]]'s race-proof guard. Rows of one
+    * id in one batch are retries and identical (deterministic codes),
+    * so any one of them is the id's row. */
   private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      path: String, snapshot: Seq[String]): Unit = {
-    if (snapshot.isEmpty) return
-    val df = spark.read.option("basePath", path).parquet(snapshot: _*)
-    val idCol = df.columns.head
-    // latest-wins PER ID ACROSS ALL CELLS (deterministic): this is the
-    // point where a re-ingested id's older encoding — possibly in a
-    // different cell partition — is actually removed
-    val byId = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy(col("batch_id").desc)
-    val newest = df.withColumn("_rk", row_number().over(byId))
-      .filter(col("_rk") === 1)
-    // physical retire of tombstoned ids ([[deleteVecs]]) — the
-    // race-proof guard: drop only when the tombstone is at least the
-    // id's newest IN-SNAPSHOT batch, so a resurrection upsert landing
-    // mid-compaction (outside the snapshot) survives untouched
-    val tombs = StreamState.tombstones(spark, root)
-    val kept =
-      if (tombs == null) newest
-      else newest.join(
-          broadcast(tombs.withColumnRenamed("id", idCol)), Seq(idCol),
-          "left")
-        .filter(col("_tomb").isNull || col("_tomb") < col("batch_id"))
-    kept.withColumn("batch_id", lit(-1L))
-      .select(col(idCol), col("codes"), col("batch_id"), col("cluster"))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster").parquet(path)
-    StreamState.deleteFiles(spark, path, snapshot)
-  }
+      path: String, snapshot: Seq[String]): Unit =
+    StreamState.mergeAndRetire(spark, path, snapshot) { snap =>
+      val idCol = snap.columns.head
+      StreamState.append(
+        StreamState.newestLive(snap, root, idCol).dropDuplicates(idCol)
+          .select(col(idCol), col("codes"), lit(-1L).as("batch_id"),
+            col("cluster")),
+        path, Some("cluster"))
+    }
 }

@@ -481,10 +481,10 @@ object StreamPretrain {
       () => StreamBpe.encodeBatch(kept, idCol, textCol, fz.tokenizer,
         encRoot(root), batchId),
       () => BatchTimer.timed("pretrain.manifest") {
-        kept.select(col(idCol).as("id"), col(sourceCol).as("source"))
-          .withColumn("batch_id", BatchConst(lit(batchId)))
-          .repartition(1)
-          .write.mode("append").parquet(keptRoot(root))
+        StreamState.append(
+          kept.select(col(idCol).as("id"), col(sourceCol).as("source"))
+            .withColumn("batch_id", BatchConst(lit(batchId))),
+          keptRoot(root), None)
       })
     // OPT-IN gate accounting — the "why did my corpus shrink" row:
     // one tiny record per batch with each gate's individual pass
@@ -519,21 +519,20 @@ object StreamPretrain {
       val gr = gateRow.get
       def n(c: String): Long = gr.getLong(gr.fieldIndex(c))
       val nIn = n("n_in")
-      Seq((batchId, nIn, slots(0): Long, n("n_gopher"), n("n_quality"),
-          n("n_kn"), fz.decon.map(_ => n("n_decon")),
-          Option(slots(1)).map(_.toLong),
-          Option(slots(2)).map(nIn - _.toLong),
-          Option(slots(3)).map(_.toLong), slots(4): Long))
-        .toDF("batch_id", "n_in", "n_fresh", "n_gopher", "n_quality",
-          "n_kn", "n_decon", "n_near", "n_sem", "n_mix", "n_kept")
-        .repartition(1)
-        .write.mode("append").parquet(statsRoot(root))
+      StreamState.append(
+        Seq((batchId, nIn, slots(0): Long, n("n_gopher"), n("n_quality"),
+            n("n_kn"), fz.decon.map(_ => n("n_decon")),
+            Option(slots(1)).map(_.toLong),
+            Option(slots(2)).map(nIn - _.toLong),
+            Option(slots(3)).map(_.toLong), slots(4): Long))
+          .toDF("batch_id", "n_in", "n_fresh", "n_gopher", "n_quality",
+            "n_kn", "n_decon", "n_near", "n_sem", "n_mix", "n_kept"),
+        statsRoot(root), None)
     }
     BatchTimer.timed("pretrain.ledger") {
-      freshAllP.select(col("_fp"))
-        .withColumn("batch_id", BatchConst(lit(batchId)))
-        .repartition(1)
-        .write.mode("append").parquet(ledgerRoot(root))
+      StreamState.append(freshAllP.select(col("_fp"))
+        .withColumn("batch_id", BatchConst(lit(batchId))),
+        ledgerRoot(root), None)
     }
     } finally {
       kept.unpersist(false)
@@ -752,14 +751,6 @@ object StreamPretrain {
       batchId: Long): Unit =
     StreamBpe.deleteDocs(ids, idCol, encRoot(root), batchId)
 
-  /** Ids whose newest encoded-table generation is a tombstone —
-    * [[forgetDocs]]' read-side exclusion, shared with the kept
-    * table so both faces forget together. */
-  private def forgotten(spark: SparkSession, root: String): DataFrame =
-    if (!StreamState.genLogExists(spark, encRoot(root))) null
-    else StreamState.updatedGens(spark, encRoot(root))
-      .filter(col("_del")).select("id")
-
   /** Ids currently known NON-canonical in the near-dup cluster index
     * (an earlier-id near-dup exists), or null when no near-dup gate
     * ever ran — the read-side face of the [[ingestBatch]] `nearDup`
@@ -789,7 +780,9 @@ object StreamPretrain {
   def keptDocs(spark: SparkSession, root: String): DataFrame = {
     val raw = spark.read.parquet(keptRoot(root))
       .select("id", "source").distinct()
-    val dead = forgotten(spark, root)
+    // forgotten documents: the encoded table's dead set, so the kept
+    // and encoded faces forget together
+    val dead = StreamState.deadIds(spark, encRoot(root))
     val base = if (dead == null) raw
       else raw.join(broadcast(dead), Seq("id"), "left_anti")
     val nc = nearNonCanonical(spark, root)

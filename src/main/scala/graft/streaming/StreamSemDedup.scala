@@ -171,9 +171,7 @@ object StreamSemDedup {
       StreamState.inParallel(
         () => refused = cross.fold(intra)(intra.union).distinct()
           .localCheckpoint(true),
-        // one file per touched cell (the StreamDedup append lesson)
-        () => ann.repartition(col("cl"))
-          .write.mode("append").partitionBy("cl").parquet(vecsPath(root)))
+        () => StreamState.append(ann, vecsPath(root), Some("cl")))
       refused
     } finally ann.unpersist(false)
   }
@@ -187,12 +185,8 @@ object StreamSemDedup {
       StreamState.listDataFiles(spark, vecsPath(root)))
 
   private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit = {
-    if (snapshot.isEmpty) return
-    spark.read.option("basePath", vecsPath(root)).parquet(snapshot: _*)
-      .dropDuplicates("id")
-      .repartition(col("cl"))
-      .write.mode("append").partitionBy("cl").parquet(vecsPath(root))
-    StreamState.deleteFiles(spark, vecsPath(root), snapshot)
-  }
+      snapshot: Seq[String]): Unit =
+    StreamState.mergeAndRetire(spark, vecsPath(root), snapshot) { snap =>
+      StreamState.append(snap.dropDuplicates("id"), vecsPath(root), Some("cl"))
+    }
 }

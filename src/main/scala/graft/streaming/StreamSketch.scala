@@ -55,12 +55,8 @@ object StreamSketch {
         "checkpoint reset, its counts are NOT ingested")
       return
     }
-    Sketch.cmsSketch(batch, textCol, depth, hexDigits)
-      .withColumn("batch_id", BatchConst(lit(batchId)))
-      // one file per row-partition (the StreamDedup append lesson —
-      // the delta is depth×width rows; tasks×depth files is litter)
-      .repartition(col("r"))
-      .write.mode("append").partitionBy("r").parquet(root)
+    StreamState.append(Sketch.cmsSketch(batch, textCol, depth, hexDigits)
+      .withColumn("batch_id", BatchConst(lit(batchId))), root, Some("r"))
   }
 
   /** The highest batch_id folded into a compaction, −1 if never
@@ -167,12 +163,14 @@ object StreamSketch {
     // generation plus deltas above the prior watermark (stale merges
     // and already-folded deltas left by earlier crashes contribute
     // nothing twice)
-    snap.filter(col("batch_id") > prior || col("batch_id") === mergedId(prior))
-      .dropDuplicates("batch_id", "r", "b")
-      .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-      .withColumn("batch_id", lit(mergedId(newWm)))
-      .repartition(col("r"))
-      .write.mode("append").partitionBy("r").parquet(root)
+    StreamState.append(
+      snap.filter(col("batch_id") > prior || col("batch_id") === mergedId(prior))
+        .dropDuplicates("batch_id", "r", "b")
+        .groupBy("r", "b").agg(sum("cnt").as("cnt"))
+        .withColumn("batch_id", lit(mergedId(newWm))),
+      root, Some("r"))
+    // the watermark lands between the append and the retire (see
+    // [[compact]]), so this body is not [[StreamState.mergeAndRetire]]
     writeWatermark(spark, root, newWm)
     StreamState.deleteFiles(spark, root, snapshot)
   }

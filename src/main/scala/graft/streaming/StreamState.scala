@@ -2,27 +2,43 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-/** File-level snapshot plumbing shared by the incremental-state
-  * compactors ([[StreamTextIndex]], [[StreamSketch]], [[StreamIvfPq]]).
+/** The one home of the incremental state-table format. Every streaming
+  * index ([[StreamTextIndex]], [[StreamSketch]], [[StreamIvfPq]],
+  * [[StreamSemDedup]], [[StreamBpe]], [[StreamDedup]],
+  * [[StreamPretrain]]) writes, rewrites, compacts and hides deletions
+  * through the helpers here, so each table stays a replay-safe sink
+  * under one contract:
   *
-  * The compaction contract they all follow is MERGE-AND-RETIRE:
-  * snapshot the data-file list, compute the merged delta FROM THAT
-  * SNAPSHOT ONLY, append it as new files, then delete exactly the
-  * snapshot files. An `upsertBatch` that lands at any point during the
-  * compaction writes files that are not in the snapshot, so they are
-  * never deleted — compaction is safe beside a live ingest, which is
-  * the whole point of an at-ingest index (the reference's supervisor
-  * runs its 5-minute maintenance loop beside live result writes,
-  * `supervisor/filter_manager.go:519-576`). This replaces the earlier
-  * `mode("overwrite")` design, whose read→rewrite window silently
-  * erased a concurrent append.
+  *  - APPEND ([[append]]): a partitioned table is repartitioned on its
+  *    directory column first, so an append writes one file per touched
+  *    directory; an unpartitioned table gets one file per append.
+  *  - DIRECTORY REWRITE ([[overwriteDirs]]): dynamic partition
+  *    overwrite of exactly the directories the frame has rows for.
+  *  - MERGE-AND-RETIRE ([[mergeAndRetire]]): snapshot the data-file
+  *    list, compute the merged delta FROM THAT SNAPSHOT ONLY, append it
+  *    as new files, then delete exactly the snapshot files. An upsert
+  *    that lands at any point during the compaction writes files that
+  *    are not in the snapshot, so they are never deleted — compaction
+  *    is safe beside a live ingest, which is the whole point of an
+  *    at-ingest index (the reference's supervisor runs its 5-minute
+  *    maintenance loop beside live result writes,
+  *    `supervisor/filter_manager.go:519-576`). This replaces the
+  *    earlier `mode("overwrite")` design, whose read→rewrite window
+  *    silently erased a concurrent append.
+  *  - DELETION: tombstone generations in a per-root generation log
+  *    (`_docs`), read as one dead-id set ([[deadIds]]) and retired
+  *    physically at compaction by one rule ([[newestLive]]).
   *
-  * Sidecars (`_meta`, `_graft_buckets`, `<root>_watermark`) are
-  * underscore/dot-prefixed or siblings, so they are never part of a
-  * snapshot and survive every compaction — a crash can no longer lose
-  * a trained model or a bucket modulus.
+  * Sidecars (`_meta`, `_docs`, `_graft_buckets`, `<root>_watermark`)
+  * are underscore/dot-prefixed or siblings, so they are never part of
+  * a data snapshot and survive every compaction — a crash can no
+  * longer lose a trained model or a bucket modulus.
   */
 private[graft] object StreamState {
+
+  import graft.functions.BatchConst
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
 
   private def fs(spark: SparkSession, root: String) =
     new org.apache.hadoop.fs.Path(root)
@@ -55,7 +71,7 @@ private[graft] object StreamState {
     * warns that all paths were ignored; naming the entries does not
     * depend on how Spark treats such a root. */
   def readTable(spark: SparkSession, root: String,
-      mergeSchema: Boolean = false): org.apache.spark.sql.DataFrame = {
+      mergeSchema: Boolean = false): DataFrame = {
     val entries = fs(spark, root).listStatus(new org.apache.hadoop.fs.Path(root))
       .filterNot(hidden).map(_.getPath.toString)
     spark.read.option("basePath", root)
@@ -86,7 +102,7 @@ private[graft] object StreamState {
     * face of [[graft.GraftSession.releaseCheckpoint]] (see there for
     * why `Dataset.unpersist` cannot do this and why a
     * `getPersistentRDDs` sweep must not run beside live queries). */
-  def release(df: org.apache.spark.sql.DataFrame): Unit =
+  def release(df: DataFrame): Unit =
     graft.GraftSession.releaseCheckpoint(df)
 
   /** Run independent Spark actions on concurrent driver threads and
@@ -151,6 +167,49 @@ private[graft] object StreamState {
     }
   }
 
+  // ---- the table layout ---------------------------------------------
+
+  /** Append `df` to the state table at `path`. With a directory column
+    * `dir`, the frame is repartitioned on it first: a `partitionBy`
+    * write straight from a many-partition frame opens one file per task
+    * per directory (about 2,000 tiny files per append measured on the
+    * near-dup index, the dominant per-batch cost), so one small shuffle
+    * buys one file per touched directory. Without `dir`, the append is
+    * one file. */
+  def append(df: DataFrame, path: String, dir: Option[String]): Unit =
+    dir match {
+      case Some(d) =>
+        df.repartition(col(d)).write.mode("append").partitionBy(d).parquet(path)
+      case None => df.repartition(1).write.mode("append").parquet(path)
+    }
+
+  /** Replace exactly the `dir` directories `df` has rows for (dynamic
+    * partition overwrite, one file each); every other directory is
+    * left as it is. Readers gate on [[hasDataFiles]], so a first write
+    * into a table whose directories are all empty needs no static
+    * overwrite. */
+  def overwriteDirs(df: DataFrame, path: String, dir: String): Unit =
+    df.repartition(col(dir)).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(dir).parquet(path)
+
+  /** MERGE-AND-RETIRE over a pinned `snapshot` of `path`'s data files
+    * (see the object header): `merge` receives the snapshot's rows,
+    * read with `path` as the partition base, and appends the folded
+    * rows in the table's layout; the snapshot files are deleted after
+    * it returns. An empty snapshot is a no-op. A crash between the
+    * append and the retire leaves both copies on disk — every reader
+    * is duplicate-proof, so that costs space until the next
+    * compaction, never correctness. `mergeSchema` is for tables whose
+    * files predate a column (the generation log's `del`). */
+  def mergeAndRetire(spark: SparkSession, path: String, snapshot: Seq[String],
+      mergeSchema: Boolean = false)(merge: DataFrame => Unit): Unit =
+    if (snapshot.nonEmpty) {
+      merge(spark.read.option("basePath", path)
+        .option("mergeSchema", mergeSchema.toString).parquet(snapshot: _*))
+      deleteFiles(spark, path, snapshot)
+    }
+
   // ---- per-document generation log --------------------------------
   //
   // Shared by the latest-wins incremental tables (StreamTextIndex,
@@ -163,10 +222,6 @@ private[graft] object StreamState {
   // live tombstone) — empty until an update/delete happens, tiny
   // after, broadcastable beside any pruned read. No corpus-wide
   // window anywhere on the read path.
-
-  import graft.functions.BatchConst
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions._
 
   def genLogPath(root: String): String = s"$root/_docs"
 
@@ -240,12 +295,9 @@ private[graft] object StreamState {
       ensure(awareMarkerPath(root))
     }
     if (del) ensure(tombMarkerPath(root))
-    ids.toDF("id").distinct()
+    append(ids.toDF("id").distinct()
       .withColumn("batch_id", BatchConst(lit(batchId)))
-      .withColumn("del", lit(del))
-      // one file per batch; the distinct stays parallel
-      .repartition(1)
-      .write.mode("append").parquet(genLogPath(root))
+      .withColumn("del", lit(del)), genLogPath(root), None)
   }
 
   /** The log with the tombstone flag normalized (rows written before
@@ -284,13 +336,46 @@ private[graft] object StreamState {
   }
 
   /** Newest tombstone per document, or null when the log (or any
-    * tombstone) does not exist — the physical-retire input for
-    * compaction folds. The presence marker answers the
+    * tombstone) does not exist. The presence marker answers the
     * no-delete-ever case without a job. */
   def tombstones(spark: SparkSession, root: String): DataFrame =
     if (!tombstonesExist(spark, root)) null
     else readGenLog(spark, root).filter(col("del"))
       .groupBy("id").agg(max("batch_id").as("_tomb"))
+
+  /** Ids whose newest generation is a tombstone — the read-side
+    * exclusion set of every index with deletions (one `id` column), or
+    * null when no deletion ever committed under `root`: the common case
+    * costs one marker probe, never an aggregate over the log.
+    * Deletions are compliance events, so the set is broadcast-small by
+    * assumption. */
+  def deadIds(spark: SparkSession, root: String): DataFrame =
+    if (!tombstonesExist(spark, root)) null
+    else updatedGens(spark, root).filter(col("_del")).select("id")
+
+  /** The physical-retire rule of a compaction fold over a snapshot of a
+    * (… `idCol` …, batch_id) table: keep each id's newest IN-SNAPSHOT
+    * generation, and drop it when its tombstone is at or past that
+    * generation. Race-proof beside a live ingest: batch ids are
+    * monotone, so no snapshot row can belong to a generation newer than
+    * such a tombstone, and a resurrection landing concurrently writes
+    * outside the snapshot (a newer in-snapshot generation disables the
+    * drop by the guard itself). A tombstone not yet visible at fold
+    * time only leaves the rows for the NEXT compaction — the read-side
+    * exclusion already hides them. Same columns out as in. */
+  def newestLive(df: DataFrame, root: String, idCol: String): DataFrame = {
+    val newest = df
+      .withColumn("_gen", max("batch_id").over(
+        org.apache.spark.sql.expressions.Window.partitionBy(idCol)))
+      .filter(col("batch_id") === col("_gen"))
+    val tombs = tombstones(df.sparkSession, root)
+    val kept =
+      if (tombs == null) newest
+      else newest.join(broadcast(tombs.withColumnRenamed("id", idCol)),
+          Seq(idCol), "left")
+        .filter(col("_tomb").isNull || col("_tomb") < col("_gen"))
+    kept.select(df.columns.map(col): _*)
+  }
 
   // ---- versioned publish (the StreamIvfPq refit pattern, shared) --
 
@@ -417,17 +502,14 @@ private[graft] object StreamState {
     * never-resurrected document keeps its tombstone row forever;
     * that row IS the deletion record). */
   def compactGenLog(spark: SparkSession, root: String): Unit = {
-    if (!genLogExists(spark, root)) return
     val log = genLogPath(root)
-    val snap = listDataFiles(spark, log)
-    if (snap.isEmpty) return
-    withDel(spark.read.option("mergeSchema", "true").parquet(snap: _*))
-      .groupBy("id")
-      .agg(max(struct(col("batch_id"), col("del"))).as("_m"))
-      .select(col("id"), col("_m.batch_id").as("batch_id"),
-        col("_m.del").as("del"))
-      .repartition(1)
-      .write.mode("append").parquet(log)
-    deleteFiles(spark, log, snap)
+    mergeAndRetire(spark, log, listDataFiles(spark, log),
+        mergeSchema = true) { snap =>
+      append(withDel(snap)
+        .groupBy("id")
+        .agg(max(struct(col("batch_id"), col("del"))).as("_m"))
+        .select(col("id"), col("_m.batch_id").as("batch_id"),
+          col("_m.del").as("del")), log, None)
+    }
   }
 }

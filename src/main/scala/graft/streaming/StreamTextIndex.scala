@@ -137,12 +137,11 @@ object StreamTextIndex {
         require(chosen > 0, s"buckets must be positive: $chosen")
         claimModulus(spark, root, buckets, chosen)
       }
-    batch.select(col(idCol).as("id"),
+    val postings = batch.select(col(idCol).as("id"),
         explode(TextFunctions.tokenSet(lower(col(textCol)))).as("tok"))
       .withColumn("bucket", pmod(hash(col("tok")), lit(b)))
       .withColumn("batch_id", BatchConst(lit(batchId)))
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(root)
+    StreamState.append(postings, root, Some("bucket"))
     // generation row LAST: a crash above leaves the previous version
     // of every document in this batch fully served (see header)
     StreamState.appendGens(batch.select(col(idCol)), root, batchId)
@@ -239,33 +238,14 @@ object StreamTextIndex {
 
   /** The posting-fold body over an explicit snapshot — split out so
     * the interleaving spec can pin the snapshot, land a concurrent
-    * `upsertBatch`, and prove the late batch survives.
-    *
-    * Tombstones retire PHYSICALLY here, with a race-proof guard: a
-    * document's postings are dropped only when its tombstone batch is
-    * at least the document's newest generation WITHIN THE SNAPSHOT —
-    * batch ids are monotone, so no snapshot posting can belong to a
-    * generation newer than such a tombstone; a resurrection landing
-    * concurrently writes outside the snapshot (and a newer
-    * in-snapshot generation disables the drop by the guard itself).
-    * A tombstone not yet visible at fold time merely leaves the
-    * postings for the NEXT compaction — the read-side exclusion
-    * already hides them. */
+    * `upsertBatch`, and prove the late batch survives. Tombstoned
+    * postings retire PHYSICALLY here under the race-proof guard of
+    * [[StreamState.newestLive]]. */
   private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit = {
-    if (snapshot.isEmpty) return
-    val byId = org.apache.spark.sql.expressions.Window.partitionBy("id")
-    val tombs = StreamState.tombstones(spark, root)
-    val newest = spark.read.option("basePath", root).parquet(snapshot: _*)
-      .withColumn("_gen", max("batch_id").over(byId))
-      .filter(col("batch_id") === col("_gen"))
-    val kept =
-      if (tombs == null) newest
-      else newest.join(broadcast(tombs), Seq("id"), "left")
-        .filter(col("_tomb").isNull || col("_tomb") < col("_gen"))
-    kept.select("tok", "id", "bucket", "batch_id").distinct()
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(root)
-    StreamState.deleteFiles(spark, root, snapshot)
-  }
+      snapshot: Seq[String]): Unit =
+    StreamState.mergeAndRetire(spark, root, snapshot) { snap =>
+      StreamState.append(StreamState.newestLive(snap, root, "id")
+        .select("tok", "id", "bucket", "batch_id").distinct(),
+        root, Some("bucket"))
+    }
 }

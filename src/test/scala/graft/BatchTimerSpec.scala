@@ -80,9 +80,11 @@ class BatchTimerSpec extends AnyFunSuite {
   }
 
   test("p95 is nearest-rank") {
-    assert(BatchTimer.p95(Nil) == -1.0)
-    assert(BatchTimer.p95(Seq(5.0)) == 5.0)
+    assert(BatchTimer.percentile(Nil, 0.95) == -1.0)
+    assert(BatchTimer.percentile(Seq(5.0), 0.95) == 5.0)
     val xs = (1 to 100).map(_.toDouble)
-    assert(BatchTimer.p95(xs) == 95.0)
+    assert(BatchTimer.percentile(xs, 0.95) == 95.0)
+    assert(BatchTimer.percentile(xs.reverse, 0.5) == 50.0)
+    assert(BatchTimer.percentile(Seq(1.0, 2.0, 3.0), 0.5) == 2.0)
   }
 }

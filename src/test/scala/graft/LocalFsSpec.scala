@@ -69,6 +69,22 @@ class LocalFsSpec extends SparkSpec {
     assert(answer(nio, new Path(root.resolve("missing").toString)) == Left(classOf[FileNotFoundException]))
   }
 
+  /** The commands of the processes this JVM started while `body` ran
+    * (JFR `jdk.ProcessStart` events). */
+  private def spawnedBy(root: JPath)(body: => Unit): Seq[String] = {
+    // Spark's process-tree metrics run `getconf PAGESIZE` once per JVM, at
+    // the first heartbeat; start them now so the window sees per-call spawns only
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val dump = root.resolve("spawns.jfr")
+    rec.dump(dump)
+    rec.close()
+    jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+  }
+
   test("a partitioned parquet write and two results micro-batches start no process") {
     implicit val s = spark
     import s.implicits._
@@ -79,13 +95,7 @@ class LocalFsSpec extends SparkSpec {
       "2015-07-21T11:35:42.000+02:00 host1 app: checkout ok 200")
     val batch2 = Seq("2015-07-22T11:36:01.000+02:00 host2 app: error timeout")
     val out = root.resolve("results").toString
-    // Spark's process-tree metrics run `getconf PAGESIZE` once per JVM, at
-    // the first heartbeat; start them now so the window sees per-call spawns only
-    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    try {
+    val spawned = spawnedBy(root) {
       (0 until 64).map(i => (s"f$i", s"2015072${i % 4}", i.toLong)).toDF("filter_id", "date", "v")
         .write.partitionBy("filter_id", "date").parquet(root.resolve("table").toString)
       val input = MemoryStream[String](spark)
@@ -98,14 +108,31 @@ class LocalFsSpec extends SparkSpec {
         input.addData(batch2: _*)
         q.processAllAvailable()
       } finally q.stop()
-    } finally rec.stop()
-    val dump = root.resolve("spawns.jfr")
-    rec.dump(dump)
-    rec.close()
-    val spawned = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command"))
+    }
     assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
     assert(spark.read.parquet(out).count() == 4)
     assert(spark.read.parquet(root.resolve("table").toString).count() == 64)
+  }
+
+  test("persist and unpersist start no process, once their frames are collected too") {
+    val root = Files.createTempDirectory("localfs-persist")
+    val df = spark.range(1000).selectExpr("id", "id % 7 AS k")
+    // sessions earlier tests left behind (a streaming query clones one)
+    // are cleaned the same way; collect them before the window opens
+    System.gc()
+    Thread.sleep(1000)
+    val spawned = spawnedBy(root) {
+      for (i <- 0 until 20) {
+        val p = df.filter(s"k = ${i % 7}").persist()
+        assert(p.count() > 0)
+        p.unpersist(blocking = true)
+      }
+      // a cached plan planned in a cloned session leaves the clone to a
+      // cleaner that runs when the clone is collected
+      System.gc()
+      Thread.sleep(2000)
+    }
+    assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
   }
 
   test("reading a parquet root with 64 partition directories starts no Spark job") {

@@ -3,7 +3,7 @@ package graft
 import graft.functions.TextFunctions
 import graft.operators.{Sketch, Similarity}
 import graft.sources.Tables
-import graft.streaming.{StreamIvfPq, StreamSketch, StreamState, StreamTextIndex}
+import graft.streaming.{StreamDedup, StreamIvfPq, StreamPretrain, StreamSemDedup, StreamSketch, StreamState, StreamTextIndex}
 import org.apache.spark.sql.functions._
 
 /** The merge-and-retire compaction contract ([[StreamState]]): every
@@ -658,5 +658,104 @@ class StreamCompactionSpec extends SparkSpec {
     assert(StreamSketch.readWatermark(spark, root) == 3L)
     assert(cells(StreamSketch.readSketch(spark, root)) == want)
     assert(spark.read.parquet(root).select("batch_id").distinct().count() == 1L)
+  }
+
+  // ---- the state-table layout ([[StreamState.append]]) ---------------
+
+  /** Data files per directory, over the tables at `paths`. */
+  private def filesPerDir(paths: Seq[String]): Map[String, Int] =
+    paths.flatMap(StreamState.listDataFiles(spark, _))
+      .groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+      .map { case (d, fs) => d -> fs.size }
+
+  /** The files `append` added, per directory it touched. */
+  private def gained(paths: Seq[String])(append: => Unit): Map[String, Int] = {
+    val before = filesPerDir(paths)
+    append
+    filesPerDir(paths).map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }
+      .filter(_._2 != 0)
+  }
+
+  /** A partitioned state table: where its files live, one upsert under
+    * a batch id, and its compaction — each on a fresh root. */
+  private case class Partitioned(name: String, paths: String => Seq[String],
+      init: String => Unit, upsert: (String, Long) => Unit,
+      compact: String => Unit)
+
+  test("layout: each partitioned state table gains one file per touched directory per append, one per directory after compaction") {
+    val emb = Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") > 0)
+    val maxVec = emb.agg(max("vec_id")).head().getLong(0)
+    val vecs = emb.filter(col("vec_id") > maxVec / 2)
+    val sem = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
+    val semModel = StreamSemDedup.fit(sem, "id", "v", k = 8, iterations = 2,
+      threshold = 0.3)
+    val near = StreamDedup.Config(threshold = 0.5)
+    def half(df: org.apache.spark.sql.DataFrame, idCol: String, b: Long) =
+      df.filter(col(idCol) % 2 === b)
+    val tables = Seq(
+      Partitioned("text index (bucket)", r => Seq(r), _ => (),
+        (r, b) => StreamTextIndex.upsertBatch(half(docs, "doc_id", b),
+          "doc_id", "text", r, b),
+        StreamTextIndex.compact(spark, _)),
+      Partitioned("sketch (r)", r => Seq(r), _ => (),
+        (r, b) => StreamSketch.upsertBatch(half(docs, "doc_id", b), "text",
+          r, b),
+        StreamSketch.compact(spark, _)),
+      Partitioned("IVF-PQ (cluster)", r => Seq(r),
+        r => Similarity.buildIvfPq(emb.filter(col("vec_id") <= maxVec / 2),
+          "vec_id", "embedding", r),
+        (r, b) => StreamIvfPq.upsertBatch(half(vecs, "vec_id", b), "vec_id",
+          "embedding", r, b),
+        StreamIvfPq.compact(spark, _)),
+      Partitioned("semantic (cl)", r => Seq(s"$r/vecs"), _ => (),
+        (r, b) => StreamState.release(StreamSemDedup.upsertBatch(
+          half(sem, "id", b), "id", "v", semModel, r, b)),
+        StreamSemDedup.compact(spark, _)),
+      Partitioned("near-dup (pb, pid)", r => Seq(s"$r/bands", s"$r/sigs"),
+        _ => (),
+        (r, b) => StreamState.release(StreamDedup.upsertBatch(
+          half(docs, "doc_id", b), "doc_id", "text", r, near, b)),
+        StreamDedup.compact(spark, _)))
+    for (t <- tables) {
+      val root = tmp("layout")
+      t.init(root)
+      for (b <- 0L to 1L) {
+        val g = gained(t.paths(root))(t.upsert(root, b))
+        assert(g.nonEmpty && g.values.forall(_ == 1),
+          s"${t.name}: upsert $b added files per directory $g")
+      }
+      t.compact(root)
+      val after = filesPerDir(t.paths(root))
+      assert(after.nonEmpty && after.values.forall(_ == 1),
+        s"${t.name}: files per directory after compaction $after")
+    }
+    // labels (pl): every fold rewrites its directories to one file each
+    val root = tmp("layout-labels")
+    for (b <- 0L to 1L) {
+      StreamState.release(StreamDedup.upsertBatchWithLabels(
+        half(docs, "doc_id", b), "doc_id", "text", root, near, b))
+      val files = filesPerDir(Seq(s"$root/labels"))
+      assert(files.nonEmpty && files.values.forall(_ == 1),
+        s"labels (pl): files per directory after fold $b: $files")
+    }
+  }
+
+  test("layout: each one-file state table gains one file per append") {
+    val fz = StreamPretrain.fit(docs, "doc_id", "text", "lang")
+    val maxId = docs.agg(max("doc_id")).head().getLong(0)
+    val root = tmp("layout-one")
+    val idx = tmp("layout-docs")
+    val oneFile = Seq("ledger", "kept", "gatestats").map(t => s"$root/$t")
+    for (b <- 0L to 1L) {
+      val batch = docs.filter(
+        (col("doc_id") * 2 > maxId) === lit(b == 1L))
+      val gens = gained(Seq(StreamState.genLogPath(idx)))(
+        StreamTextIndex.upsertBatch(batch, "doc_id", "text", idx, b))
+      assert(gens.values.toSeq == Seq(1), s"_docs: upsert $b added $gens")
+      val g = gained(oneFile)(StreamPretrain.ingestBatch(batch, "doc_id",
+        "text", "lang", "source", fz, root, b, recordStats = true))
+      assert(g.size == oneFile.size && g.values.forall(_ == 1),
+        s"ledger, kept, gatestats: ingest $b added $g")
+    }
   }
 }
