@@ -16,13 +16,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Index layout under `root` (both tables plain parquet, appendable):
   *  - `bands/` — (id, band, bucket) rows partitioned by
-  *    `pb = pmod(bucket, dirBuckets)`: a batch's candidate probe
-  *    filters on its own pb values, so Catalyst partition-prunes the
-  *    historical read to the directories the batch can collide with —
-  *    the probe reads O(batch) index, never O(corpus).
+  *    `pb = pmod(bucket, dirBuckets)`, which bounds the size of each
+  *    file and of each directory [[compact]] rewrites. The candidate
+  *    probe reads every directory: a batch's `bands × batch size`
+  *    buckets reach all `dirBuckets` of them (16 × 60 = 960 buckets
+  *    over 64 directories leave one untouched with probability
+  *    ~2e-5), so pruning on pb would buy nothing.
   *  - `sigs/` — one (id, hs, sig) row per document for exact
   *    verification, partitioned by `pid = pmod(hash(id), dirBuckets)`
-  *    so the per-pair verify join reads a bounded slice.
+  *    so label repair ([[deleteDocs]]) reads only its members'
+  *    directories; the per-batch verify semi-joins the whole table
+  *    against the candidates' ids.
   *
   * Parity contract: upserting a corpus in ANY batch split yields
   * exactly the pairs of one batch [[Dedup.minhashLsh]] over the union —
@@ -62,8 +66,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamDedup {
 
   /** `dirBuckets` is the on-disk partition fan-out of both index
-    * tables, independent of the LSH `bands`: more dirs = finer probe
-    * pruning, more small files. 64 matches the text-index default.
+    * tables, independent of the LSH `bands`: more dirs = finer pruning
+    * of the by-id reads (label repair's sigs read), more small files.
+    * 64 matches the text-index default.
     */
   final case class Config(
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -94,20 +99,20 @@ object StreamDedup {
       onPairs: DataFrame => Unit = null): DataFrame =
     BatchTimer.timed("dedup.upsert") {
     val spark = batch.sparkSession
-    // generation tracking (see the deletion section of the header):
-    // logging the batch FIRST makes a resurrected id live before the
-    // dead set below is read — and a crash after this append serves
-    // the id's pre-delete rows, which is correct for immutable ids
-    if (StreamState.genLogExists(spark, root)) {
+    // generation tracking (see the deletion section of the header)
+    if (StreamState.genLogExists(spark, root))
       require(batchId >= 0,
         s"index at $root tracks generations (a deleteDocs ran); pass " +
           "a monotone batchId to every upsert so deletes and " +
           "resurrections order against ingests")
-      StreamState.appendGens(batch.select(col(idCol)), root, batchId)
-    } else if (batchId >= 0) {
-      StreamState.appendGens(batch.select(col(idCol)), root, batchId)
-    }
-    val dead = StreamState.deadIds(spark, root)
+    // this upsert resurrects every id it carries, so the dead set is
+    // the committed one minus the batch's ids — no need to log the
+    // batch's generations before reading it. The log append then
+    // joins the index appends below; a crash before it lands leaves a
+    // resurrected id hidden until the retry re-appends it.
+    val dead = Option(StreamState.deadIds(spark, root))
+      .map(_.join(batch.select(col(idCol).as("id")), Seq("id"), "left_anti"))
+      .orNull
     // the batch's signature relation feeds banding, verification, and
     // the index append — persist or it recomputes per branch
     val sig = Dedup.signatureRelation(batch, idCol, textCol,
@@ -129,7 +134,7 @@ object StreamDedup {
         val histSigs =
           if (!StreamState.hasDataFiles(spark, sigsPath(root))) None
           else Some(spark.read.parquet(sigsPath(root)))
-        // PROBE→VERIFY and the two index APPENDS run concurrently (r14
+        // PROBE→VERIFY and the index APPENDS run concurrently (r14
         // verdict item 4 — at sf0.1 the sequential form paid
         // probe ~0.7 s, THEN verify ~2.6 s, THEN append ~1.6 s per
         // batch; the overlap makes the wall max(probe+verify,
@@ -151,20 +156,11 @@ object StreamDedup {
               col("a.bucket") === col("b.bucket") &&
               col("a.id") < col("b.id"))
             .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          // cross candidates: probe the historical bands, reading only
-          // the pb directories this batch's buckets hash into. The pb
-          // list is ≤ dirBuckets ints — a bounded driver collect that
-          // buys partition pruning on the probe scan.
+          // cross candidates: probe every historical band directory
+          // (a batch's buckets reach all of them — see the header);
+          // tombstoned documents never surface as partners
           val cross = histBands.map { hb =>
-            // this collect is the first action over sig+banded, so its
-            // sub-timer reads as "minhash + banding materialization"
-            val pbs = BatchTimer.timed("dedup.upsert.sig_probe") {
-              banded.select("pb").distinct()
-                .collect().map(_.getInt(0)).toSeq
-            }
-            // tombstoned documents never surface as partners
-            val hist = dropDead(hb.filter(col("pb").isin(pbs: _*)), dead)
-            banded.as("a").join(hist.as("b"),
+            banded.as("a").join(dropDead(hb, dead).as("b"),
                 col("a.band") === col("b.band") &&
                 col("a.bucket") === col("b.bucket") &&
                 col("a.id") =!= col("b.id"))
@@ -172,23 +168,31 @@ object StreamDedup {
                 least(col("a.id"), col("b.id")).as("id_a"),
                 greatest(col("a.id"), col("b.id")).as("id_b"))
           }
-          val cand = cross.fold(intra)(intra.union).distinct()
-          // verification sides: this batch's signatures plus the
-          // historical ones the candidates touch (semi-join bounds the
-          // read to O(candidates)); dropDuplicates absorbs retry appends
-          val sides = histSigs.fold(sig) { hs =>
-            val wanted = cand.select(col("id_a").as("id"))
-              .union(cand.select(col("id_b").as("id"))).distinct()
-            sig.unionByName(
-              dropDead(hs.select("id", "hs", "sig"), dead)
-                .join(wanted, Seq("id"), "left_semi"))
-              .dropDuplicates("id")
+          // materialized ONCE: verification and both halves of
+          // `wanted` read it, and an unmaterialized frame would rerun
+          // the self-join, the probe and the history scan per reader
+          val cand = BatchTimer.timed("dedup.upsert.probe") {
+            cross.fold(intra)(intra.union).distinct().localCheckpoint(true)
           }
-          BatchTimer.timed("dedup.upsert.verify") {
-            Dedup.verifyCandidates(cand, sides,
-                cfg.numHashes, cfg.threshold)
-              .localCheckpoint(true) // materialize NOW, beside the appends
-          }
+          try {
+            // verification sides: this batch's signatures plus the
+            // historical ones the candidates touch (semi-join bounds
+            // the read to O(candidates)); dropDuplicates absorbs retry
+            // appends
+            val sides = histSigs.fold(sig) { hs =>
+              val wanted = cand.select(col("id_a").as("id"))
+                .union(cand.select(col("id_b").as("id"))).distinct()
+              sig.unionByName(
+                dropDead(hs.select("id", "hs", "sig"), dead)
+                  .join(wanted, Seq("id"), "left_semi"))
+                .dropDuplicates("id")
+            }
+            BatchTimer.timed("dedup.upsert.verify") {
+              Dedup.verifyCandidates(cand, sides,
+                  cfg.numHashes, cfg.threshold)
+                .localCheckpoint(true) // materialize NOW, beside the appends
+            }
+          } finally StreamState.release(cand)
         }
         // `onPairs` (r17): a consumer that depends ONLY on the
         // verified pair delta (the labels fold) runs on the probe
@@ -205,9 +209,12 @@ object StreamDedup {
             if (onPairs != null) onPairs(pairs)
           },
           () => BatchTimer.timed("dedup.upsert.append") {
-            StreamState.inParallel(
+            val appends = Seq(
               () => StreamState.append(banded, bandsPath(root), Some("pb")),
-              () => StreamState.append(sigOut, sigsPath(root), Some("pid")))
+              () => StreamState.append(sigOut, sigsPath(root), Some("pid"))) ++
+              Option.when(batchId >= 0)(() =>
+                StreamState.appendGens(batch.select(col(idCol)), root, batchId))
+            StreamState.inParallel(appends: _*)
           })
         pairs
       } finally banded.unpersist(false)
@@ -526,11 +533,10 @@ object StreamDedup {
 
   /** The subset of `ids` currently labeled NON-canonical (an
     * earlier-id near-dup exists), read with partition pruning on the
-    * ids' own `pl` directories — the [[upsertBatch]] probe-scan
-    * pattern applied to the label table, so a per-batch membership
-    * check costs O(batch + touched directories), never a scan of the
-    * all-time dup index. The pl list is ≤ dirBuckets ints (a bounded
-    * driver collect, same contract as the bands probe). */
+    * ids' own `pl` directories, so a per-batch membership check costs
+    * O(batch + touched directories), never a scan of the all-time dup
+    * index. The pl list is ≤ dirBuckets ints (a bounded driver
+    * collect). */
   def nonCanonicalOf(ids: DataFrame, idCol: String, root: String,
       cfg: Config = Config()): DataFrame = {
     val spark = ids.sparkSession

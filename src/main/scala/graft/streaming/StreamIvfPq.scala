@@ -71,23 +71,15 @@ object StreamIvfPq {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // the versioned-publish plumbing is shared machinery now
-  // ([[StreamState.versionIds]] — the same `_vN` + `_COMMITTED`
-  // contract also backs [[StreamPretrain]]'s mix-rates publishes)
-  private def versions(spark: SparkSession, root: String,
-      committedOnly: Boolean): Seq[Int] =
-    StreamState.versionIds(spark, root, committedOnly)
-
   /** The directory holding the newest COMMITTED model generation —
     * `root/_vN`, or `root` itself while the index is still on the
     * flat generation-0 layout. All entry points resolve through this,
     * so the (model, codes) pair a query sees is always one consistent
-    * generation. */
+    * generation. The `_vN` + `_COMMITTED` publish contract is
+    * [[StreamState]]'s (it also backs [[StreamPretrain]]'s mix-rates
+    * publishes). */
   def resolve(spark: SparkSession, root: String): String =
-    versions(spark, root, committedOnly = true) match {
-      case Nil => root
-      case vs => s"$root/_v${vs.max}"
-    }
+    StreamState.newestCommitted(spark, root).getOrElse(root)
 
   /** Fit a new model generation over `corpus` and atomically swap it
     * in: [[Similarity.buildIvfPq]] writes the full (codes + `_meta`)
@@ -113,12 +105,10 @@ object StreamIvfPq {
       retireOld: Boolean = true): String =
     BatchTimer.timed("ivfpq.refit") {
     val spark = corpus.sparkSession
-    val next = (versions(spark, root, committedOnly = false) :+ 0).max + 1
-    val vdir = s"$root/_v$next"
+    val vdir = StreamState.nextVersionDir(spark, root)
     Similarity.buildIvfPq(corpus, idCol, vecCol, vdir,
       nCells, iterations, m, k, scale)
-    val marker = new org.apache.hadoop.fs.Path(vdir, "_COMMITTED")
-    hfs(spark, root).create(marker, true).close()
+    StreamState.commitVersion(spark, vdir)
     if (retireOld) retireOldVersions(spark, root)
     vdir
   }
@@ -127,20 +117,17 @@ object StreamIvfPq {
     * stale `_vK` directories, and — once any committed version
     * exists — the flat generation-0 codes and `_meta`. Run from the
     * maintenance window after in-flight readers drained. */
-  def retireOldVersions(spark: SparkSession, root: String): Unit = {
-    val committed = versions(spark, root, committedOnly = true)
-    if (committed.isEmpty) return
-    val keep = committed.max
-    val fs = hfs(spark, root)
-    versions(spark, root, committedOnly = false).filter(_ != keep)
-      .foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/_v$v"), true)
-      }
-    StreamState.deleteFiles(spark, root,
-      StreamState.listDataFiles(spark, root)) // flat gen-0 codes
-    val flatMeta = new org.apache.hadoop.fs.Path(root, "_meta")
-    if (fs.exists(flatMeta)) fs.delete(flatMeta, true)
-  }
+  def retireOldVersions(spark: SparkSession, root: String): Unit =
+    StreamState.newestCommitted(spark, root).foreach { keep =>
+      val fs = hfs(spark, root)
+      StreamState.versionIds(spark, root, committedOnly = false)
+        .map(v => s"$root/_v$v").filter(_ != keep)
+        .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      StreamState.deleteFiles(spark, root,
+        StreamState.listDataFiles(spark, root)) // flat gen-0 codes
+      val flatMeta = new org.apache.hadoop.fs.Path(root, "_meta")
+      if (fs.exists(flatMeta)) fs.delete(flatMeta, true)
+    }
 
   /** Probe the newest committed generation — [[Similarity
     * .queryIvfPqTable]] against [[resolve]]'s directory, with

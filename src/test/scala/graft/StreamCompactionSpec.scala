@@ -556,6 +556,79 @@ class StreamCompactionSpec extends SparkSpec {
       (70L, 10L), (50L, 50L), (60L, 50L))) // reads unchanged
   }
 
+  test("dedup index: an upsert that resurrects an id returns its pairs with live history and same-batch partners") {
+    import graft.streaming.StreamDedup
+    val root = tmp("sci-res")
+    val cfg = StreamDedup.Config(threshold = 0.5)
+    // chain a~b, b~c, a!~c (the deletes test's texts); d repeats b's
+    // text, so it pairs with a, b and c
+    def sl(lo: Int, hi: Int) =
+      (1 to 90).map(i => f"at$i%02d").slice(lo - 1, hi).mkString(" ")
+    val a = (10L, sl(1, 60)); val b = (20L, sl(16, 75))
+    val c = (30L, sl(31, 90)); val d = (80L, sl(16, 75))
+    def up(rows: Seq[(Long, String)], bid: Long): Set[(Long, Long)] = {
+      val pairs = StreamDedup.upsertBatchWithLabels(
+        rows.toDF("doc_id", "text"), "doc_id", "text", root, cfg,
+        batchId = bid)
+      try pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      finally StreamState.release(pairs)
+    }
+    up(Seq(a, c), 0L)
+    up(Seq(b), 1L)
+    StreamDedup.deleteDocs(spark, root, Seq(20L).toDF("id"), 2L, cfg)
+    assert(StreamDedup.indexLabels(spark, root).count() == 0)
+    // the resurrecting upsert: b pairs with its live history partners
+    // (a, c) and with d, which arrives beside it
+    assert(up(Seq(b, d), 3L) == Set((10L, 20L), (20L, 30L), (20L, 80L),
+      (10L, 80L), (30L, 80L)))
+    assert(StreamDedup.indexLabels(spark, root).as[(Long, Long)]
+      .collect().toSet == Set((10L, 10L), (20L, 10L), (30L, 10L), (80L, 10L)))
+    assert(StreamDedup.indexPairs(spark, root, cfg).count() == 5)
+  }
+
+  test("dedup index: an upsert scans the band history once, and the pairs equal the batch operator") {
+    import graft.streaming.StreamDedup
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val root = tmp("sci-scan")
+    val cfg = StreamDedup.Config(threshold = 0.5)
+    def up(batch: org.apache.spark.sql.DataFrame, bid: Long) = {
+      val pairs = StreamDedup.upsertBatch(batch, "doc_id", "text", root,
+        cfg, batchId = bid)
+      try pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      finally StreamState.release(pairs)
+    }
+    val first = up(docs.filter(col("doc_id") % 2 === 0), 0L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val second = try {
+      val s = up(docs.filter(col("doc_id") % 2 === 1), 1L)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      s
+    } finally spark.listenerManager.unregister(listener)
+    val bands = new java.io.File(s"$root/bands").getCanonicalPath
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = plans.asScala.toSeq.flatMap(p => helper.collectWithSubqueries(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(r =>
+            new java.io.File(r.toUri.getPath).getCanonicalPath == bands) => s
+    })
+    assert(scans.size == 1,
+      s"${scans.size} band-history scans ran in one upsert")
+    val want = graft.operators.Dedup.minhashLsh(docs, "doc_id", "text",
+        cfg.shingleSize, cfg.numHashes, cfg.bands, cfg.threshold)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(first ++ second == want && second.nonEmpty)
+  }
+
   test("dedup index: after deletions, labels and pairs equal the batch operator over the live corpus") {
     import graft.streaming.StreamDedup
     val root = tmp("sci-delx")

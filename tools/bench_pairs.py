@@ -16,7 +16,10 @@ no build lands between the runs of a pair.
 Prints every run, then for each end-to-end metric of BENCHMARK.json: the
 parent and change medians, how many pairs the change won, and the
 interquartile range of the parent's runs. For pretrain_ingest it also
-prints whether each seed's kept_id_hash matched between the sides. The
+prints, per cycle, each side's median ingest time (the `cycle_ms=` field
+of the details line; cycle 1 starts cold, later cycles probe a history)
+and how many pairs the change won, and whether each seed's kept_id_hash
+matched between the sides. The
 temporary directory is removed on exit; nothing under perfbench/ is
 edited. Exits non-zero if a run failed or reported a failed operation.
 """
@@ -84,6 +87,11 @@ def values(result):
             for k, v in result["metrics"].items()}
 
 
+def cycle_ingest_ms(details):
+    """Ingest ms of each cycle, from `cycle_ms=ingest/forget/read,...`."""
+    return [float(c.split("/")[0]) for c in details["cycle_ms"].split(",")]
+
+
 def iqr(xs):
     if len(xs) < 2:
         return 0.0
@@ -112,6 +120,7 @@ def main():
         for side in sides.values():
             build(side)
         runs = {"parent": [], "change": []}
+        cycles = {"parent": [], "change": []}
         hashes = []
         for i in range(a.pairs):
             seed = a.seed0 + i
@@ -135,6 +144,9 @@ def main():
             if all(r is not None for r, _ in got.values()):
                 for name in runs:
                     runs[name].append(values(got[name][0]))
+                if all("cycle_ms" in d for _, d in got.values()):
+                    for name in cycles:
+                        cycles[name].append(cycle_ingest_ms(got[name][1]))
                 if "kept_id_hash" in got["parent"][1]:
                     hashes.append((seed, got["parent"][1]["kept_id_hash"],
                                    got["change"][1].get("kept_id_hash")))
@@ -151,6 +163,14 @@ def main():
             wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
             print(f"{k:<14} {statistics.median(p):>12.4f} {statistics.median(c):>12.4f} "
                   f"{wins:>3}/{len(p):<2} {iqr(p):>12.4f}")
+        if cycles["parent"]:
+            print(f"\n{'cycle ingest ms':<16} {'parent':>10} {'change':>10} {'wins':>6}")
+            for k in range(min(len(r) for r in cycles["parent"] + cycles["change"])):
+                p = [r[k] for r in cycles["parent"]]
+                c = [r[k] for r in cycles["change"]]
+                wins = sum(y < x for x, y in zip(p, c))
+                print(f"{'cycle ' + str(k + 1):<16} {statistics.median(p):>10.0f} "
+                      f"{statistics.median(c):>10.0f} {wins:>3}/{len(p):<2}")
         for seed, hp, hc in hashes:
             print(f"kept_id_hash seed {seed}: {'same' if hp == hc else 'DIFFERENT'} "
                   f"(parent {hp}, change {hc})")
