@@ -1589,7 +1589,7 @@ object SparkEntry {
 
     ("q_stream_text_index", // incrementally-grown inverted index: the
       // corpus arrives in THREE batches through the streaming upsert
-      // path (StreamTextIndex.upsertBatch — per-batch posting deltas,
+      // path (StreamTextIndex.Index — per-batch posting deltas,
       // set-union semantics), with a COMPACTION and an at-least-once
       // REDELIVERY interleaved mid-stream; the final index must answer
       // the same word grep as the batch-built index, so the
@@ -1602,11 +1602,12 @@ object SparkEntry {
         val b0 = docs.filter(col("doc_id") % 3 === 0)
         val b1 = docs.filter(col("doc_id") % 3 === 1)
         val b2 = docs.filter(col("doc_id") % 3 === 2)
-        graft.streaming.StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 0L)
-        graft.streaming.StreamTextIndex.upsertBatch(b1, "doc_id", "text", root, 1L)
-        graft.streaming.StreamTextIndex.compact(s, root)
-        graft.streaming.StreamTextIndex.upsertBatch(b1, "doc_id", "text", root, 1L) // retry
-        graft.streaming.StreamTextIndex.upsertBatch(b2, "doc_id", "text", root, 2L)
+        val idx = new graft.streaming.StreamTextIndex.Index(s, root, "doc_id", "text")
+        idx.upsert(b0, 0L)
+        idx.upsert(b1, 1L)
+        idx.compact()
+        idx.upsert(b1, 1L) // retry
+        idx.upsert(b2, 2L)
         val got = graft.streaming.StreamTextIndex.grepTokens(docs, "doc_id",
           root, Seq("spark", "window")).select("doc_id")
           .localCheckpoint(true) // materialize before the index dir goes
@@ -1633,16 +1634,17 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_stream_text_index_upd").toString + "/idx"
         val docs = t(s, dir, "documents")
-        val S = graft.streaming.StreamTextIndex
-        S.upsertBatch(docs, "doc_id", "text", root, 0L)
-        S.compact(s, root)
+        val idx = new graft.streaming.StreamTextIndex.Index(s, root, "doc_id", "text")
+        idx.upsert(docs, 0L)
+        idx.compact()
         val upd = docs.filter(col("doc_id") % 7 === 0)
           .withColumn("text",
             concat(lit("refreshedcontent spark doc "), col("doc_id")))
-        S.upsertBatch(upd, "doc_id", "text", root, 1L)
-        S.upsertBatch(upd, "doc_id", "text", root, 1L) // retry
-        S.compact(s, root)
-        val got = S.grepTokens(docs, "doc_id", root, Seq("spark", "window"))
+        idx.upsert(upd, 1L)
+        idx.upsert(upd, 1L) // retry
+        idx.compact()
+        val got = graft.streaming.StreamTextIndex.grepTokens(docs, "doc_id",
+          root, Seq("spark", "window"))
           .select("doc_id")
           .localCheckpoint(true) // materialize before the index dir goes
         import scala.jdk.CollectionConverters._
@@ -1664,7 +1666,7 @@ object SparkEntry {
 
     ("q_stream_text_index_del", // DELETE path of the live index:
       // the corpus ingests, every 5th document is tombstoned
-      // (deleteDocs — one log row, no posting touched), half of the
+      // (Index.delete — one log row, no posting touched), half of the
       // deleted are re-ingested (resurrection), and a compaction
       // physically retires the still-dead postings plus an original-
       // batch redelivery that must NOT resurrect them — the final
@@ -1673,15 +1675,15 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_stream_text_index_del").toString + "/idx"
         val docs = t(s, dir, "documents")
-        val S = graft.streaming.StreamTextIndex
-        S.upsertBatch(docs, "doc_id", "text", root, 0L)
+        val idx = new graft.streaming.StreamTextIndex.Index(s, root, "doc_id", "text")
+        idx.upsert(docs, 0L)
         val dead = docs.filter(col("doc_id") % 5 === 0)
-        S.deleteDocs(dead.select("doc_id"), "doc_id", root, 1L)
-        S.upsertBatch(dead.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", root, 2L) // resurrect half
-        S.compact(s, root)
-        S.upsertBatch(dead, "doc_id", "text", root, 0L) // stale redelivery
-        val got = S.grepTokens(docs, "doc_id", root, Seq("spark", "window"))
+        idx.delete(dead.select("doc_id"), 1L)
+        idx.upsert(dead.filter(col("doc_id") % 10 === 0), 2L) // resurrect half
+        idx.compact()
+        idx.upsert(dead, 0L) // stale redelivery
+        val got = graft.streaming.StreamTextIndex.grepTokens(docs, "doc_id",
+          root, Seq("spark", "window"))
           .select("doc_id")
           .localCheckpoint(true) // materialize before the index dir goes
         import scala.jdk.CollectionConverters._
@@ -1806,7 +1808,7 @@ object SparkEntry {
 
     ("q_stream_bpe_ids", // the tokenizer AT INGEST: fit once on the
       // curation corpus, persist, and encode every micro-batch under
-      // the frozen loaded artifact (StreamBpe.encodeBatch) — three
+      // the frozen loaded artifact (StreamBpe.Index) — three
       // batch splits, an at-least-once retry, and a mid-stream
       // compaction later, the live encoded table equals the one-shot
       // Bpe.encodeIds over the union, so the q_bpe_ids oracle replays
@@ -1820,17 +1822,13 @@ object SparkEntry {
         val learned = graft.operators.Bpe.learnMerges(docs, "text", 6)
         graft.operators.Bpe.saveLearned(s, learned, s"$base/tok")
         val frozen = graft.operators.Bpe.loadLearned(s, s"$base/tok")
-        val S = graft.streaming.StreamBpe
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", frozen, root, 0L)
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", frozen, root, 1L)
-        S.compact(s, root)
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", frozen, root, 1L) // retry
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 2),
-          "doc_id", "text", frozen, root, 2L)
-        val got = S.readEncoded(s, root).localCheckpoint(true)
+        val idx = new graft.streaming.StreamBpe.Index(s, root, "doc_id", "text", frozen)
+        idx.upsert(docs.filter(col("doc_id") % 3 === 0), 0L)
+        idx.upsert(docs.filter(col("doc_id") % 3 === 1), 1L)
+        idx.compact()
+        idx.upsert(docs.filter(col("doc_id") % 3 === 1), 1L) // retry
+        idx.upsert(docs.filter(col("doc_id") % 3 === 2), 2L)
+        val got = idx.committed().localCheckpoint(true)
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(java.nio.file.Paths.get(base))
           .sorted(java.util.Comparator.reverseOrder())
@@ -1867,7 +1865,7 @@ object SparkEntry {
 
     ("q_stream_bpe_del", // the compliance path for the live encoded
       // table: ingest the corpus in three batches under the frozen
-      // tokenizer, tombstone every 13th document (StreamBpe.deleteDocs
+      // tokenizer, tombstone every 13th document (StreamBpe.Index delete
       // — its pieces stop serving from the next read), compact (the
       // dead rows are physically retired), replay a STALE pre-delete
       // batch (its generation cannot outrank the tombstone), and
@@ -1885,21 +1883,15 @@ object SparkEntry {
         val learned = graft.operators.Bpe.learnMerges(docs, "text", 6)
         graft.operators.Bpe.saveLearned(s, learned, s"$base/tok")
         val frozen = graft.operators.Bpe.loadLearned(s, s"$base/tok")
-        val S = graft.streaming.StreamBpe
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", frozen, root, 0L)
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", frozen, root, 1L)
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 2),
-          "doc_id", "text", frozen, root, 2L)
-        S.deleteDocs(docs.filter(col("doc_id") % 13 === 0)
-          .select("doc_id"), "doc_id", root, 3L)
-        S.compact(s, root) // physical retire of the dead rows
-        S.encodeBatch(docs.filter(col("doc_id") % 3 === 1),
-          "doc_id", "text", frozen, root, 1L) // stale redelivery
-        S.encodeBatch(docs.filter(col("doc_id") % 26 === 0),
-          "doc_id", "text", frozen, root, 4L) // resurrection
-        val got = S.readEncoded(s, root).localCheckpoint(true)
+        val idx = new graft.streaming.StreamBpe.Index(s, root, "doc_id", "text", frozen)
+        idx.upsert(docs.filter(col("doc_id") % 3 === 0), 0L)
+        idx.upsert(docs.filter(col("doc_id") % 3 === 1), 1L)
+        idx.upsert(docs.filter(col("doc_id") % 3 === 2), 2L)
+        idx.delete(docs.filter(col("doc_id") % 13 === 0).select("doc_id"), 3L)
+        idx.compact() // physical retire of the dead rows
+        idx.upsert(docs.filter(col("doc_id") % 3 === 1), 1L) // stale redelivery
+        idx.upsert(docs.filter(col("doc_id") % 26 === 0), 4L) // resurrection
+        val got = idx.committed().localCheckpoint(true)
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(java.nio.file.Paths.get(base))
           .sorted(java.util.Comparator.reverseOrder())
@@ -2274,7 +2266,7 @@ object SparkEntry {
       Some(cmsSketchOracle)),
 
     ("q_stream_cms", // the sketch maintained AT INGEST: the corpus
-      // arrives in three batches through StreamSketch.upsertBatch
+      // arrives in three batches through a StreamSketch.Index upsert
       // (each appends its own depth×width delta; history never
       // rescanned) and the merged read must equal the one-shot batch
       // sketch — CMS is mergeable, cell sums associate — so the
@@ -2283,12 +2275,11 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_stream_cms").toString + "/sketch"
         val docs = t(s, dir, "documents")
+        val idx = new graft.streaming.StreamSketch.Index(s, root, "text")
         (0 until 3).foreach { k =>
-          graft.streaming.StreamSketch.upsertBatch(
-            docs.filter(pmod(col("doc_id"), lit(3)) === k), "text",
-            root, batchId = k.toLong)
+          idx.upsert(docs.filter(pmod(col("doc_id"), lit(3)) === k), k.toLong)
         }
-        val got = graft.streaming.StreamSketch.readSketch(s, root)
+        val got = idx.committed()
           .localCheckpoint(true) // materialize before the dir goes
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(
@@ -3789,7 +3780,7 @@ object SparkEntry {
               |SELECT id_a, id_b FROM pairs""".stripMargin)),
     ("q_stream_dedup_index", // incrementally-built near-dup index: the
       // corpus arrives in TWO batches through the streaming upsert path
-      // (StreamDedup.upsertBatch — probe history, emit pairs, append to
+      // (StreamDedup.Index — probe history, emit pairs, append to
       // the persistent band/signature index); the union of emitted
       // pairs must equal the batch operator over the whole corpus, so
       // the brute-force shingle-Jaccard oracle replays it unchanged
@@ -3797,11 +3788,10 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_stream_dedup_index").toString
         val docs = t(s, dir, "documents")
-        val cfg = graft.streaming.StreamDedup.Config(threshold = 0.5)
-        val p1 = graft.streaming.StreamDedup.upsertBatch(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", root, cfg)
-        val p2 = graft.streaming.StreamDedup.upsertBatch(
-          docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", root, cfg)
+        val idx = new graft.streaming.StreamDedup.Index(s, root, "doc_id",
+          "text", graft.streaming.StreamDedup.Config(threshold = 0.5))
+        val p1 = idx.upsert(docs.filter(col("doc_id") % 2 === 0), -1L)
+        val p2 = idx.upsert(docs.filter(col("doc_id") % 2 =!= 0), -1L)
         val got = p1.union(p2).select("id_a", "id_b")
           .localCheckpoint(true) // materialize before the index dir goes
         import scala.jdk.CollectionConverters._
@@ -3880,7 +3870,7 @@ object SparkEntry {
              |WHERE doc_id NOT IN (SELECT id FROM labels WHERE id <> cluster)""".stripMargin)),
     ("q_dedup_clusters_incr", // INCREMENTAL cluster-label maintenance
       // at ingest: the corpus arrives in three batches through
-      // StreamDedup.upsertBatchWithLabels — each batch's pairs fold
+      // a StreamDedup.Index with labels — each batch's pairs fold
       // into the persistent label table via Dedup.incrementalClusters
       // (propagation over the DELTA edges only, then a partition-
       // bounded relabel) — and the final table must equal the BATCH
@@ -3890,11 +3880,11 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_dedup_clusters_incr").toString
         val docs = t(s, dir, "documents")
-        val cfg = graft.streaming.StreamDedup.Config(threshold = 0.5)
+        val idx = new graft.streaming.StreamDedup.Index(s, root, "doc_id",
+          "text", graft.streaming.StreamDedup.Config(threshold = 0.5),
+          labels = true)
         (0 until 3).foreach { k =>
-          graft.streaming.StreamDedup.upsertBatchWithLabels(
-            docs.filter(col("doc_id") % 3 === k), "doc_id", "text",
-            root, cfg)
+          idx.upsert(docs.filter(col("doc_id") % 3 === k), -1L)
         }
         val got = graft.streaming.StreamDedup.indexLabels(s, root)
           .localCheckpoint(true) // materialize before the index dir goes
@@ -3930,12 +3920,12 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_dedup_clusters_incr_dist").toString
         val docs = t(s, dir, "documents")
-        val cfg = graft.streaming.StreamDedup.Config(threshold = 0.5)
+        val idx = new graft.streaming.StreamDedup.Index(s, root, "doc_id",
+          "text", graft.streaming.StreamDedup.Config(threshold = 0.5),
+          labels = true, maxPairs = 0L)
         (0 until 3).foreach { k =>
           graft.GraftSession.releaseCheckpoint(
-            graft.streaming.StreamDedup.upsertBatchWithLabels(
-              docs.filter(col("doc_id") % 3 === k), "doc_id", "text",
-              root, cfg, maxPairs = 0L))
+            idx.upsert(docs.filter(col("doc_id") % 3 === k), -1L))
         }
         val got = graft.streaming.StreamDedup.indexLabels(s, root)
           .localCheckpoint(true) // materialize before the index dir goes
@@ -3957,7 +3947,7 @@ object SparkEntry {
              |SELECT id, least(min(r), id) AS cluster FROM reach GROUP BY id""".stripMargin)),
     ("q_dedup_clusters_del", // the DELETION face of the incremental
       // cluster ledger: ingest in three generation-tracked batches,
-      // tombstone every doc_id % 7 == 3 (StreamDedup.deleteDocs — one
+      // tombstone every doc_id % 7 == 3 (StreamDedup.Index delete — one
       // log append + exact repair of the affected components from the
       // index's own stored signatures), and the served labels must
       // equal the batch clustering over the LIVE corpus: component
@@ -3970,15 +3960,14 @@ object SparkEntry {
         val root = java.nio.file.Files
           .createTempDirectory("q_dedup_clusters_del").toString
         val docs = t(s, dir, "documents")
-        val cfg = graft.streaming.StreamDedup.Config(threshold = 0.5)
+        val idx = new graft.streaming.StreamDedup.Index(s, root, "doc_id",
+          "text", graft.streaming.StreamDedup.Config(threshold = 0.5),
+          labels = true)
         (0 until 3).foreach { k =>
           graft.GraftSession.releaseCheckpoint(
-            graft.streaming.StreamDedup.upsertBatchWithLabels(
-              docs.filter(col("doc_id") % 3 === k), "doc_id", "text",
-              root, cfg, batchId = k.toLong))
+            idx.upsert(docs.filter(col("doc_id") % 3 === k), k.toLong))
         }
-        graft.streaming.StreamDedup.deleteDocs(s, root,
-          docs.filter(col("doc_id") % 7 === 3).select("doc_id"), 3L, cfg)
+        idx.delete(docs.filter(col("doc_id") % 7 === 3).select("doc_id"), 3L)
         val got = graft.streaming.StreamDedup.indexLabels(s, root)
           .localCheckpoint(true) // materialize before the index dir goes
         import scala.jdk.CollectionConverters._
@@ -4655,7 +4644,7 @@ object SparkEntry {
       // corollary of fit-once-serve-many: new vectors must become
       // searchable without refit or rebuild): build on the lower half
       // of the corpus, then stream the upper half in through
-      // StreamIvfPq.upsertBatch — one coarse-assign + PQ-encode
+      // a StreamIvfPq.Index upsert — one coarse-assign + PQ-encode
       // projection per batch under the FROZEN sidecar model, appended
       // into cell partitions — with an at-least-once RETRY left
       // uncompacted so the query-side one-row-per-id dedup is what
@@ -4676,9 +4665,10 @@ object SparkEntry {
           "vec_id", "embedding", root)
         val b1 = corpus.filter(col("vec_id") > mid && col("vec_id") % 2 === 0)
         val b2 = corpus.filter(col("vec_id") > mid && col("vec_id") % 2 === 1)
-        graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", root, 0L)
-        graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", root, 0L) // retry
-        graft.streaming.StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", root, 1L)
+        val idx = new graft.streaming.StreamIvfPq.Index(s, root, "vec_id", "embedding")
+        idx.upsert(b1, 0L)
+        idx.upsert(b1, 0L) // retry
+        idx.upsert(b2, 1L)
         val got = Similarity.queryIvfPqTable(s, root, corpus, "vec_id",
           "embedding", q, kTop = 20).localCheckpoint(true)
         import scala.jdk.CollectionConverters._
@@ -4707,9 +4697,8 @@ object SparkEntry {
           .createTempDirectory("q_embed_ivfpq_refit").toString + "/index"
         Similarity.buildIvfPq(corpus.filter(col("vec_id") <= maxId / 2),
           "vec_id", "embedding", root)
-        graft.streaming.StreamIvfPq.upsertBatch(
-          corpus.filter(col("vec_id") > maxId / 2),
-          "vec_id", "embedding", root, 0L)
+        new graft.streaming.StreamIvfPq.Index(s, root, "vec_id", "embedding")
+          .upsert(corpus.filter(col("vec_id") > maxId / 2), 0L)
         graft.streaming.StreamIvfPq.refit(corpus, "vec_id", "embedding", root)
         val got = graft.streaming.StreamIvfPq.query(s, root, corpus,
           "vec_id", "embedding", q, kTop = 20).localCheckpoint(true)
@@ -4724,7 +4713,7 @@ object SparkEntry {
     ("q_embed_ivfpq_del", // DELETES for the at-ingest index (the
       // compliance path a training-data store needs, applied to
       // vectors): build on the lower half, stream the upper half in,
-      // then tombstone vec_id % 7 == 3 (StreamIvfPq.deleteVecs — one
+      // then tombstone vec_id % 7 == 3 (StreamIvfPq.Index delete — one
       // generation-log row per id, no rebuild), resurrect the % 14 ==
       // 3 half under a higher batch id, redeliver a pre-delete batch
       // (its stale generation cannot outrank the tombstone), and
@@ -4746,16 +4735,13 @@ object SparkEntry {
           "vec_id", "embedding", root)
         val b1 = corpus.filter(col("vec_id") > mid && col("vec_id") % 2 === 0)
         val b2 = corpus.filter(col("vec_id") > mid && col("vec_id") % 2 === 1)
-        graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", root, 0L)
-        graft.streaming.StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", root, 1L)
-        graft.streaming.StreamIvfPq.deleteVecs(
-          corpus.filter(col("vec_id") % 7 === 3).select("vec_id"),
-          "vec_id", root, 2L)
-        graft.streaming.StreamIvfPq.upsertBatch(
-          corpus.filter(col("vec_id") % 14 === 3),
-          "vec_id", "embedding", root, 3L) // resurrection
-        graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", root, 0L) // stale redelivery
-        graft.streaming.StreamIvfPq.compact(s, root)
+        val idx = new graft.streaming.StreamIvfPq.Index(s, root, "vec_id", "embedding")
+        idx.upsert(b1, 0L)
+        idx.upsert(b2, 1L)
+        idx.delete(corpus.filter(col("vec_id") % 7 === 3).select("vec_id"), 2L)
+        idx.upsert(corpus.filter(col("vec_id") % 14 === 3), 3L) // resurrection
+        idx.upsert(b1, 0L) // stale redelivery
+        idx.compact()
         val got = graft.streaming.StreamIvfPq.query(s, root, corpus,
           "vec_id", "embedding", q, kTop = 20).localCheckpoint(true)
         import scala.jdk.CollectionConverters._

@@ -111,6 +111,15 @@ object Dedup {
     *     raw text — no re-tokenizing per pair) for survivors.
     * Output: (id_a, id_b, jaccard) for pairs ≥ `threshold`.
     */
+  /** Candidate pairs (id_a < id_b) of a banded relation: the ids that
+    * share a (band, bucket). May repeat a pair that shares several. */
+  private[graft] def bandPairs(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"),
+        col("a.band") === col("b.band") &&
+        col("a.bucket") === col("b.bucket") &&
+        col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+
   private[graft] def verifyCandidates(cand: DataFrame, sides: DataFrame,
       numHashes: Int, threshold: Double): DataFrame = {
     val slack = 2.5 / math.sqrt(numHashes.toDouble)
@@ -151,13 +160,7 @@ object Dedup {
     // of the corpus size, so MEMORY_AND_DISK is safe at scale.
     val withSig = signatureRelation(df, idCol, textCol, shingleSize, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bandBuckets(withSig, numHashes, bands)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val cand = bandPairs(bandBuckets(withSig, numHashes, bands)).distinct()
     // Materialize eagerly (localCheckpoint RDDs are context-cleaned
     // when unreferenced) so the persisted signature relation can be
     // released here instead of leaking across invocations. Note this

@@ -1275,7 +1275,7 @@ object Similarity {
     // exchange carries only the probed cells' (id, m-byte codes) rows.
     // Cross-cell staleness caveat: a re-ingested vector that moved
     // cells serves from its old cell until [[graft.streaming
-    // .StreamIvfPq.compact]] folds the table (which is latest-wins
+    // .StreamIvfPq]] compaction folds the table (which is latest-wins
     // across ALL cells).
     // `excludeIds` (one id column; StreamIvfPq's tombstone dead set)
     // is anti-joined BEFORE the shortlist so the top-k is always k

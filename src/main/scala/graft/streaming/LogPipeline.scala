@@ -98,26 +98,32 @@ object LogPipeline {
     * `MatchBolt.java:89-97`), so `registry.create(...)` mid-stream
     * starts matching on the next batch without restarting the query —
     * filters are data, not plan structure. Same layout as
-    * [[resultsQuery]].
+    * [[resultsQuery]]; a replayed batch is written once
+    * ([[StreamState.appendOnce]]).
     */
   def dynamicResultsQuery(parsedStream: DataFrame,
       registry: graft.operators.FilterRegistry, path: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    val parts = partitionColumns(parsedStream.sparkSession, path)
+      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
     parsedStream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val filters = registry.list()
-        if (filters.nonEmpty)
-          appendResults(
-            FilterFanout.explodeMatches(batch, "_raw", filters)
-              .select("filter_id", "ts", "_raw")
-              .withColumn("date", LogFunctions.dateSuffix(col("ts"))),
-            parts, path)
-      }
+      .foreachBatch(dynamicResultsBatch(registry, path,
+        partitionColumns(parsedStream.sparkSession, path)) _)
       .start()
+
+  /** [[dynamicResultsQuery]]'s micro-batch writer. */
+  private[graft] def dynamicResultsBatch(
+      registry: graft.operators.FilterRegistry, path: String,
+      parts: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
+    val filters = registry.list()
+    if (filters.nonEmpty)
+      StreamState.appendOnce(batch.sparkSession, path, batchId)(
+        appendResults(
+          FilterFanout.explodeMatches(batch, "_raw", filters)
+            .select("filter_id", "ts", "_raw")
+            .withColumn("date", LogFunctions.dateSuffix(col("ts"))),
+          parts, _))
   }
 
   /** Windowed stats aggregation (reference A1-A3 collapsed): tumbling
@@ -278,7 +284,8 @@ object LogPipeline {
     * micro-batch and append flagged outliers to a parquet table —
     * replaces `OutlierCollectorBolt` → supervisor POST → BoltDB.
     * Trigger mirrors the reference's 60 s cadence
-    * (`OutlierDetectionBolt.java:184-189`).
+    * (`OutlierDetectionBolt.java:184-189`). A replayed batch is written
+    * once ([[StreamState.appendOnce]]).
     */
   def outlierQuery(statsStream: DataFrame, path: String, checkpoint: String,
       cfg: graft.ml.Outliers.Config = graft.ml.Outliers.Config(),
@@ -287,15 +294,19 @@ object LogPipeline {
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        implicit val s: SparkSession = batch.sparkSession
-        val hits = graft.ml.Outliers.detect(
-          batch.select(col("filter_id"), col("bucket"),
-            col("cnt").as("count")), cfg)
-        if (!hits.isEmpty)
-          hits.toDF().write.mode("append").parquet(path)
-      }
+      .foreachBatch(outlierBatch(path, cfg) _)
       .start()
+
+  /** [[outlierQuery]]'s micro-batch writer. */
+  private[graft] def outlierBatch(path: String,
+      cfg: graft.ml.Outliers.Config)(batch: DataFrame, batchId: Long): Unit = {
+    implicit val s: SparkSession = batch.sparkSession
+    val hits = graft.ml.Outliers.detect(
+      batch.select(col("filter_id"), col("bucket"),
+        col("cnt").as("count")), cfg)
+    if (!hits.isEmpty)
+      StreamState.appendOnce(s, path, batchId)(hits.toDF().write.parquet(_))
+  }
 
   /** One date partition of a results or stats table: its directory,
     * its name under the root (`date=…`, or `filter_id=…/date=…` in the

@@ -25,6 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run and every later one) proceeds normally. Run it only once the
   * sink is STOPPED; a live logged sink is skipped (and reported) by
   * [[LogPipeline.compactResults]]'s guard otherwise.
+  *
+  * Incremental indexes: `indexes` takes any [[StreamIndex]] value (the
+  * text, sketch, IVF-PQ, semantic, BPE and near-dup indexes alike), and
+  * each is compacted through the one lifecycle.
   */
 object Maintenance {
 
@@ -107,11 +111,7 @@ object Maintenance {
       retireResultsSink: Boolean = false,
       graceMillis: Long = 10L * 60 * 1000,
       nowMillis: Long = System.currentTimeMillis(),
-      indexRoots: Seq[String] = Nil,
-      sketchRoots: Seq[String] = Nil,
-      ivfPqRoots: Seq[String] = Nil,
-      dedupRoots: Seq[String] = Nil,
-      semRoots: Seq[String] = Nil,
+      indexes: Seq[StreamIndex[Any]] = Nil,
       ivfPqRefit: Seq[IvfPqRefitPolicy] = Nil,
       mixPolicies: Seq[MixPolicy] = Nil): Report = {
     val results = s"$root/results"
@@ -153,28 +153,18 @@ object Maintenance {
       maxFiles, skipDate, targetFileBytes,
       dropSinkLog = false, graceMillis = graceMillis)
     // incremental-index upkeep: fold streaming deltas back to their
-    // one-shot size (posting sets / sketch cells / band+sig sets).
-    // Each compaction is a no-op on a root that was never ingested,
-    // and all four use the merge-and-retire snapshot contract
-    // (StreamState): safe to drive from this maintenance job BESIDE
-    // a live ingest — a micro-batch landing mid-compaction is never
-    // erased.
+    // one-shot size, each index by its own fold ([[StreamIndex]]). A
+    // root that was never ingested is skipped, and every compaction
+    // is merge-and-retire over a snapshot (StreamState): safe to drive
+    // from this maintenance job BESIDE a live ingest — a micro-batch
+    // landing mid-compaction is never erased.
     def exists(r: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(r)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    val compactedIdx =
-      indexRoots.filter(exists).map { r =>
-        StreamTextIndex.compact(spark, r); r
-      } ++ sketchRoots.filter(exists).map { r =>
-        StreamSketch.compact(spark, r); r
-      } ++ ivfPqRoots.filter(exists).map { r =>
-        StreamIvfPq.compact(spark, r); r
-      } ++ dedupRoots.filter(exists).map { r =>
-        StreamDedup.compact(spark, r); r
-      } ++ semRoots.filter(exists).map { r =>
-        StreamSemDedup.compact(spark, r); r
-      }
+    val compactedIdx = indexes.filter(i => exists(i.root)).map { i =>
+      i.compact(); i.root
+    }
     // drift repair LAST — the imbalance read must see this run's
     // compaction (retried batches' duplicate rows inflate cell fills),
     // and a refit over a just-folded table re-encodes one row per id

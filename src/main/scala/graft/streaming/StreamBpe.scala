@@ -23,24 +23,44 @@ import org.apache.spark.sql.functions._
   * Delivery: at-least-once. Rows carry their `batch_id`; a retried
   * batch appends byte-identical rows (deterministic encode) and the
   * read rule keeps each document's NEWEST generation then distincts —
-  * retries cost space until [[compact]], never correctness, and
+  * retries cost space until the next compaction, never correctness, and
   * re-ingesting a MODIFIED document under a higher batch id is
   * latest-wins, like [[StreamTextIndex]].
   */
 object StreamBpe {
 
-  /** Encode one micro-batch under the frozen tokenizer and append its
-    * (id, pos, piece, piece_id, batch_id) rows. One scan of the
-    * batch, two broadcast joins — no state read, no shuffle against
-    * history. */
-  def encodeBatch(batch: DataFrame, idCol: String, textCol: String,
-      learned: Bpe.Learned, root: String, batchId: Long): Unit =
-    BatchTimer.timed("bpe.encode") {
-    appendEncoded(Bpe.encodeIdsWith(batch, idCol, textCol, learned)
-      .withColumn("batch_id", BatchConst(lit(batchId))), root)
-    // generation row LAST (the StreamTextIndex crash contract): a
-    // crash above leaves the previous version fully served
-    StreamState.appendGens(batch.select(col(idCol)), root, batchId)
+  /** The encoded table at `root`, bound to the batch's `idCol` and
+    * `textCol` and the frozen tokenizer `learned`. [[upsert]] encodes
+    * one micro-batch and appends its (id, pos, piece, piece_id,
+    * batch_id) rows: one scan of the batch, two broadcast joins — no
+    * state read, no shuffle against history. A delete (the compliance
+    * path a training-data store needs) stops a document's pieces from
+    * serving from the next read; compaction folds retries and
+    * superseded generations away, to one row per live (id, pos), each
+    * kept row preserving its batch id (its document's generation) for
+    * the read rule. A delete reads only the id binding, so a value
+    * built for deletes alone may leave `textCol` and `learned` null. */
+  final class Index(val spark: SparkSession, val root: String,
+      val idCol: String, textCol: String, learned: Bpe.Learned)
+      extends LoggedIndex[Unit] {
+    protected def kind = "bpe"
+
+    def upsert(batch: DataFrame, batchId: Long): Unit =
+      BatchTimer.timed("bpe.encode") {
+      appendEncoded(Bpe.encodeIdsWith(batch, idCol, textCol, learned)
+        .withColumn("batch_id", BatchConst(lit(batchId))), root)
+      // generation row LAST (the StreamTextIndex crash contract): a
+      // crash above leaves the previous version fully served
+      StreamState.appendGens(batch.select(col(idCol)), root, batchId)
+    }
+
+    def committed(): DataFrame = readEncoded(spark, root)
+
+    // each document's newest live generation, distinct
+    protected def tables = Seq((root, snap =>
+      appendEncoded(
+        StreamState.newestLive(snap, root, snap.columns.head).distinct(),
+        root)))
   }
 
   // The encoded table is the one state table not written through
@@ -54,20 +74,6 @@ object StreamBpe {
   private def appendEncoded(df: DataFrame, root: String): Unit =
     df.write.mode("append").parquet(root)
 
-  /** DELETE documents from the live encoded table — the compliance
-    * path a training-data store needs: one tombstone generation per
-    * id ([[StreamState.appendGens]]), the document's pieces stop
-    * serving from the next read, a later [[encodeBatch]] under a
-    * higher batch id resurrects it, and [[compact]] physically
-    * retires the dead rows (the race-proof guard of
-    * [[StreamState.newestLive]]). */
-  def deleteDocs(ids: DataFrame, idCol: String, root: String,
-      batchId: Long): Unit =
-    BatchTimer.timed("bpe.delete") {
-      StreamState.appendGens(ids.select(col(idCol)), root, batchId,
-        del = true)
-    }
-
   /** The live encoded table: each document's newest generation, one
     * row per (id, pos) — [[Bpe.encodeIds]]'s exact shape, so every
     * downstream consumer (packing, chunking, vocab stats) reads it
@@ -76,7 +82,7 @@ object StreamBpe {
     * happens, NEVER a corpus-wide window over the token stream (that
     * window was the 22×-at-x100 scale killer this replaced); the
     * only remaining exchange is the (id, pos) retry dedup, which
-    * [[compact]] makes a no-op-sized shuffle again. */
+    * compaction makes a no-op-sized shuffle again. */
   def readEncoded(spark: SparkSession, root: String): DataFrame = {
     val df = spark.read.parquet(root)
     val idc = df.columns.head
@@ -99,25 +105,4 @@ object StreamBpe {
       enc.groupBy(col(idc)).agg(count(lit(1)).as("n_tokens")),
       idc, tokenBudget)
   }
-
-  /** Fold retries and superseded generations away: state returns to
-    * one row per live (id, pos). MERGE-AND-RETIRE (see
-    * [[StreamState]]): merged rows append from a snapshot, the
-    * snapshot retires after, so an [[encodeBatch]] landing
-    * mid-compaction is never erased. Kept rows preserve their batch
-    * id (their document's generation) for the read rule. */
-  def compact(spark: SparkSession, root: String): Unit = {
-    compactSnapshot(spark, root, StreamState.listDataFiles(spark, root))
-    StreamState.compactGenLog(spark, root)
-  }
-
-  /** The compaction body over an explicit snapshot: each document's
-    * newest live generation ([[StreamState.newestLive]]), distinct. */
-  private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit =
-    StreamState.mergeAndRetire(spark, root, snapshot) { snap =>
-      appendEncoded(
-        StreamState.newestLive(snap, root, snap.columns.head).distinct(),
-        root)
-    }
 }

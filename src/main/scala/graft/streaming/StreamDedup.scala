@@ -17,14 +17,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Index layout under `root` (both tables plain parquet, appendable):
   *  - `bands/` — (id, band, bucket) rows partitioned by
   *    `pb = pmod(bucket, dirBuckets)`, which bounds the size of each
-  *    file and of each directory [[compact]] rewrites. The candidate
+  *    file and of each directory compaction rewrites. The candidate
   *    probe reads every directory: a batch's `bands × batch size`
   *    buckets reach all `dirBuckets` of them (16 × 60 = 960 buckets
   *    over 64 directories leave one untouched with probability
   *    ~2e-5), so pruning on pb would buy nothing.
   *  - `sigs/` — one (id, hs, sig) row per document for exact
   *    verification, partitioned by `pid = pmod(hash(id), dirBuckets)`
-  *    so label repair ([[deleteDocs]]) reads only its members'
+  *    so label repair (`Index.delete`) reads only its members'
   *    directories; the per-batch verify semi-joins the whole table
   *    against the candidates' ids.
   *
@@ -40,9 +40,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * append its rows twice. Readers are duplicate-proof (candidates go
   * through `distinct`, verification sides through
   * `dropDuplicates(id)`), so a retry costs space, not correctness;
-  * [[compact]] reclaims the space by rewriting both tables deduped.
+  * compaction reclaims the space by rewriting both tables deduped.
   *
-  * Deletion ([[deleteDocs]]): MinHash signatures and band buckets are
+  * Deletion (`Index.delete`): MinHash signatures and band buckets are
   * DERIVED DATA of the document — a compliance forget must remove
   * them, and near-dup structure must behave as if the document never
   * existed. One tombstone generation in the shared `_docs` log
@@ -55,10 +55,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * members' pid directories; no document text is ever needed). An id
   * here names an IMMUTABLE document (the pipeline's append-only id
   * contract), so presence is the only generation that matters: a
-  * later [[upsertBatch]] carrying a tombstoned id under a higher
+  * later upsert carrying a tombstoned id under a higher
   * `batchId` resurrects it, and its re-emitted pairs re-fold into the
   * labels. Physical retire of dead bands/sigs rows happens at
-  * [[compact]]. Generation tracking is opt-in: pass `batchId` to the
+  * compaction. Generation tracking is opt-in: pass `batchId` to the
   * upserts once you intend to delete (monotone with the delete's —
   * the [[StreamTextIndex]] contract); a root with a generation log
   * rejects an upsert without one, loudly.
@@ -82,191 +82,209 @@ object StreamDedup {
     if (dead == null) df
     else df.join(broadcast(dead), Seq("id"), "left_anti")
 
-  /** Ingest one batch of documents: emit the near-dup pairs the batch
-    * forms (within itself AND against every previously-ingested
-    * document), then append the batch's band buckets + signatures to
-    * the index. Returns the verified pairs (id_a, id_b, jaccard),
-    * id_a < id_b, eagerly materialized — callers write or collect it;
-    * the index on disk is already updated when this returns. The
-    * materialization holds executor blocks: a long-lived caller (one
-    * upsert per micro-batch) must [[StreamState.release]] the returned
-    * frame once consumed, as [[attach]] and
-    * [[StreamPretrain.ingestBatch]] do, or the per-batch deltas
-    * accumulate until the executors OOM.
+  /** The index at `root`, bound to the batch's `idCol` and `textCol`
+    * and `cfg`. [[upsert]] ingests one batch of documents: it emits the
+    * near-dup pairs the batch forms (within itself AND against every
+    * previously-ingested document), then appends the batch's band
+    * buckets + signatures to the index. It returns the verified pairs
+    * (id_a, id_b, jaccard), id_a < id_b, eagerly materialized — callers
+    * write or collect it; the index on disk is already updated when
+    * this returns. The materialization holds executor blocks: a
+    * long-lived caller (one upsert per micro-batch) must
+    * [[StreamState.release]] the returned frame once consumed, as
+    * [[attach]] and [[StreamPretrain.ingestBatch]] do, or the per-batch
+    * deltas accumulate until the executors OOM. A `batchId` below zero
+    * ingests without generation tracking (see the header).
+    *
+    * With `labels`, every upsert also maintains the persistent
+    * cluster-label table (`labels/` under `root`): [[updateLabels]]
+    * folds the batch's pairs into the labeling incrementally (at most
+    * `maxPairs` on the driver), so after every batch [[indexLabels]]
+    * equals the BATCH [[Dedup.nearDupClusters]] over all pairs ever
+    * emitted — clusters are maintained at ingest, never recomputed from
+    * scratch. The single-writer timeline on labels/ is intact: the fold
+    * runs exactly once per batch, ordered against other label writes by
+    * the caller's ingest serialization; it never reads bands/ or sigs/,
+    * so the concurrent appends are invisible to it.
+    *
+    * A delete forgets documents: from the next read on, tombstoned ids
+    * appear in no pair, no label, and no probe result, and compaction
+    * physically retires their signatures and band buckets — the index
+    * behaves as if the documents were never ingested (see the deletion
+    * section of the object header). The cluster labels are repaired
+    * EXACTLY in the same call: components that lose a member are
+    * re-clustered over their live members' stored signatures, so splits
+    * (a deleted bridge) and canonical promotions (the min id leaves)
+    * come out as the batch operator would over the live corpus. Runs on
+    * the ingest timeline (same single-writer contract as
+    * [[updateLabels]]) with a `batchId` monotone against the upserts'.
+    * Retry-idempotent: the tombstone append is first, so a crash
+    * mid-call leaves every PAIR read already exact and the redelivery
+    * finishes the label repair. Cost: O(affected components), never
+    * O(corpus) — the sigs read prunes to the members' pid directories,
+    * the label rewrite touches only directories holding an affected
+    * row.
+    *
+    * COMPACTION folds retry duplicates out of both index tables,
+    * preserving the partition layout. Rows of ids dead AT THE SNAPSHOT
+    * READ drop from the fold; that is safe beside a concurrent
+    * resurrection, because resurrecting IS an upsert, so the id's fresh
+    * rows land outside the snapshot and survive the retire. (The labels
+    * table needs no compaction: [[updateLabels]] rewrites whole
+    * directories via guarded dynamic partition overwrite, so retries
+    * never accumulate rows there.)
     */
-  def upsertBatch(batch: DataFrame, idCol: String, textCol: String,
-      root: String, cfg: Config = Config(), batchId: Long = -1L,
-      onPairs: DataFrame => Unit = null): DataFrame =
-    BatchTimer.timed("dedup.upsert") {
-    val spark = batch.sparkSession
-    // generation tracking (see the deletion section of the header)
-    if (StreamState.genLogExists(spark, root))
-      require(batchId >= 0,
-        s"index at $root tracks generations (a deleteDocs ran); pass " +
-          "a monotone batchId to every upsert so deletes and " +
-          "resurrections order against ingests")
-    // this upsert resurrects every id it carries, so the dead set is
-    // the committed one minus the batch's ids — no need to log the
-    // batch's generations before reading it. The log append then
-    // joins the index appends below; a crash before it lands leaves a
-    // resurrected id hidden until the retry re-appends it.
-    val dead = Option(StreamState.deadIds(spark, root))
-      .map(_.join(batch.select(col(idCol).as("id")), Seq("id"), "left_anti"))
-      .orNull
-    // the batch's signature relation feeds banding, verification, and
-    // the index append — persist or it recomputes per branch
-    val sig = Dedup.signatureRelation(batch, idCol, textCol,
-        cfg.shingleSize, cfg.numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val banded = Dedup.bandBuckets(sig, cfg.numHashes, cfg.bands)
-        .withColumn("pb", pmod(col("bucket"), lit(cfg.dirBuckets)))
+  final class Index(val spark: SparkSession, val root: String,
+      val idCol: String, textCol: String, cfg: Config = Config(),
+      labels: Boolean = false,
+      maxPairs: Long = Dedup.defaultMaxDeltaPairs)
+      extends LoggedIndex[DataFrame] {
+    protected def kind = "dedup"
+
+    def upsert(batch: DataFrame, batchId: Long): DataFrame =
+      BatchTimer.timed("dedup.upsert") {
+      // generation tracking (see the deletion section of the header)
+      if (StreamState.genLogExists(spark, root))
+        require(batchId >= 0,
+          s"index at $root tracks generations (a delete ran); pass " +
+            "a monotone batchId to every upsert so deletes and " +
+            "resurrections order against ingests")
+      // this upsert resurrects every id it carries, so the dead set is
+      // the committed one minus the batch's ids — no need to log the
+      // batch's generations before reading it. The log append then
+      // joins the index appends below; a crash before it lands leaves a
+      // resurrected id hidden until the retry re-appends it.
+      val dead = Option(StreamState.deadIds(spark, root))
+        .map(_.join(batch.select(col(idCol).as("id")), Seq("id"), "left_anti"))
+        .orNull
+      // the batch's signature relation feeds banding, verification, and
+      // the index append — persist or it recomputes per branch
+      val sig = Dedup.signatureRelation(batch, idCol, textCol,
+          cfg.shingleSize, cfg.numHashes)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // the historical tables this batch probes: SNAPSHOT both file
-        // lists NOW, before the appends below can start — parquet
-        // reads resolve their file index eagerly, so the plans built
-        // from these frames can never see the batch's own just-written
-        // rows even while the appends run concurrently
-        val histBands =
-          if (!StreamState.hasDataFiles(spark, bandsPath(root))) None
-          else Some(spark.read.parquet(bandsPath(root)))
-        val histSigs =
-          if (!StreamState.hasDataFiles(spark, sigsPath(root))) None
-          else Some(spark.read.parquet(sigsPath(root)))
-        // PROBE→VERIFY and the index APPENDS run concurrently (r14
-        // verdict item 4 — at sf0.1 the sequential form paid
-        // probe ~0.7 s, THEN verify ~2.6 s, THEN append ~1.6 s per
-        // batch; the overlap makes the wall max(probe+verify,
-        // appends), and the persisted sig/banded relations
-        // materialize ONCE under whichever action gets there first —
-        // the storage layer serializes concurrent computes of the
-        // same cached partition). Failure semantics are the
-        // sequential ones: inParallel propagates after all actions
-        // settle, the micro-batch retries everything, and the readers
-        // are duplicate-proof (dropDuplicates on sigs, distinct() on
-        // candidates), so a replayed append is absorbed.
-        val sigOut = sig
-          .withColumn("pid", pmod(hash(col("id")), lit(cfg.dirBuckets)))
-        @volatile var pairs: DataFrame = null
-        def probeAndVerify(): DataFrame = {
-          // intra-batch candidates: the batch operator's self-join
-          val intra = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.id") < col("b.id"))
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          // cross candidates: probe every historical band directory
-          // (a batch's buckets reach all of them — see the header);
-          // tombstoned documents never surface as partners
-          val cross = histBands.map { hb =>
-            banded.as("a").join(dropDead(hb, dead).as("b"),
-                col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.id") =!= col("b.id"))
-              .select(
-                least(col("a.id"), col("b.id")).as("id_a"),
-                greatest(col("a.id"), col("b.id")).as("id_b"))
-          }
-          // materialized ONCE: verification and both halves of
-          // `wanted` read it, and an unmaterialized frame would rerun
-          // the self-join, the probe and the history scan per reader
-          val cand = BatchTimer.timed("dedup.upsert.probe") {
-            cross.fold(intra)(intra.union).distinct().localCheckpoint(true)
-          }
-          try {
-            // verification sides: this batch's signatures plus the
-            // historical ones the candidates touch (semi-join bounds
-            // the read to O(candidates)); dropDuplicates absorbs retry
-            // appends
-            val sides = histSigs.fold(sig) { hs =>
-              val wanted = cand.select(col("id_a").as("id"))
-                .union(cand.select(col("id_b").as("id"))).distinct()
-              sig.unionByName(
-                dropDead(hs.select("id", "hs", "sig"), dead)
-                  .join(wanted, Seq("id"), "left_semi"))
-                .dropDuplicates("id")
+        val banded = Dedup.bandBuckets(sig, cfg.numHashes, cfg.bands)
+          .withColumn("pb", pmod(col("bucket"), lit(cfg.dirBuckets)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // the historical tables this batch probes: SNAPSHOT both file
+          // lists NOW, before the appends below can start — parquet
+          // reads resolve their file index eagerly, so the plans built
+          // from these frames can never see the batch's own just-written
+          // rows even while the appends run concurrently
+          val histBands =
+            if (!StreamState.hasDataFiles(spark, bandsPath(root))) None
+            else Some(spark.read.parquet(bandsPath(root)))
+          val histSigs =
+            if (!StreamState.hasDataFiles(spark, sigsPath(root))) None
+            else Some(spark.read.parquet(sigsPath(root)))
+          // PROBE→VERIFY and the index APPENDS run concurrently (r14
+          // verdict item 4 — at sf0.1 the sequential form paid
+          // probe ~0.7 s, THEN verify ~2.6 s, THEN append ~1.6 s per
+          // batch; the overlap makes the wall max(probe+verify,
+          // appends), and the persisted sig/banded relations
+          // materialize ONCE under whichever action gets there first —
+          // the storage layer serializes concurrent computes of the
+          // same cached partition). Failure semantics are the
+          // sequential ones: inParallel propagates after all actions
+          // settle, the micro-batch retries everything, and the readers
+          // are duplicate-proof (dropDuplicates on sigs, distinct() on
+          // candidates), so a replayed append is absorbed.
+          val sigOut = sig
+            .withColumn("pid", pmod(hash(col("id")), lit(cfg.dirBuckets)))
+          @volatile var pairs: DataFrame = null
+          def probeAndVerify(): DataFrame = {
+            // intra-batch candidates: the batch operator's self-join
+            val intra = Dedup.bandPairs(banded)
+            // cross candidates: probe every historical band directory
+            // (a batch's buckets reach all of them — see the header);
+            // tombstoned documents never surface as partners
+            val cross = histBands.map { hb =>
+              banded.as("a").join(dropDead(hb, dead).as("b"),
+                  col("a.band") === col("b.band") &&
+                  col("a.bucket") === col("b.bucket") &&
+                  col("a.id") =!= col("b.id"))
+                .select(
+                  least(col("a.id"), col("b.id")).as("id_a"),
+                  greatest(col("a.id"), col("b.id")).as("id_b"))
             }
-            BatchTimer.timed("dedup.upsert.verify") {
-              Dedup.verifyCandidates(cand, sides,
-                  cfg.numHashes, cfg.threshold)
-                .localCheckpoint(true) // materialize NOW, beside the appends
+            // materialized ONCE: verification and both halves of
+            // `wanted` read it, and an unmaterialized frame would rerun
+            // the self-join, the probe and the history scan per reader
+            val cand = BatchTimer.timed("dedup.upsert.probe") {
+              cross.fold(intra)(intra.union).distinct().localCheckpoint(true)
             }
-          } finally StreamState.release(cand)
-        }
-        // `onPairs` (r17): a consumer that depends ONLY on the
-        // verified pair delta (the labels fold) runs on the probe
-        // thread as soon as `pairs` has materialized, OVERLAPPING the
-        // index appends on the other thread — the per-batch wall pays
-        // max(probe+verify+consumer, appends) instead of
-        // max(probe+verify, appends) + consumer. Failure semantics
-        // are unchanged: inParallel settles everything before
-        // propagating, the micro-batch retries the whole call, and
-        // both the appends and the labels fold are retry-idempotent.
-        StreamState.inParallel(
-          () => {
-            pairs = probeAndVerify()
-            if (onPairs != null) onPairs(pairs)
-          },
-          () => BatchTimer.timed("dedup.upsert.append") {
-            val appends = Seq(
-              () => StreamState.append(banded, bandsPath(root), Some("pb")),
-              () => StreamState.append(sigOut, sigsPath(root), Some("pid"))) ++
-              Option.when(batchId >= 0)(() =>
-                StreamState.appendGens(batch.select(col(idCol)), root, batchId))
-            StreamState.inParallel(appends: _*)
-          })
-        pairs
-      } finally banded.unpersist(false)
-    } finally sig.unpersist(false)
+            try {
+              // verification sides: this batch's signatures plus the
+              // historical ones the candidates touch (semi-join bounds
+              // the read to O(candidates)); dropDuplicates absorbs retry
+              // appends
+              val sides = histSigs.fold(sig) { hs =>
+                val wanted = cand.select(col("id_a").as("id"))
+                  .union(cand.select(col("id_b").as("id"))).distinct()
+                sig.unionByName(
+                  dropDead(hs.select("id", "hs", "sig"), dead)
+                    .join(wanted, Seq("id"), "left_semi"))
+                  .dropDuplicates("id")
+              }
+              BatchTimer.timed("dedup.upsert.verify") {
+                Dedup.verifyCandidates(cand, sides,
+                    cfg.numHashes, cfg.threshold)
+                  .localCheckpoint(true) // materialize NOW, beside the appends
+              }
+            } finally StreamState.release(cand)
+          }
+          // the labels fold (r17) depends ONLY on the verified pair
+          // delta, so it runs on the probe thread as soon as `pairs` has
+          // materialized, OVERLAPPING the index appends on the other
+          // thread — the per-batch wall pays
+          // max(probe+verify+consumer, appends) instead of
+          // max(probe+verify, appends) + consumer. Failure semantics
+          // are unchanged: inParallel settles everything before
+          // propagating, the micro-batch retries the whole call, and
+          // both the appends and the labels fold are retry-idempotent.
+          StreamState.inParallel(
+            () => {
+              pairs = probeAndVerify()
+              if (labels) updateLabels(spark, root, pairs, cfg, maxPairs)
+            },
+            () => BatchTimer.timed("dedup.upsert.append") {
+              val appends = Seq(
+                () => StreamState.append(banded, bandsPath(root), Some("pb")),
+                () => StreamState.append(sigOut, sigsPath(root), Some("pid"))) ++
+                Option.when(batchId >= 0)(() =>
+                  StreamState.appendGens(batch.select(col(idCol)), root, batchId))
+              StreamState.inParallel(appends: _*)
+            })
+          pairs
+        } finally banded.unpersist(false)
+      } finally sig.unpersist(false)
+    }
+
+    override protected def repair(deleted: DataFrame): Unit =
+      repairLabels(spark, root, deleted, cfg)
+
+    /** Every near-dup pair of the live documents ([[indexPairs]]). */
+    def committed(): DataFrame = indexPairs(spark, root, cfg)
+
+    protected def tables = {
+      lazy val dead = StreamState.deadIds(spark, root)
+      def table(path: String, keyCols: Seq[String],
+          dir: String): (String, DataFrame => Unit) =
+        (path, snap =>
+          StreamState.append(dropDead(snap, dead).dropDuplicates(keyCols),
+            path, Some(dir)))
+      Seq(table(bandsPath(root), Seq("id", "band", "bucket"), "pb"),
+        table(sigsPath(root), Seq("id"), "pid"))
+    }
   }
 
-  /** Ingest one batch AND maintain the persistent cluster-label table
-    * (`labels/` under `root`): [[upsertBatch]] for the pairs, then
-    * [[updateLabels]] folds them into the labeling incrementally. After
-    * every batch, [[indexLabels]] equals the BATCH
-    * [[Dedup.nearDupClusters]] over all pairs ever emitted — clusters
-    * are maintained at ingest, never recomputed from scratch.
-    */
-  def upsertBatchWithLabels(batch: DataFrame, idCol: String,
-      textCol: String, root: String, cfg: Config = Config(),
-      batchId: Long = -1L,
-      maxPairs: Long = Dedup.defaultMaxDeltaPairs): DataFrame =
-    // the labels fold depends only on the verified pair delta, so it
-    // rides upsertBatch's probe thread (`onPairs`) and OVERLAPS the
-    // bands/sigs appends (r17 — it used to start only after both
-    // appends settled). The single-writer timeline on labels/ is
-    // intact: the fold still runs exactly once per batch, ordered
-    // against other label writes by the caller's ingest serialization;
-    // it never reads bands/ or sigs/, so the concurrent appends are
-    // invisible to it.
-    upsertBatch(batch, idCol, textCol, root, cfg, batchId,
-      onPairs = pairs =>
-        updateLabels(batch.sparkSession, root, pairs, cfg, maxPairs))
-
-  /** Forget documents: from the next read on, tombstoned ids appear in
-    * no pair, no label, and no probe result, and [[compact]] physically
-    * retires their signatures and band buckets — the index behaves as
-    * if the documents were never ingested (see the deletion section of
-    * the object header). The cluster labels are repaired EXACTLY in
-    * this call: components that lose a member are re-clustered over
-    * their live members' stored signatures, so splits (a deleted
-    * bridge) and canonical promotions (the min id leaves) come out as
-    * the batch operator would over the live corpus. Runs on the ingest
-    * timeline (same single-writer contract as [[updateLabels]]) with a
-    * `batchId` monotone against the upserts'. Retry-idempotent: the
-    * tombstone append is first, so a crash mid-call leaves every PAIR
-    * read already exact and the redelivery finishes the label repair.
-    * Cost: O(affected components), never O(corpus) — the sigs read
-    * prunes to the members' pid directories, the label rewrite touches
-    * only directories holding an affected row.
-    */
-  def deleteDocs(spark: SparkSession, root: String, ids: DataFrame,
-      batchId: Long, cfg: Config = Config()): Unit =
-    BatchTimer.timed("dedup.delete") {
-      StreamState.appendGens(ids, root, batchId, del = true)
-      repairLabels(spark, root, ids.toDF("id"), cfg)
-    }
+  /** [[Index.upsert]] on a fresh binding of `root` — pairs only, no
+    * labels. */
+  def upsertBatch(batch: DataFrame, idCol: String, textCol: String,
+      root: String, cfg: Config = Config(), batchId: Long = -1L): DataFrame =
+    new Index(batch.sparkSession, root, idCol, textCol, cfg)
+      .upsert(batch, batchId)
 
   /** Re-cluster every component that currently contains one of
     * `seedIds`, from the stored signatures of its live members, and
@@ -300,13 +318,8 @@ object StreamDedup {
             .filter(col("pid").isin(pids: _*))
             .join(liveMembers.select("id"), Seq("id"), "left_semi")
             .select("id", "hs", "sig").dropDuplicates("id")
-          val banded = Dedup.bandBuckets(mSigs, cfg.numHashes, cfg.bands)
-          val cand = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.id") < col("b.id"))
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-            .distinct()
+          val cand = Dedup.bandPairs(
+            Dedup.bandBuckets(mSigs, cfg.numHashes, cfg.bands)).distinct()
           // affected-components-only pair set — delta-scoped by
           // construction, so the bounded union-find path applies
           Dedup.clustersDeltaScoped(
@@ -515,16 +528,16 @@ object StreamDedup {
         StructType(Seq(StructField("id", LongType),
           StructField("cluster", LongType))))
     }
-    // the anti-join is belt: [[deleteDocs]] repairs the table in the
+    // the anti-join is belt: a delete repairs the table in the
     // same call, so dead rows only exist inside a crashed delete's
     // redelivery window (and cost nothing when no delete ever ran)
     dropDead(spark.read.parquet(labelsPath(root)).select("id", "cluster"),
       StreamState.deadIds(spark, root))
   }
 
-  /** Whether any labels are currently folded ([[upsertBatchWithLabels]]
+  /** Whether any labels are currently folded (an [[Index]] with `labels`
     * writes none until a first near-dup pair exists, and a
-    * [[deleteDocs]] can empty the table again) — lets a composed
+    * delete can empty the table again) — lets a composed
     * consumer ([[StreamPretrain]]) skip the exclusion read entirely on
     * a duplicate-free corpus. File-based: an existing but emptied
     * directory counts as no labels. */
@@ -562,60 +575,10 @@ object StreamDedup {
     val dead = StreamState.deadIds(spark, root)
     val banded = dropDead(spark.read.parquet(bandsPath(root)), dead)
       .select("id", "band", "bucket").distinct()
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val cand = Dedup.bandPairs(banded).distinct()
     val sides = dropDead(spark.read.parquet(sigsPath(root)), dead)
       .select("id", "hs", "sig").dropDuplicates("id")
     Dedup.verifyCandidates(cand, sides, cfg.numHashes, cfg.threshold)
-  }
-
-  /** Fold retry duplicates out of both index tables, preserving the
-    * partition layout. MERGE-AND-RETIRE (the [[StreamState]] snapshot
-    * contract every incremental-state compactor follows): deduped
-    * rows are computed from a pinned file snapshot, appended as new
-    * files, and only then is the snapshot deleted — an
-    * [[upsertBatch]] landing anywhere inside the compaction window
-    * writes files outside the snapshot and survives, so
-    * [[graft.streaming.Maintenance.run]] can drive this BESIDE a
-    * live ingest by contract. (The labels table needs no compaction:
-    * [[updateLabels]] rewrites whole directories via guarded dynamic
-    * partition overwrite, so retries never accumulate rows there.)
-    * A crash between append and retire leaves both copies; readers
-    * are duplicate-proof, so that costs space until the next
-    * compaction, never correctness.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    compactSnapshots(spark,
-      StreamState.listDataFiles(spark, bandsPath(root)),
-      StreamState.listDataFiles(spark, sigsPath(root)), root)
-  }
-
-  /** The compaction body over explicit snapshots — split out so the
-    * interleaving spec can pin the snapshots, land a concurrent
-    * [[upsertBatch]], and prove the late batch survives. */
-  private[graft] def compactSnapshots(spark: SparkSession,
-      bandsSnap: Seq[String], sigsSnap: Seq[String],
-      root: String): Unit = {
-    // physical retire: rows of ids dead AT THE SNAPSHOT READ drop from
-    // the fold. Safe beside a concurrent resurrection: resurrecting IS
-    // an upsert, so the id's fresh rows land outside the snapshot and
-    // survive the retire regardless of what the fold dropped
-    val dead = StreamState.deadIds(spark, root)
-    def fold(path: String, snapshot: Seq[String], keyCols: Seq[String],
-        partCol: String): Unit =
-      StreamState.mergeAndRetire(spark, path, snapshot) { snap =>
-        StreamState.append(dropDead(snap, dead).dropDuplicates(keyCols),
-          path, Some(partCol))
-      }
-    fold(bandsPath(root), bandsSnap, Seq("id", "band", "bucket"), "pb")
-    fold(sigsPath(root), sigsSnap, Seq("id"), "pid")
-    // fold the generation log itself (newest row per id, tombstones
-    // kept — they ARE the deletion record)
-    StreamState.compactGenLog(spark, root)
   }
 
   /** Attach the ingest-and-match flow to a streaming document source:
@@ -623,7 +586,7 @@ object StreamDedup {
     * discovered to `pairsOut` (parquet). The emitted stream over time =
     * the full [[Dedup.minhashLsh]] pair set of everything ingested.
     * The stream's epoch ids (monotone, replay-stable) thread through
-    * as generation batch ids, so [[deleteDocs]] can order against a
+    * as generation batch ids, so a delete can order against a
     * live attached ingest from day one.
     */
   def attach(docs: DataFrame, idCol: String, textCol: String,
@@ -633,8 +596,8 @@ object StreamDedup {
       .queryName("stream_dedup_index")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val pairs = upsertBatch(batch, idCol, textCol, root, cfg,
-          batchId = epochId)
+        val pairs = new Index(batch.sparkSession, root, idCol, textCol, cfg)
+          .upsert(batch, epochId)
         try pairs.write.mode("append").parquet(pairsOut)
         finally StreamState.release(pairs) // checkpointed per batch
         ()

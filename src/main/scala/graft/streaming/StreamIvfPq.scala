@@ -3,6 +3,7 @@ package graft.streaming
 import graft.functions.BatchConst
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained IVF-PQ index: the at-ingest face of the
@@ -22,30 +23,30 @@ import org.apache.spark.sql.functions._
   * (the base build writes −1), and because codes are DETERMINISTIC
   * under the frozen model, a retried batch appends byte-identical
   * rows — `queryIvfPqTable` keeps the LATEST batch's row per id, so
-  * retries cost space until [[compact]], never correctness.
+  * retries cost space until the next compaction, never correctness.
   * Re-ingesting an EXISTING id with a changed vector is latest-wins,
-  * with one caveat: until the next [[compact]] (which dedups across
+  * with one caveat: until the next compaction (which dedups across
   * all cells), a vector that moved cells still serves from its old
   * cell when only that cell is probed. Treat updates as
   * eventually-consistent until compaction.
   *
-  * DELETES ([[deleteVecs]]) are tombstone generations in the shared
+  * DELETES (`Index.delete`) are tombstone generations in the shared
   * [[StreamState]] generation log (the [[StreamTextIndex]] /
   * [[StreamBpe]] compliance path applied to vectors): every
-  * `upsertBatch` and every delete appends tiny (id, batch, del) rows
+  * upsert and every delete appends tiny (id, batch, del) rows
   * to a `_docs` sidecar at the TOP root (so the record survives model
   * refits), a vector is dead iff its NEWEST log entry is a tombstone,
   * and [[query]] anti-joins the probed rows against that broadcast
   * dead set — the vector stops ranking from the next read, without a
-  * rebuild. A later `upsertBatch` under a higher batch id resurrects
-  * it; [[compact]] physically retires dead code rows under the
+  * rebuild. A later upsert under a higher batch id resurrects
+  * it; compaction physically retires dead code rows under the
   * race-proof guard (drop only when the tombstone is at least the
   * id's newest IN-SNAPSHOT batch, so a resurrection landing
   * mid-compaction survives). A redelivery of a pre-delete batch
   * re-appends the dead id's rows, but its stale generation cannot
   * outrank the tombstone — the id stays dead. [[refit]] does NOT
   * clear tombstones: fit new generations on the LIVE corpus; re-adding
-  * a deleted vector is `upsertBatch`'s job, not refit's.
+  * a deleted vector is the upsert's job, not refit's.
   *
   * Drift contract (the honest ANN caveat, stated rather than hidden):
   * appended vectors are quantized by the BASE corpus' model. If the
@@ -90,8 +91,8 @@ object StreamIvfPq {
     * lands — one file create, so there is no window where a reader
     * can pair the new model with old codes. Vectors that arrived
     * after `corpus` was captured must be re-ingested (the upstream
-    * at-least-once redelivery contract); post-swap [[upsertBatch]]
-    * encodes under the new generation.
+    * at-least-once redelivery contract); post-swap upserts
+    * encode under the new generation.
     *
     * `retireOld = true` deletes the superseded generations after the
     * commit. That assumes no query is mid-scan on an old generation
@@ -131,7 +132,7 @@ object StreamIvfPq {
 
   /** Probe the newest committed generation — [[Similarity
     * .queryIvfPqTable]] against [[resolve]]'s directory, with
-    * tombstoned ids ([[deleteVecs]]) excluded at the codes scan
+    * tombstoned ids (`Index.delete`) excluded at the codes scan
     * (before the shortlist, so the top-k is always k live results,
     * never a post-filtered stump). */
   def query(spark: SparkSession, root: String, corpus: DataFrame,
@@ -141,38 +142,66 @@ object StreamIvfPq {
       idCol, vecCol, queryVec, kTop, nprobe, shortlist,
       excludeIds = StreamState.deadIds(spark, root))
 
-  /** Encode + append one micro-batch under the frozen model at
-    * `path`. One scan of the batch; writes only the touched cell
-    * partitions. */
-  def upsertBatch(batch: DataFrame, idCol: String, vecCol: String,
-      root: String, batchId: Long): Unit =
-    BatchTimer.timed("ivfpq.upsert") {
-    val spark = batch.sparkSession
-    val path = resolve(spark, root)
-    val idx = Similarity.readIvfPqMeta(spark, path)
-    val cells = Similarity.assignCells(batch, idCol, vecCol,
-      idx.centroids, idx.scale)
-    StreamState.append(
-      Similarity.pqEncode(batch, idCol, vecCol, idx.codebooks, idx.scale)
-        .join(cells, Seq(idCol))
-        .select(col(idCol), col("codes"),
-          BatchConst(lit(batchId)).as("batch_id"), col("cluster")),
-      path, Some("cluster"))
-    // generation row LAST (the StreamTextIndex crash contract): a
-    // crash above is healed by the at-least-once redelivery, which
-    // re-appends deterministic rows AND the generation
-    StreamState.appendGens(batch.select(col(idCol)), root, batchId)
-  }
+  /** The index at `root`, bound to the batch's `idCol` and `vecCol`.
+    * [[upsert]] encodes one micro-batch under the newest committed
+    * model ([[resolve]]) and appends it: one scan of the batch, writing
+    * only the touched cell partitions. A delete stops the ids ranking
+    * from the next [[query]]; ties (a delete and an upsert under the
+    * SAME batch id) resolve to deleted.
+    *
+    * COMPACTION folds the resolved generation's codes back to one row
+    * per id (batch_id −1): latest-wins PER ID ACROSS ALL CELLS — the
+    * point where a re-ingested id's older encoding, possibly in another
+    * cell partition, is actually removed — and tombstoned ids retire
+    * under [[StreamState.newestLive]]'s race-proof guard. Rows of one id
+    * in one batch are retries and identical (deterministic codes), so
+    * any one of them is the id's row. The `_meta` sidecar is
+    * underscore-prefixed, so it is never in a snapshot: the frozen
+    * model cannot be lost by a crash mid-compaction. */
+  final class Index(val spark: SparkSession, val root: String,
+      val idCol: String, vecCol: String)
+      extends LoggedIndex[Unit] {
+    protected def kind = "ivfpq"
 
-  /** DELETE vectors from the index — one tombstone generation per id.
-    * The id stops ranking from the next [[query]]; a later
-    * [[upsertBatch]] under a higher batch id resurrects it; [[compact]]
-    * physically retires the dead code rows. Ties (a delete and an
-    * upsert under the SAME batch id) resolve to deleted. */
-  def deleteVecs(ids: DataFrame, idCol: String, root: String,
-      batchId: Long): Unit =
-    StreamState.appendGens(ids.select(col(idCol)), root, batchId,
-      del = true)
+    def upsert(batch: DataFrame, batchId: Long): Unit =
+      BatchTimer.timed("ivfpq.upsert") {
+      val path = resolve(spark, root)
+      val idx = Similarity.readIvfPqMeta(spark, path)
+      val cells = Similarity.assignCells(batch, idCol, vecCol,
+        idx.centroids, idx.scale)
+      StreamState.append(
+        Similarity.pqEncode(batch, idCol, vecCol, idx.codebooks, idx.scale)
+          .join(cells, Seq(idCol))
+          .select(col(idCol), col("codes"),
+            BatchConst(lit(batchId)).as("batch_id"), col("cluster")),
+        path, Some("cluster"))
+      // generation row LAST (the StreamTextIndex crash contract): a
+      // crash above is healed by the at-least-once redelivery, which
+      // re-appends deterministic rows AND the generation
+      StreamState.appendGens(batch.select(col(idCol)), root, batchId)
+    }
+
+    /** The live codes of the resolved generation: the latest batch's
+      * row per id, tombstoned ids excluded — the rows [[query]] ranks. */
+    def committed(): DataFrame = {
+      val codes = StreamState.readTable(spark, resolve(spark, root))
+      Option(StreamState.deadIds(spark, root)).fold(codes)(dead =>
+          codes.join(broadcast(dead.toDF(idCol)), Seq(idCol), "left_anti"))
+        .withColumn("_rk", row_number().over(
+          Window.partitionBy(idCol).orderBy(col("batch_id").desc)))
+        .filter(col("_rk") === 1).select(idCol, "codes", "cluster")
+    }
+
+    protected def tables = {
+      val path = resolve(spark, root)
+      Seq((path, snap =>
+        StreamState.append(
+          StreamState.newestLive(snap, root, idCol).dropDuplicates(idCol)
+            .select(col(idCol), col("codes"), lit(-1L).as("batch_id"),
+              col("cluster")),
+          path, Some("cluster"))))
+    }
+  }
 
   /** Per-cell row counts — the fill-imbalance signal that tells an
     * operator when the frozen coarse quantizer has drifted from the
@@ -186,7 +215,7 @@ object StreamIvfPq {
     * cell fill. 1.0 is perfectly balanced; a value far above it means
     * the ingest distribution has drifted from the frozen coarse
     * quantizer's training distribution (new mass piling into few
-    * cells) and a [[refit]] is due. Run after [[compact]] — retried
+    * cells) and a [[refit]] is due. Run after a compaction — retried
     * batches' duplicate rows inflate their cells' counts until folded.
     * An empty index reads as balanced (1.0). */
   def imbalance(spark: SparkSession, root: String): Double = {
@@ -194,47 +223,4 @@ object StreamIvfPq {
       .agg(max(col("rows")).cast("double"), avg(col("rows"))).head()
     if (r.isNullAt(0)) 1.0 else r.getDouble(0) / r.getDouble(1)
   }
-
-  /** Fold retried-batch duplicates away and rewrite each cell
-    * partition once (batch_id −1): the table returns to exactly one
-    * row per id.
-    *
-    * MERGE-AND-RETIRE (see [[StreamState]]): the merged table is
-    * computed from a SNAPSHOT of the current code files, appended as
-    * new files, and only then are the snapshot files deleted. A
-    * concurrent `upsertBatch` writes files outside the snapshot and
-    * survives (safe beside a live ingest); the `_meta` sidecar is
-    * underscore-prefixed so it is never in a snapshot — the frozen
-    * model cannot be lost by a crash mid-compaction. A crash between
-    * the append and the retire leaves both copies; codes are
-    * DETERMINISTIC under the frozen model and readers keep the
-    * latest row per id, so the duplication costs space until the
-    * next compaction, never correctness.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val path = resolve(spark, root)
-    compactSnapshot(spark, root, path,
-      StreamState.listDataFiles(spark, path))
-    StreamState.compactGenLog(spark, root)
-  }
-
-  /** The compaction body over an explicit snapshot — split out so the
-    * interleaving spec can pin the snapshot, land a concurrent
-    * `upsertBatch`, and prove the late batch survives. Latest-wins PER
-    * ID ACROSS ALL CELLS: this is the point where a re-ingested id's
-    * older encoding — possibly in a different cell partition — is
-    * actually removed, and tombstoned ids ([[deleteVecs]]) retire
-    * under [[StreamState.newestLive]]'s race-proof guard. Rows of one
-    * id in one batch are retries and identical (deterministic codes),
-    * so any one of them is the id's row. */
-  private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      path: String, snapshot: Seq[String]): Unit =
-    StreamState.mergeAndRetire(spark, path, snapshot) { snap =>
-      val idCol = snap.columns.head
-      StreamState.append(
-        StreamState.newestLive(snap, root, idCol).dropDuplicates(idCol)
-          .select(col(idCol), col("codes"), lit(-1L).as("batch_id"),
-            col("cluster")),
-        path, Some("cluster"))
-    }
 }

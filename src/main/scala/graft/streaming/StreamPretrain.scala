@@ -373,7 +373,7 @@ object StreamPretrain {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // Near: the batch's bands probe the accumulated index and the
     // cluster-label table folds the new pairs in
-    // ([[StreamDedup.upsertBatchWithLabels]] — the
+    // (a [[StreamDedup.Index]] with `labels` — the
     // q_dedup_clusters_incr machinery). Like the fingerprint ledger,
     // the index ingests ALL arrivals — near-dup structure is a
     // property of the content, not of what the gates kept — so the
@@ -384,7 +384,7 @@ object StreamPretrain {
     // the call, and its checkpoint blocks are released (one delta per
     // micro-batch in a long-lived ingest). The pipeline's batch id
     // threads through as the index's generation id, so a later
-    // StreamDedup.deleteDocs can order against this ingest.
+    // delete on the near-dup index can order against this ingest.
     //
     // Semantic: likewise ingests ALL arrivals (a refused document
     // still refuses later lookalikes — the batch semanticDedup's
@@ -399,14 +399,14 @@ object StreamPretrain {
     // their state is built.
     StreamState.inParallel(
       (nearDup.map { cfg => () =>
-        StreamState.release(StreamDedup.upsertBatchWithLabels(
-          batch.select(col(idCol), col(textCol)), idCol, textCol,
-          nearRoot(root), cfg, batchId = batchId))
+        StreamState.release(new StreamDedup.Index(spark, nearRoot(root),
+          idCol, textCol, cfg, labels = true)
+          .upsert(batch.select(col(idCol), col(textCol)), batchId))
       } ++
         semDup.map { g => () =>
-          semRefusedRef.set(StreamSemDedup.upsertBatch(
-            batch.select(col(idCol), col(g.embCol)), idCol, g.embCol,
-            g.model, semRoot(root), batchId))
+          semRefusedRef.set(new StreamSemDedup.Index(spark, semRoot(root),
+            idCol, g.embCol, g.model)
+            .upsert(batch.select(col(idCol), col(g.embCol)), batchId))
         } ++
         kept1P.map { k => () => { k.count(); () } }).toSeq: _*)
     val semRefused = Option(semRefusedRef.get)
@@ -475,11 +475,11 @@ object StreamPretrain {
     // precedent above); both have completed before the stats/ledger
     // actions below. A crash in either retries both: the encoded
     // table is generation-guarded (appendGens last inside
-    // encodeBatch) and the manifest's readers go through
+    // the upsert) and the manifest's readers go through
     // [[keptDocs]]' distinct(), so replay duplicates are absorbed.
     StreamState.inParallel(
-      () => StreamBpe.encodeBatch(kept, idCol, textCol, fz.tokenizer,
-        encRoot(root), batchId),
+      () => new StreamBpe.Index(spark, encRoot(root), idCol, textCol,
+        fz.tokenizer).upsert(kept, batchId),
       () => BatchTimer.timed("pretrain.manifest") {
         StreamState.append(
           kept.select(col(idCol).as("id"), col(sourceCol).as("source"))
@@ -729,7 +729,7 @@ object StreamPretrain {
   /** FORGET documents across the pipeline's live state — the
     * compliance path ("this content must leave the training set")
     * composed end-to-end: one tombstone generation in the encoded
-    * table's shared log ([[StreamBpe.deleteDocs]]) and the pieces
+    * table's shared log (a [[StreamBpe.Index]] delete) and the pieces
     * stop serving from the next read, so [[packedShards]] and
     * [[manifest]] rebuild without them and [[keptDocs]] drops the
     * rows; the next compaction physically retires the dead state.
@@ -738,7 +738,7 @@ object StreamPretrain {
     * of the same text — the ledger row is the dedup decision, not
     * the content (and it stores a fingerprint, nothing readable).
     * The near-dup index is likewise NOT auto-deleted from: a strict
-    * signature purge is [[StreamDedup.deleteDocs]] on `nearRoot`,
+    * signature purge is a [[StreamDedup.Index]] delete on `nearRoot`,
     * but its exact label repair can PROMOTE a surviving cluster-mate
     * to canonical, and that mate was never encoded (non-canonicals
     * skip encoding at arrival) — its text is gone, so the promoted
@@ -749,7 +749,8 @@ object StreamPretrain {
     * re-ingest a mate if its content should start serving. */
   def forgetDocs(ids: DataFrame, idCol: String, root: String,
       batchId: Long): Unit =
-    StreamBpe.deleteDocs(ids, idCol, encRoot(root), batchId)
+    new StreamBpe.Index(ids.sparkSession, encRoot(root), idCol,
+      textCol = null, learned = null).delete(ids, batchId)
 
   /** Ids currently known NON-canonical in the near-dup cluster index
     * (an earlier-id near-dup exists), or null when no near-dup gate

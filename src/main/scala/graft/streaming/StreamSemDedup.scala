@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions._
   * deterministically (same refusals — the decision is a pure function
   * of frozen model + smaller-id content) and re-appends byte-identical
   * rows, absorbed by the verify side's per-id dedup and folded by
-  * [[compact]] (merge-and-retire, [[StreamState]] — safe beside a
-  * live ingest; `Maintenance.run(semRoots = …)` drives it).
+  * compaction (merge-and-retire, [[StreamState]] — safe beside a
+  * live ingest; `Maintenance.run(indexes = …)` drives it).
   *
   * Scale: per-batch cost is one projection + one join against the
   * batch's OWN cells' history — the published SemDeDup Σ cell² shape;
@@ -124,69 +124,68 @@ object StreamSemDedup {
       .filter(col("cos") >= threshold)
       .select(col("a.id").as("id"))
 
-  /** Ingest one micro-batch: returns the batch ids REFUSED (an
-    * earlier-id same-cell partner at/above the threshold exists —
-    * in this batch or in the accumulated history). The returned frame
-    * is eagerly materialized BEFORE the store append (the batch must
-    * not collide with its own just-written rows); a long-lived caller
-    * must [[StreamState.release]] it once consumed, like the other
-    * per-batch deltas. */
-  def upsertBatch(batch: DataFrame, idCol: String, vecCol: String,
-      m: Model, root: String, batchId: Long = -1L): DataFrame =
-    BatchTimer.timed("semdedup.upsert") {
-    val spark = batch.sparkSession
-    val ann = annotate(batch, idCol, vecCol, m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // SNAPSHOT the history's file list before anything runs: the
-      // probe plan built from it can never see the batch's own rows,
-      // so the probe and the store append below may overlap (the
-      // StreamDedup.upsertBatch probe∥append precedent — per-batch
-      // wall pays max(probe, append), not the sum).
-      val histFiles = StreamState.listDataFiles(spark, vecsPath(root))
-      // one tiny job collects the batch's touched cells (≤ k ints —
-      // buys partition pruning on the history scan) AND its row count
-      // (gates the broadcast hint below), and doubles as the action
-      // that populates ann's cache before the parallel consumers
-      val clCounts = ann.groupBy("cl").agg(count(lit(1)).as("_n"))
-        .collect()
-      val batchRows = clCounts.map(_.getLong(1)).sum
-      val bcastA = batchRows <= broadcastMaxRows
-      val intra = refusedSide(ann, ann, m.threshold, bcastA)
-      val cross =
-        if (histFiles.isEmpty) None
-        else {
-          // NO per-batch dropDuplicates on the history (it was a full
-          // shuffle of the pruned store every batch): a retry's
-          // duplicate rows can only produce duplicate refused ids,
-          // which the distinct() below absorbs — [[compact]] retires
-          // the physical duplicates.
-          val cls = clCounts.map(_.getInt(0)).toSeq
-          val hist = spark.read.option("basePath", vecsPath(root))
-            .parquet(histFiles: _*)
-            .filter(col("cl").isin(cls: _*))
-          Some(refusedSide(ann, hist, m.threshold, bcastA))
-        }
-      @volatile var refused: DataFrame = null
-      StreamState.inParallel(
-        () => refused = cross.fold(intra)(intra.union).distinct()
-          .localCheckpoint(true),
-        () => StreamState.append(ann, vecsPath(root), Some("cl")))
-      refused
-    } finally ann.unpersist(false)
-  }
+  /** The semantic index at `root`, bound to the batch's `idCol` and
+    * `vecCol` and the frozen model `m`. [[upsert]] ingests one
+    * micro-batch and returns the batch ids REFUSED (an earlier-id
+    * same-cell partner at/above the threshold exists — in this batch or
+    * in the accumulated history). The returned frame is eagerly
+    * materialized BEFORE the store append (the batch must not collide
+    * with its own just-written rows); a long-lived caller must
+    * [[StreamState.release]] it once consumed, like the other per-batch
+    * deltas. Compaction folds retry duplicates back to one row per
+    * document. */
+  final class Index(val spark: SparkSession, val root: String,
+      idCol: String, vecCol: String, m: Model)
+      extends StreamIndex[DataFrame] {
 
-  /** Fold retry duplicates back to one row per document.
-    * MERGE-AND-RETIRE ([[StreamState]]): the fold appends from a
-    * pinned snapshot and retires exactly the snapshot, so an
-    * [[upsertBatch]] landing mid-compaction is never erased. */
-  def compact(spark: SparkSession, root: String): Unit =
-    compactSnapshot(spark, root,
-      StreamState.listDataFiles(spark, vecsPath(root)))
-
-  private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit =
-    StreamState.mergeAndRetire(spark, vecsPath(root), snapshot) { snap =>
-      StreamState.append(snap.dropDuplicates("id"), vecsPath(root), Some("cl"))
+    def upsert(batch: DataFrame, batchId: Long): DataFrame =
+      BatchTimer.timed("semdedup.upsert") {
+      val ann = annotate(batch, idCol, vecCol, m)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // SNAPSHOT the history's file list before anything runs: the
+        // probe plan built from it can never see the batch's own rows,
+        // so the probe and the store append below may overlap (the
+        // StreamDedup upsert probe∥append precedent — per-batch
+        // wall pays max(probe, append), not the sum).
+        val histFiles = StreamState.listDataFiles(spark, vecsPath(root))
+        // one tiny job collects the batch's touched cells (≤ k ints —
+        // buys partition pruning on the history scan) AND its row count
+        // (gates the broadcast hint below), and doubles as the action
+        // that populates ann's cache before the parallel consumers
+        val clCounts = ann.groupBy("cl").agg(count(lit(1)).as("_n"))
+          .collect()
+        val batchRows = clCounts.map(_.getLong(1)).sum
+        val bcastA = batchRows <= broadcastMaxRows
+        val intra = refusedSide(ann, ann, m.threshold, bcastA)
+        val cross =
+          if (histFiles.isEmpty) None
+          else {
+            // NO per-batch dropDuplicates on the history (it was a full
+            // shuffle of the pruned store every batch): a retry's
+            // duplicate rows can only produce duplicate refused ids,
+            // which the distinct() below absorbs — compaction retires
+            // the physical duplicates.
+            val cls = clCounts.map(_.getInt(0)).toSeq
+            val hist = spark.read.option("basePath", vecsPath(root))
+              .parquet(histFiles: _*)
+              .filter(col("cl").isin(cls: _*))
+            Some(refusedSide(ann, hist, m.threshold, bcastA))
+          }
+        @volatile var refused: DataFrame = null
+        StreamState.inParallel(
+          () => refused = cross.fold(intra)(intra.union).distinct()
+            .localCheckpoint(true),
+          () => StreamState.append(ann, vecsPath(root), Some("cl")))
+        refused
+      } finally ann.unpersist(false)
     }
+
+    /** The stored (id, v, nrm, cl) rows, one per document. */
+    def committed(): DataFrame =
+      spark.read.parquet(vecsPath(root)).dropDuplicates("id")
+
+    protected def tables = Seq((vecsPath(root), snap =>
+      StreamState.append(snap.dropDuplicates("id"), vecsPath(root), Some("cl"))))
+  }
 }

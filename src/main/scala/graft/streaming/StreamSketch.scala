@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * ingest appends each micro-batch's own depth×width delta and
   * readers sum; the historical corpus is never rescanned and the
   * persisted state is O(batches · depth · width), independent of
-  * corpus size (and [[compact]] collapses it back to depth×width).
+  * corpus size (and a compaction collapses it back to depth×width).
   *
   * Parity contract: ingesting a corpus in ANY batch split yields
   * exactly [[Sketch.cmsSketch]] of the union — per-cell counts are
@@ -26,44 +26,87 @@ import org.apache.spark.sql.functions._
   */
 object StreamSketch {
 
-  /** Append one batch's sketch delta under `root`. Partitioned by
-    * sketch row `r`: a point query that probes only some rows prunes
-    * directories, and the layout keeps each append to `depth` small
-    * files.
+  /** The sketch at `root` over the batch's `textCol`. [[upsert]]
+    * appends one batch's delta, partitioned by sketch row `r`: a point
+    * query that probes only some rows prunes directories, and the
+    * layout keeps each append to `depth` small files.
     *
-    * Batches at or below the compaction watermark (see [[compact]])
-    * are REJECTED as no-ops: after a compaction folds deltas into
-    * batch_id −1, the (batch_id, r, b) dedup key can no longer absorb
-    * a redelivery of a pre-compaction batch, so the watermark carries
-    * the retry-safety contract across compactions.
+    * Batches at or below the compaction watermark are REJECTED as
+    * no-ops: after a compaction folds deltas into a merge generation,
+    * the (batch_id, r, b) dedup key can no longer absorb a redelivery
+    * of a pre-compaction batch, so the watermark carries the
+    * retry-safety contract across compactions.
+    *
+    * COMPACTION folds the accumulated deltas into a single merged delta
+    * (state returns to O(depth × width)): the merged sketch is computed
+    * from a SNAPSHOT of the current delta files, appended under
+    * `mergedId(newWm)`, the watermark is advanced, and only then are
+    * the snapshot files deleted. A concurrent upsert (id above the new
+    * watermark) writes files outside the snapshot and survives both the
+    * delete and the read-side fold rule; a concurrent REDELIVERY of a
+    * folded batch that slips past the watermark check lands at or below
+    * the new watermark and is excluded by the fold rule — not
+    * double-counted. Crashes: before the watermark write, the new merge
+    * is ignored (its id doesn't match the current watermark) and the
+    * old state still reads exactly; after it, the folded deltas are
+    * ignored as below-watermark mass. Either way the next compaction
+    * retires the leftovers. Counts are exact at every interleaving
+    * point.
     */
-  def upsertBatch(batch: DataFrame, textCol: String, root: String,
-      batchId: Long, depth: Int = 4, hexDigits: Int = 3): Unit =
-    BatchTimer.timed("cms.upsert") {
-    val spark = batch.sparkSession
-    val wm = readWatermark(spark, root)
-    if (batchId <= wm) {
-      // LOUD no-op: this is correct for a redelivery, but a genuinely
-      // new batch can land here after a checkpoint reset restarts
-      // Structured Streaming's batch ids at 0 — in which case its
-      // counts would be silently lost. Batch ids must stay monotone
-      // per root across checkpoint resets (reuse the checkpoint, or
-      // start a fresh root).
-      System.err.println(s"[stream-sketch] batch $batchId <= compaction " +
-        s"watermark $wm at $root — treated as an at-least-once " +
-        "redelivery and IGNORED; if this is a new batch after a " +
-        "checkpoint reset, its counts are NOT ingested")
-      return
+  final class Index(val spark: SparkSession, val root: String,
+      textCol: String, depth: Int = 4, hexDigits: Int = 3)
+      extends StreamIndex[Unit] {
+
+    def upsert(batch: DataFrame, batchId: Long): Unit =
+      BatchTimer.timed("cms.upsert") {
+      val wm = readWatermark(spark, root)
+      if (batchId <= wm) {
+        // LOUD no-op: this is correct for a redelivery, but a genuinely
+        // new batch can land here after a checkpoint reset restarts
+        // Structured Streaming's batch ids at 0 — in which case its
+        // counts would be silently lost. Batch ids must stay monotone
+        // per root across checkpoint resets (reuse the checkpoint, or
+        // start a fresh root).
+        System.err.println(s"[stream-sketch] batch $batchId <= compaction " +
+          s"watermark $wm at $root — treated as an at-least-once " +
+          "redelivery and IGNORED; if this is a new batch after a " +
+          "checkpoint reset, its counts are NOT ingested")
+      } else
+        StreamState.append(Sketch.cmsSketch(batch, textCol, depth, hexDigits)
+          .withColumn("batch_id", BatchConst(lit(batchId))), root, Some("r"))
     }
-    StreamState.append(Sketch.cmsSketch(batch, textCol, depth, hexDigits)
-      .withColumn("batch_id", BatchConst(lit(batchId))), root, Some("r"))
+
+    def committed(): DataFrame = readSketch(spark, root)
+
+    // the watermark lands between the merge append and the retire
+    protected def tables = Seq((root, { snap =>
+      val prior = readWatermark(spark, root)
+      val maxBatch = snap.agg(max("batch_id")).head() match {
+        case r if r.isNullAt(0) => -1L
+        case r => r.getLong(0)
+      }
+      val newWm = math.max(maxBatch, prior)
+      // below zero nothing real was ingested: the snapshot holds only
+      // merge rows no watermark vouches for, which no read counts
+      if (newWm >= 0) {
+        // fold exactly what the read rule counts TODAY: the current
+        // merge generation plus deltas above the prior watermark (stale
+        // merges and already-folded deltas left by earlier crashes
+        // contribute nothing twice)
+        StreamState.append(
+          snap.filter(col("batch_id") > prior || col("batch_id") === mergedId(prior))
+            .dropDuplicates("batch_id", "r", "b")
+            .groupBy("r", "b").agg(sum("cnt").as("cnt"))
+            .withColumn("batch_id", lit(mergedId(newWm))),
+          root, Some("r"))
+        writeWatermark(spark, root, newWm)
+      }
+    }))
   }
 
   /** The highest batch_id folded into a compaction, −1 if never
-    * compacted. Stored as a SIBLING of the root (`<root>_watermark`)
-    * so the compaction's mode("overwrite") rewrite of the root cannot
-    * delete it — which lets [[compact]] write it BEFORE the rewrite
-    * for crash-safety.
+    * compacted. Stored as a SIBLING of the root (`<root>_watermark`),
+    * so no compaction snapshot ever holds it.
     */
   def readWatermark(spark: SparkSession, root: String): Long = {
     val p = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "_watermark")
@@ -122,56 +165,5 @@ object StreamSketch {
       // copy restores exactly-once counts
       .dropDuplicates("batch_id", "r", "b")
       .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-  }
-
-  /** Fold the accumulated deltas into a single merged delta: state
-    * returns to O(depth × width).
-    *
-    * MERGE-AND-RETIRE (see [[StreamState]]): the merged sketch is
-    * computed from a SNAPSHOT of the current delta files, appended as
-    * new files under `mergedId(newWm)`, the watermark is advanced,
-    * and only then are the snapshot files deleted. A concurrent
-    * `upsertBatch` (id above the new watermark) writes files outside
-    * the snapshot and survives both the delete and the read-side
-    * fold rule; a concurrent REDELIVERY of a folded batch that slips
-    * past the watermark check lands at or below the new watermark
-    * and is excluded by the fold rule — not double-counted. Crashes:
-    * before the watermark write, the new merge is ignored (its id
-    * doesn't match the current watermark) and the old state still
-    * reads exactly; after it, the folded deltas are ignored as
-    * below-watermark mass. Either way the next compaction retires
-    * the leftovers. Counts are exact at every interleaving point.
-    */
-  def compact(spark: SparkSession, root: String): Unit =
-    compactSnapshot(spark, root, StreamState.listDataFiles(spark, root))
-
-  /** The compaction body over an explicit snapshot — split out so the
-    * interleaving spec can pin the snapshot, land a concurrent
-    * upsert/redelivery, and prove counts stay exact. */
-  private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit = {
-    if (snapshot.isEmpty) return
-    val prior = readWatermark(spark, root)
-    val snap = spark.read.option("basePath", root).parquet(snapshot: _*)
-    val maxBatch = snap.agg(max("batch_id")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    val newWm = math.max(maxBatch, prior)
-    if (newWm < 0) return // nothing real ingested yet
-    // fold exactly what the read rule counts TODAY: the current merge
-    // generation plus deltas above the prior watermark (stale merges
-    // and already-folded deltas left by earlier crashes contribute
-    // nothing twice)
-    StreamState.append(
-      snap.filter(col("batch_id") > prior || col("batch_id") === mergedId(prior))
-        .dropDuplicates("batch_id", "r", "b")
-        .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-        .withColumn("batch_id", lit(mergedId(newWm))),
-      root, Some("r"))
-    // the watermark lands between the append and the retire (see
-    // [[compact]]), so this body is not [[StreamState.mergeAndRetire]]
-    writeWatermark(spark, root, newWm)
-    StreamState.deleteFiles(spark, root, snapshot)
   }
 }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-/** The one home of the incremental state-table format. Every streaming
-  * index ([[StreamTextIndex]], [[StreamSketch]], [[StreamIvfPq]],
-  * [[StreamSemDedup]], [[StreamBpe]], [[StreamDedup]],
-  * [[StreamPretrain]]) writes, rewrites, compacts and hides deletions
-  * through the helpers here, so each table stays a replay-safe sink
-  * under one contract:
+/** The one home of the incremental state-table format. The six
+  * streaming indexes share one lifecycle ([[StreamIndex]]: upsert,
+  * delete, compact, committed), and it and [[StreamPretrain]]'s own
+  * tables write, rewrite, compact and hide deletions through the
+  * helpers here, so each table stays a replay-safe sink under one
+  * contract:
   *
   *  - APPEND ([[append]]): a partitioned table is repartitioned on its
   *    directory column first, so an append writes one file per touched
@@ -182,6 +182,43 @@ private[graft] object StreamState {
         df.repartition(col(d)).write.mode("append").partitionBy(d).parquet(path)
       case None => df.repartition(1).write.mode("append").parquet(path)
     }
+
+  /** Append one `foreachBatch` micro-batch to the table at `path` at
+    * most once per `batchId`: a restarted query replays its newest
+    * batch when the crash fell between the write and the query's commit,
+    * and the replay must not add the rows twice. `write` writes the batch
+    * as a table rooted at the directory it is given, in the table's
+    * layout. That directory is `_batch-<id>` under `path` (hidden from
+    * readers); its `_STAGED` marker records a complete write, and then
+    * each data file moves into the table by one rename, so a replay
+    * after a crash mid-move finishes the moves instead of writing again.
+    * `_batches/<id>` commits the batch, and a replay of a committed batch
+    * is a no-op. A query replays only its newest batch, so committing
+    * batch N retires batch N−1's marker. As for [[StreamSketch]]'s
+    * watermark, batch ids must not restart under a kept marker: a query
+    * on a fresh checkpoint writes a fresh table (or clears `_batches`). */
+  def appendOnce(spark: SparkSession, path: String, batchId: Long)(
+      write: String => Unit): Unit = {
+    val hfs = fs(spark, path)
+    val root = hfs.makeQualified(new org.apache.hadoop.fs.Path(path))
+    def under(p: String) = new org.apache.hadoop.fs.Path(root, p)
+    val stage = under(s"_batch-$batchId")
+    if (!hfs.exists(under(s"_batches/$batchId"))) {
+      if (!hfs.exists(under(s"_batch-$batchId/_STAGED"))) {
+        hfs.delete(stage, true) // a crashed write's partial files
+        write(stage.toString)
+        hfs.create(under(s"_batch-$batchId/_STAGED"), true).close()
+      }
+      listDataFiles(spark, stage.toString).foreach { f =>
+        val dst = under(f.stripPrefix(s"$stage/"))
+        hfs.mkdirs(dst.getParent)
+        hfs.rename(new org.apache.hadoop.fs.Path(f), dst)
+      }
+      hfs.create(under(s"_batches/$batchId"), true).close()
+      hfs.delete(under(s"_batches/${batchId - 1}"), false)
+    }
+    hfs.delete(stage, true)
+  }
 
   /** Replace exactly the `dir` directories `df` has rows for (dynamic
     * partition overwrite, one file each); every other directory is

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Delivery: foreachBatch is at-least-once — but set semantics make
   * the index NATURALLY idempotent: a redelivered batch appends
   * duplicate (tok, id) rows and DISTINCT absorbs them, before OR
-  * after a [[compact]] (unlike the counting [[StreamSketch]], which
+  * after a compaction (unlike the counting [[StreamSketch]], which
   * needs a compaction watermark). Retries cost space until the next
   * compaction, never correctness.
   *
@@ -45,11 +45,11 @@ import org.apache.spark.sql.functions._
   * [[StreamDedup]]. Postings are written BEFORE the generation row,
   * so a crash mid-upsert leaves the PREVIOUS version served intact
   * (never a half-visible update); the at-least-once redelivery
-  * completes it. DELETES ([[deleteDocs]]) are tombstone generations
+  * completes it. DELETES (`Index.delete`) are tombstone generations
   * in the same log: the document stops matching from the next read,
   * a later re-ingest under a higher batch id resurrects it, and
   * compaction physically retires the dead postings (race-proof
-  * guard in [[compactSnapshot]]).
+  * guard in the compaction fold).
   *
   * Parity contract: ingesting a corpus in ANY batch split, with any
   * number of interleaved compactions and redeliveries, yields the
@@ -108,8 +108,9 @@ object StreamTextIndex {
       won
     }
 
-  /** Append one micro-batch's posting delta. The FIRST batch fixes
-    * the bucket modulus (default 64 when the caller leaves `buckets`
+  /** The index at `root`, bound to the batch's `idCol` and `textCol`.
+    * [[upsert]] appends one micro-batch's posting delta. The FIRST
+    * batch fixes the bucket modulus (default 64 when `buckets` is left
     * unset); later batches use the persisted one, and an EXPLICIT
     * `buckets` that disagrees with it is rejected loudly — two call
     * sites disagreeing on the constant is how postings silently land
@@ -119,50 +120,58 @@ object StreamTextIndex {
     * append crashes, a redelivery (even one passing a different
     * explicit modulus) reads the marker and lands in the same bucket
     * layout, so no rows can end up under a modulus lookups don't use.
+    *
+    * COMPACTION folds the accumulated deltas into one live posting set
+    * per bucket: retry duplicates collapse, superseded generations
+    * drop, and state returns to the batch index's size regardless of
+    * how many batches (or retries, or updates) fed it. Each kept row
+    * PRESERVES its batch id — that is its document's generation, and
+    * the read-side latest-wins rule needs it. The fold keeps each id's
+    * newest generation WITHIN THE SNAPSHOT ([[StreamState.newestLive]],
+    * whose race-proof guard also retires tombstoned postings): a
+    * concurrent update's newer rows live outside it on both sides
+    * (postings and generation log), so the read rule keeps serving the
+    * newest version, and the bucket marker is never rewritten.
+    * Same-generation duplication left by a crash between the append
+    * and the retire is absorbed by the DISTINCT on every read.
     */
-  def upsertBatch(batch: DataFrame, idCol: String, textCol: String,
-      root: String, batchId: Long, buckets: Int = -1): Unit =
-    BatchTimer.timed("textindex.upsert") {
-    val spark = batch.sparkSession
-    val persisted = bucketsOf(spark, root)
-    val b =
-      if (persisted > 0) {
-        require(buckets == -1 || buckets == persisted,
-          s"index at $root has bucket modulus $persisted; caller passed " +
-            s"$buckets — pass no modulus (or the persisted one) for an " +
-            "existing index")
-        persisted
-      } else {
-        val chosen = if (buckets == -1) 64 else buckets
-        require(chosen > 0, s"buckets must be positive: $chosen")
-        claimModulus(spark, root, buckets, chosen)
-      }
-    val postings = batch.select(col(idCol).as("id"),
-        explode(TextFunctions.tokenSet(lower(col(textCol)))).as("tok"))
-      .withColumn("bucket", pmod(hash(col("tok")), lit(b)))
-      .withColumn("batch_id", BatchConst(lit(batchId)))
-    StreamState.append(postings, root, Some("bucket"))
-    // generation row LAST: a crash above leaves the previous version
-    // of every document in this batch fully served (see header)
-    StreamState.appendGens(batch.select(col(idCol)), root, batchId)
-  }
+  final class Index(val spark: SparkSession, val root: String,
+      val idCol: String, textCol: String, buckets: Int = -1)
+      extends LoggedIndex[Unit] {
+    protected def kind = "textindex"
 
-  /** DELETE documents from the live index: append a TOMBSTONE
-    * generation — one tiny log row per id, NO posting is touched, and
-    * from the next read on the documents stop matching anything
-    * (the reference's never-serve-stale rule taken to its end:
-    * `supervisor/filter_manager.go:323-346`). Batch ids must be
-    * monotone (the upsert contract): a LATER `upsertBatch` under a
-    * higher batch id resurrects a deleted id as a normal update.
-    * The postings are physically retired at the first [[compact]]
-    * whose snapshot holds no generation newer than the tombstone —
-    * until then the read-side exclusion hides them. */
-  def deleteDocs(ids: DataFrame, idCol: String, root: String,
-      batchId: Long): Unit =
-    BatchTimer.timed("textindex.delete") {
-      StreamState.appendGens(ids.select(col(idCol)), root, batchId,
-        del = true)
+    def upsert(batch: DataFrame, batchId: Long): Unit =
+      BatchTimer.timed("textindex.upsert") {
+      val persisted = bucketsOf(spark, root)
+      val b =
+        if (persisted > 0) {
+          require(buckets == -1 || buckets == persisted,
+            s"index at $root has bucket modulus $persisted; caller passed " +
+              s"$buckets — pass no modulus (or the persisted one) for an " +
+              "existing index")
+          persisted
+        } else {
+          val chosen = if (buckets == -1) 64 else buckets
+          require(chosen > 0, s"buckets must be positive: $chosen")
+          claimModulus(spark, root, buckets, chosen)
+        }
+      val postings = batch.select(col(idCol).as("id"),
+          explode(TextFunctions.tokenSet(lower(col(textCol)))).as("tok"))
+        .withColumn("bucket", pmod(hash(col("tok")), lit(b)))
+        .withColumn("batch_id", BatchConst(lit(batchId)))
+      StreamState.append(postings, root, Some("bucket"))
+      // generation row LAST: a crash above leaves the previous version
+      // of every document in this batch fully served (see header)
+      StreamState.appendGens(batch.select(col(idCol)), root, batchId)
     }
+
+    def committed(): DataFrame = readIndex(spark, root)
+
+    protected def tables = Seq((root, snap =>
+      StreamState.append(StreamState.newestLive(snap, root, "id")
+        .select("tok", "id", "bucket", "batch_id").distinct(),
+        root, Some("bucket"))))
+  }
 
   /** The merged posting set: one (tok, id, bucket) row per distinct
     * posting — the batch index's shape, so every
@@ -205,47 +214,4 @@ object StreamTextIndex {
       .withColumnRenamed("id", idCol)
     corpus.join(ids, Seq(idCol), "left_semi")
   }
-
-  /** Fold the accumulated deltas into one live posting set per
-    * bucket: retry duplicates collapse, superseded generations drop,
-    * and state returns to the batch index's size regardless of how
-    * many batches (or retries, or updates) fed it. Each kept row
-    * PRESERVES its batch id — that is its document's generation, and
-    * the read-side latest-wins rule needs it.
-    *
-    * MERGE-AND-RETIRE (see [[StreamState]]): the merged set is
-    * computed from a SNAPSHOT of the current data files, appended as
-    * new files, and only then are the snapshot files deleted — so an
-    * `upsertBatch` landing at any point during the compaction writes
-    * files outside the snapshot and is never erased (safe beside a
-    * live ingest), and the bucket marker is never rewritten. The
-    * fold keeps each id's newest generation WITHIN THE SNAPSHOT: a
-    * concurrent update's newer rows live outside it on both sides
-    * (postings and generation log), so the read rule keeps serving
-    * the newest version; what the fold kept is retired at the next
-    * compaction. A crash between the append and the retire leaves
-    * both copies on disk; same-generation duplication is absorbed by
-    * the DISTINCT on every read — space, never correctness. The
-    * generation log gets the same snapshot fold (max per id), so its
-    * size returns to one row per live document.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val b = bucketsOf(spark, root)
-    if (b <= 0) return // nothing ingested yet
-    compactSnapshot(spark, root, StreamState.listDataFiles(spark, root))
-    StreamState.compactGenLog(spark, root)
-  }
-
-  /** The posting-fold body over an explicit snapshot — split out so
-    * the interleaving spec can pin the snapshot, land a concurrent
-    * `upsertBatch`, and prove the late batch survives. Tombstoned
-    * postings retire PHYSICALLY here under the race-proof guard of
-    * [[StreamState.newestLive]]. */
-  private[graft] def compactSnapshot(spark: SparkSession, root: String,
-      snapshot: Seq[String]): Unit =
-    StreamState.mergeAndRetire(spark, root, snapshot) { snap =>
-      StreamState.append(StreamState.newestLive(snap, root, "id")
-        .select("tok", "id", "bucket", "batch_id").distinct(),
-        root, Some("bucket"))
-    }
 }

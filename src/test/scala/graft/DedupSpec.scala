@@ -718,14 +718,12 @@ class DedupSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try {
-      StreamDedup.upsertBatchWithLabels(
-        Seq((1L, base), (2L, base + " rho")).toDF("doc_id", "text"),
-        "doc_id", "text", root, cfg)
+      val idx = new StreamDedup.Index(spark, root, "doc_id", "text", cfg,
+        labels = true)
+      idx.upsert(Seq((1L, base), (2L, base + " rho")).toDF("doc_id", "text"), -1L)
       // a fresh near-dup of the labeled cluster: the fold rewrites the
       // touched label directories, whose `pl` now reads as a string
-      StreamDedup.upsertBatchWithLabels(
-        Seq((3L, base + " rho sigma")).toDF("doc_id", "text"),
-        "doc_id", "text", root, cfg)
+      idx.upsert(Seq((3L, base + " rho sigma")).toDF("doc_id", "text"), -1L)
       assert(StreamDedup.indexLabels(spark, root).as[(Long, Long)]
         .collect().toSet == Set((1L, 1L), (2L, 1L), (3L, 1L)))
     } finally prev match {

@@ -85,6 +85,46 @@ class LocalFsSpec extends SparkSpec {
     jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
   }
 
+  /** Collects what earlier tests left behind until no collection has
+    * started a process for `quietSeconds`: a collected session (every
+    * streaming query clones one) removes its artifact directory with
+    * `rm -rf`, and that spawn must not land inside a window. A clone
+    * stays reachable from the pool threads that inherited it as their
+    * active session until they idle out, so after a streaming suite
+    * such spawns kept arriving for a minute (at 10 s and 63 s after
+    * StreamingSpec, GC every 2 s). */
+  private def drainCleanups(root: JPath, quietSeconds: Int): Unit = {
+    val start = System.nanoTime()
+    var quietSince = start
+    while (System.nanoTime() - quietSince < quietSeconds * 1000000000L) {
+      assert(System.nanoTime() - start < 300000000000L,
+        "earlier sessions' cleanups kept starting processes for 5 minutes")
+      if (spawnedBy(root) { System.gc(); Thread.sleep(2000) }.nonEmpty)
+        quietSince = System.nanoTime()
+    }
+  }
+
+  test("persist and unpersist start no process, once their frames are collected too") {
+    val root = Files.createTempDirectory("localfs-persist")
+    val df = spark.range(1000).selectExpr("id", "id % 7 AS k")
+    // sessions earlier suites left behind (a streaming query clones one)
+    // are cleaned the same way; this window runs first, after a drain
+    // past Spark's 60 s pool-thread keep-alive
+    drainCleanups(root, quietSeconds = 70)
+    val spawned = spawnedBy(root) {
+      for (i <- 0 until 20) {
+        val p = df.filter(s"k = ${i % 7}").persist()
+        assert(p.count() > 0)
+        p.unpersist(blocking = true)
+      }
+      // a cached plan planned in a cloned session leaves the clone to a
+      // cleaner that runs when the clone is collected
+      System.gc()
+      Thread.sleep(2000)
+    }
+    assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
+  }
+
   test("a partitioned parquet write and two results micro-batches start no process") {
     implicit val s = spark
     import s.implicits._
@@ -95,6 +135,9 @@ class LocalFsSpec extends SparkSpec {
       "2015-07-21T11:35:42.000+02:00 host1 app: checkout ok 200")
     val batch2 = Seq("2015-07-22T11:36:01.000+02:00 host2 app: error timeout")
     val out = root.resolve("results").toString
+    // runs after the persist window, whose drain outlasted every earlier
+    // clone; its own streaming clone is collected after the window
+    drainCleanups(root, quietSeconds = 4)
     val spawned = spawnedBy(root) {
       (0 until 64).map(i => (s"f$i", s"2015072${i % 4}", i.toLong)).toDF("filter_id", "date", "v")
         .write.partitionBy("filter_id", "date").parquet(root.resolve("table").toString)
@@ -112,27 +155,6 @@ class LocalFsSpec extends SparkSpec {
     assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
     assert(spark.read.parquet(out).count() == 4)
     assert(spark.read.parquet(root.resolve("table").toString).count() == 64)
-  }
-
-  test("persist and unpersist start no process, once their frames are collected too") {
-    val root = Files.createTempDirectory("localfs-persist")
-    val df = spark.range(1000).selectExpr("id", "id % 7 AS k")
-    // sessions earlier tests left behind (a streaming query clones one)
-    // are cleaned the same way; collect them before the window opens
-    System.gc()
-    Thread.sleep(1000)
-    val spawned = spawnedBy(root) {
-      for (i <- 0 until 20) {
-        val p = df.filter(s"k = ${i % 7}").persist()
-        assert(p.count() > 0)
-        p.unpersist(blocking = true)
-      }
-      // a cached plan planned in a cloned session leaves the clone to a
-      // cleaner that runs when the clone is collected
-      System.gc()
-      Thread.sleep(2000)
-    }
-    assert(spawned.size == 0, s"e.g. ${spawned.take(3).mkString("; ")}")
   }
 
   test("reading a parquet root with 64 partition directories starts no Spark job") {

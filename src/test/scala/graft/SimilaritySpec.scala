@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
 
+  private def ivfIdx(root: String) =
+    new graft.streaming.StreamIvfPq.Index(spark, root, "vec_id", "embedding")
+
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
   private lazy val query: Seq[Double] =
     emb.filter(col("vec_id") === 0).head().getSeq[Float](1).map(_.toDouble)
@@ -435,9 +438,9 @@ class SimilaritySpec extends SparkSpec {
     // stream the upper half in: two batches, one redelivered
     val b1 = rest.filter(col("vec_id") % 2 === 0)
     val b2 = rest.filter(col("vec_id") % 2 === 1)
-    graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", dir, 0L)
-    graft.streaming.StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", dir, 0L)
-    graft.streaming.StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", dir, 1L)
+    ivfIdx(dir).upsert(b1, 0L)
+    ivfIdx(dir).upsert(b1, 0L)
+    ivfIdx(dir).upsert(b2, 1L)
     // independent reference: encode the FULL corpus DataFrame-side
     // under the same frozen model and rank identically
     val probes = Similarity.probeCells(built.centroids, query, 2, built.scale)
@@ -458,7 +461,7 @@ class SimilaritySpec extends SparkSpec {
     val preFiles = spark.read.parquet(dir).count()
     graft.streaming.Maintenance.run(spark,
       java.nio.file.Files.createTempDirectory("mroot2").toString,
-      ivfPqRoots = Seq(dir))
+      indexes = Seq(ivfIdx(dir)))
     val postRows = spark.read.parquet(dir).count()
     assert(postRows == corpus.count() && postRows < preFiles)
     val meta2 = Similarity.readIvfPqMeta(spark, dir)
@@ -478,9 +481,8 @@ class SimilaritySpec extends SparkSpec {
     val qf = emb.filter(col("vec_id") === 0).head().getSeq[Float](1)
     val replacement = emb.filter(col("vec_id") === 0)
       .select(lit(bestId).as("vec_id"), col("embedding"))
-    graft.streaming.StreamIvfPq.upsertBatch(replacement, "vec_id",
-      "embedding", dir, 2L)
-    graft.streaming.StreamIvfPq.compact(spark, dir)
+    ivfIdx(dir).upsert(replacement, 2L)
+    ivfIdx(dir).compact()
     val updatedCorpus = corpus.withColumn("embedding",
       when(col("vec_id") === bestId, array(qf.map(lit): _*))
         .otherwise(col("embedding")))

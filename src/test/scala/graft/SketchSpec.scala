@@ -92,11 +92,13 @@ class SketchSpec extends SparkSpec {
   private def cells(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
 
+  private def sketchIdx(root: String) =
+    new graft.streaming.StreamSketch.Index(spark, root, "text")
+
   test("StreamSketch: any batch split merges to the one-shot batch sketch") {
     val root = java.nio.file.Files.createTempDirectory("cms").toString + "/s"
     (0 until 3).foreach { k =>
-      graft.streaming.StreamSketch.upsertBatch(
-        docs.filter(pmod(col("doc_id"), lit(3)) === k), "text", root, k.toLong)
+      sketchIdx(root).upsert(docs.filter(pmod(col("doc_id"), lit(3)) === k), k.toLong)
     }
     val streamed = cells(graft.streaming.StreamSketch.readSketch(spark, root))
     val oneShot = cells(Sketch.cmsSketch(docs, "text", 4, 3))
@@ -106,8 +108,8 @@ class SketchSpec extends SparkSpec {
   test("StreamSketch: a retried (duplicate) append does not double-count") {
     val root = java.nio.file.Files.createTempDirectory("cms2").toString + "/s"
     val half = docs.filter(col("doc_id") % 2 === 0)
-    graft.streaming.StreamSketch.upsertBatch(half, "text", root, 7L)
-    graft.streaming.StreamSketch.upsertBatch(half, "text", root, 7L) // retry
+    sketchIdx(root).upsert(half, 7L)
+    sketchIdx(root).upsert(half, 7L) // retry
     val streamed = cells(graft.streaming.StreamSketch.readSketch(spark, root))
     val oneShot = cells(Sketch.cmsSketch(half, "text", 4, 3))
     assert(streamed == oneShot)
@@ -118,19 +120,19 @@ class SketchSpec extends SparkSpec {
     val s = spark
     val half = docs.filter(col("doc_id") % 2 === 0)
     val rest = docs.filter(col("doc_id") % 2 === 1)
-    graft.streaming.StreamSketch.upsertBatch(half, "text", root, 1L)
-    graft.streaming.StreamSketch.upsertBatch(rest, "text", root, 2L)
-    graft.streaming.StreamSketch.compact(s, root)
+    sketchIdx(root).upsert(half, 1L)
+    sketchIdx(root).upsert(rest, 2L)
+    sketchIdx(root).compact()
     assert(graft.streaming.StreamSketch.readWatermark(s, root) == 2L)
     // at-least-once redelivery of batch 1 after its delta was folded
     // into batch_id -1: (batch_id, r, b) dedup can't see it any more;
     // the watermark must reject it as a no-op
-    graft.streaming.StreamSketch.upsertBatch(half, "text", root, 1L)
+    sketchIdx(root).upsert(half, 1L)
     val streamed = cells(graft.streaming.StreamSketch.readSketch(s, root))
     val oneShot = cells(Sketch.cmsSketch(docs, "text", 4, 3))
     assert(streamed == oneShot, "redelivered pre-compaction batch double-counted")
     // while genuinely NEW batches still ingest
-    graft.streaming.StreamSketch.upsertBatch(half, "text", root, 3L)
+    sketchIdx(root).upsert(half, 3L)
     val after = cells(graft.streaming.StreamSketch.readSketch(s, root))
     val expect = cells(Sketch.cmsSketch(docs.union(half), "text", 4, 3))
     assert(after == expect)
@@ -153,8 +155,7 @@ class SketchSpec extends SparkSpec {
   test("StreamSketch: point estimates served from the persisted sketch match batch") {
     val root = java.nio.file.Files.createTempDirectory("cms4").toString + "/s"
     (0 until 2).foreach { k =>
-      graft.streaming.StreamSketch.upsertBatch(
-        docs.filter(col("doc_id") % 2 === k), "text", root, k.toLong)
+      sketchIdx(root).upsert(docs.filter(col("doc_id") % 2 === k), k.toLong)
     }
     val fromDisk = graft.streaming.StreamSketch.readSketch(spark, root)
     val cand = exact.keys.toSeq.toDF("token")
@@ -179,11 +180,10 @@ class SketchSpec extends SparkSpec {
   test("StreamSketch: compact collapses state, read is unchanged") {
     val root = java.nio.file.Files.createTempDirectory("cms3").toString + "/s"
     (0 until 3).foreach { k =>
-      graft.streaming.StreamSketch.upsertBatch(
-        docs.filter(pmod(col("doc_id"), lit(3)) === k), "text", root, k.toLong)
+      sketchIdx(root).upsert(docs.filter(pmod(col("doc_id"), lit(3)) === k), k.toLong)
     }
     val before = cells(graft.streaming.StreamSketch.readSketch(spark, root))
-    graft.streaming.StreamSketch.compact(spark, root)
+    sketchIdx(root).compact()
     val after = cells(graft.streaming.StreamSketch.readSketch(spark, root))
     assert(after == before)
     val batches = spark.read.parquet(root).select("batch_id").distinct().count()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * snapshot, before the retire) is never erased — and exact across
   * the crash points a real maintenance job can hit. The interleaving
   * is replayed deterministically by pinning the snapshot with
-  * `compactSnapshot` and upserting between the pin and the call.
+  * `compactSnapshots` and upserting between the pin and the call.
   */
 class StreamCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +25,17 @@ class StreamCompactionSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/root"
+
+  private def textIdx(root: String, buckets: Int = -1) =
+    new StreamTextIndex.Index(spark, root, "doc_id", "text", buckets)
+  private def sketchIdx(root: String) = new StreamSketch.Index(spark, root, "text")
+  private def ivfIdx(root: String) =
+    new StreamIvfPq.Index(spark, root, "vec_id", "embedding")
+  private def bpeIdx(root: String, tok: graft.operators.Bpe.Learned) =
+    new graft.streaming.StreamBpe.Index(spark, root, "doc_id", "text", tok)
+  private def dedupIdx(root: String,
+      cfg: StreamDedup.Config = StreamDedup.Config(), labels: Boolean = false) =
+    new StreamDedup.Index(spark, root, "doc_id", "text", cfg, labels)
 
   private def hfs = new org.apache.hadoop.fs.Path("/")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -43,13 +54,13 @@ class StreamCompactionSpec extends SparkSpec {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 0L)
-    StreamTextIndex.upsertBatch(b1, "doc_id", "text", root, 1L)
+    textIdx(root).upsert(b0, 0L)
+    textIdx(root).upsert(b1, 1L)
     // the compaction pins its snapshot …
     val snapshot = StreamState.listDataFiles(spark, root)
     // … and a live ingest lands INSIDE the compaction window
-    StreamTextIndex.upsertBatch(b2, "doc_id", "text", root, 2L)
-    StreamTextIndex.compactSnapshot(spark, root, snapshot)
+    textIdx(root).upsert(b2, 2L)
+    textIdx(root).compactSnapshots(snapshot)
     // the late batch's postings were not erased: the index equals a
     // full scan of the union, including b2-only terms
     assert(postings(root) == scanPostings(docs))
@@ -60,8 +71,7 @@ class StreamCompactionSpec extends SparkSpec {
   test("text index: a crash between merge-append and retire only costs space") {
     val root = tmp("sci-idx-crash")
     (0 until 3).foreach { k =>
-      StreamTextIndex.upsertBatch(docs.filter(col("doc_id") % 3 === k),
-        "doc_id", "text", root, k.toLong)
+      textIdx(root).upsert(docs.filter(col("doc_id") % 3 === k), k.toLong)
     }
     val want = scanPostings(docs)
     // back the snapshot files up, compact, then restore them — the
@@ -76,7 +86,7 @@ class StreamCompactionSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(f), hfs,
         new org.apache.hadoop.fs.Path(backup, s"$i"), false, conf)
     }
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).compact()
     snapshot.zipWithIndex.foreach { case (f, i) =>
       org.apache.hadoop.fs.FileUtil.copy(hfs,
         new org.apache.hadoop.fs.Path(backup, s"$i"), hfs,
@@ -86,21 +96,21 @@ class StreamCompactionSpec extends SparkSpec {
     assert(postings(root) == want)
     // the next compaction retires the leftovers and still agrees:
     // state is back to exactly one row per live posting
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).compact()
     assert(postings(root) == want)
     assert(spark.read.parquet(root).count() == want.size)
   }
 
   test("text index: re-ingesting a modified document serves only the new version") {
     val root = tmp("sci-idx-upd")
-    StreamTextIndex.upsertBatch(docs, "doc_id", "text", root, 0L)
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).upsert(docs, 0L)
+    textIdx(root).compact()
     // update every 7th document to entirely new content
     val upd = docs.filter(col("doc_id") % 7 === 0)
       .withColumn("text", concat(lit("refreshedcontent marker"),
         lit(" doc "), col("doc_id")))
-    StreamTextIndex.upsertBatch(upd, "doc_id", "text", root, 1L)
-    StreamTextIndex.upsertBatch(upd, "doc_id", "text", root, 1L) // retry
+    textIdx(root).upsert(upd, 1L)
+    textIdx(root).upsert(upd, 1L) // retry
     // latest-wins from the first read: equals a fresh build over the
     // FINAL corpus — stale tokens of updated docs stop matching
     val finalCorpus = docs.filter(col("doc_id") % 7 =!= 0).unionByName(upd)
@@ -112,28 +122,27 @@ class StreamCompactionSpec extends SparkSpec {
       .as[Long].collect().toSet
     assert(gotMarker == upd.select("doc_id").as[Long].collect().toSet)
     // compaction folds the superseded generation away and agrees
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).compact()
     assert(postings(root) == want)
     assert(spark.read.parquet(root).count() == want.size)
     // a redelivery of the ORIGINAL batch after compaction cannot
     // resurrect the old content
-    StreamTextIndex.upsertBatch(docs.filter(col("doc_id") % 7 === 0),
-      "doc_id", "text", root, 0L)
+    textIdx(root).upsert(docs.filter(col("doc_id") % 7 === 0), 0L)
     assert(postings(root) == want)
   }
 
   test("text index: an explicit bucket modulus that disagrees with the persisted one is rejected") {
     val root = tmp("sci-idx-mod")
     val b0 = docs.limit(5)
-    StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 0L, buckets = 32)
+    textIdx(root, 32).upsert(b0, 0L)
     assert(StreamTextIndex.bucketsOf(spark, root) == 32)
     val e = intercept[IllegalArgumentException] {
-      StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 1L, buckets = 16)
+      textIdx(root, 16).upsert(b0, 1L)
     }
     assert(e.getMessage.contains("bucket modulus"))
     // the persisted modulus (or no modulus at all) is accepted
-    StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 1L, buckets = 32)
-    StreamTextIndex.upsertBatch(b0, "doc_id", "text", root, 2L)
+    textIdx(root, 32).upsert(b0, 1L)
+    textIdx(root).upsert(b0, 2L)
   }
 
   test("fresh-root modulus claim is single-winner: concurrent claimers cannot fork the layout") {
@@ -167,7 +176,7 @@ class StreamCompactionSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("single-modulus"), e.getMessage)
     // and the full upsert path over the claimed root works as usual
-    StreamTextIndex.upsertBatch(docs.limit(50), "doc_id", "text", root, 0L)
+    textIdx(root).upsert(docs.limit(50), 0L)
     assert(postings(root) == scanPostings(docs.limit(50)))
   }
 
@@ -295,19 +304,19 @@ class StreamCompactionSpec extends SparkSpec {
 
   test("text index: deletes tombstone, resurrect, and physically retire at compaction") {
     val root = tmp("sci-idx-del")
-    StreamTextIndex.upsertBatch(docs, "doc_id", "text", root, 0L)
+    textIdx(root).upsert(docs, 0L)
     // delete every 5th doc — postings untouched, one log row each
     val dead = docs.filter(col("doc_id") % 5 === 0)
-    StreamTextIndex.deleteDocs(dead.select("doc_id"), "doc_id", root, 1L)
+    textIdx(root).delete(dead.select("doc_id"), 1L)
     val alive = docs.filter(col("doc_id") % 5 =!= 0)
     assert(postings(root) == scanPostings(alive))
     // resurrect half of the deleted under a higher batch id
     val back = dead.filter(col("doc_id") % 10 === 0)
-    StreamTextIndex.upsertBatch(back, "doc_id", "text", root, 2L)
+    textIdx(root).upsert(back, 2L)
     val fin = alive.unionByName(back)
     assert(postings(root) == scanPostings(fin))
     // compaction physically retires the still-dead postings …
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).compact()
     assert(postings(root) == scanPostings(fin))
     val stillDead = dead.filter(col("doc_id") % 10 =!= 0)
       .select("doc_id").as[Long].collect().toSet
@@ -317,10 +326,10 @@ class StreamCompactionSpec extends SparkSpec {
       "tombstoned postings not physically retired")
     // … keeps the tombstone (a redelivery of the ORIGINAL batch
     // cannot resurrect deleted content) …
-    StreamTextIndex.upsertBatch(dead, "doc_id", "text", root, 0L)
+    textIdx(root).upsert(dead, 0L)
     assert(postings(root) == scanPostings(fin))
     // … and a second compaction converges back to one live row each
-    StreamTextIndex.compact(spark, root)
+    textIdx(root).compact()
     assert(postings(root) == scanPostings(fin))
     assert(spark.read.parquet(root).count() == scanPostings(fin).size)
   }
@@ -338,21 +347,21 @@ class StreamCompactionSpec extends SparkSpec {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    StreamBpe.encodeBatch(b0, "doc_id", "text", frozen, root, 0L)
-    StreamBpe.encodeBatch(b1, "doc_id", "text", frozen, root, 1L)
+    bpeIdx(root, frozen).upsert(b0, 0L)
+    bpeIdx(root, frozen).upsert(b1, 1L)
     // a batch lands INSIDE the compaction window and must survive
     val snapshot = StreamState.listDataFiles(spark, root)
-    StreamBpe.encodeBatch(b2, "doc_id", "text", frozen, root, 2L)
-    StreamBpe.compactSnapshot(spark, root, snapshot)
-    StreamBpe.encodeBatch(b1, "doc_id", "text", frozen, root, 1L) // retry
+    bpeIdx(root, frozen).upsert(b2, 2L)
+    bpeIdx(root, frozen).compactSnapshots(snapshot)
+    bpeIdx(root, frozen).upsert(b1, 1L) // retry
     assert(got() == enc(docs))
     // re-ingesting a MODIFIED document serves only the new encoding
     val upd = docs.filter(col("doc_id") % 11 === 0)
       .withColumn("text", concat(lit("fresh words only "), col("doc_id")))
-    StreamBpe.encodeBatch(upd, "doc_id", "text", frozen, root, 3L)
+    bpeIdx(root, frozen).upsert(upd, 3L)
     val finalCorpus = docs.filter(col("doc_id") % 11 =!= 0).unionByName(upd)
     assert(got() == enc(finalCorpus))
-    StreamBpe.compact(spark, root)
+    bpeIdx(root, frozen).compact()
     assert(got() == enc(finalCorpus))
     assert(spark.read.parquet(root).count() == enc(finalCorpus).size)
     // the packed-shard face agrees with packing the one-shot counts
@@ -366,10 +375,10 @@ class StreamCompactionSpec extends SparkSpec {
     // the compliance path: delete every 13th doc — pieces stop
     // serving immediately, compaction physically retires them
     val dead = docs.filter(col("doc_id") % 13 === 0)
-    StreamBpe.deleteDocs(dead.select("doc_id"), "doc_id", root, 4L)
+    bpeIdx(root, frozen).delete(dead.select("doc_id"), 4L)
     val afterDel = finalCorpus.filter(col("doc_id") % 13 =!= 0)
     assert(got() == enc(afterDel))
-    StreamBpe.compact(spark, root)
+    bpeIdx(root, frozen).compact()
     assert(got() == enc(afterDel))
     val deadIds = dead.select("doc_id").as[Long].collect().toSet
     val onDisk = spark.read.parquet(root)
@@ -389,13 +398,13 @@ class StreamCompactionSpec extends SparkSpec {
     val b2 = corpus.filter(col("vec_id") > maxId / 2 && col("vec_id") % 2 === 1)
     val dir = tmp("sci-ivfpq")
     Similarity.buildIvfPq(base, "vec_id", "embedding", dir)
-    StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", dir, 0L)
+    ivfIdx(dir).upsert(b1, 0L)
     val metaBefore = hfs.listStatus(
       new org.apache.hadoop.fs.Path(dir, "_meta")).map(s =>
         (s.getPath.getName, s.getModificationTime)).toSeq
     val snapshot = StreamState.listDataFiles(spark, dir)
-    StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", dir, 1L) // mid-window
-    StreamIvfPq.compactSnapshot(spark, dir, dir, snapshot)
+    ivfIdx(dir).upsert(b2, 1L) // mid-window
+    ivfIdx(dir).compactSnapshots(snapshot)
     // every id is served — including the batch that landed mid-window
     assert(spark.read.parquet(dir).select("vec_id").distinct().count() ==
       corpus.count())
@@ -420,8 +429,8 @@ class StreamCompactionSpec extends SparkSpec {
     val b2 = corpus.filter(col("vec_id") > maxId / 2 && col("vec_id") % 2 === 1)
     val dir = tmp("sci-ivfpq-del")
     Similarity.buildIvfPq(base, "vec_id", "embedding", dir)
-    StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", dir, 0L)
-    StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", dir, 1L)
+    ivfIdx(dir).upsert(b1, 0L)
+    ivfIdx(dir).upsert(b2, 1L)
     def top(k: Int): Seq[(Long, Long)] =
       StreamIvfPq.query(spark, dir, corpus, "vec_id", "embedding",
         query, k).as[(Long, Long)].collect().toSeq
@@ -429,20 +438,19 @@ class StreamCompactionSpec extends SparkSpec {
     val deadIds = before.take(2).map(_._1)
     // delete the current top 2: they stop ranking from the next read,
     // the rest of the list is unchanged
-    StreamIvfPq.deleteVecs(deadIds.toDF("vec_id"), "vec_id", dir, 2L)
+    ivfIdx(dir).delete(deadIds.toDF("vec_id"), 2L)
     assert(top(10).take(8) == before.drop(2))
     // a stale redelivery of the pre-delete batches re-appends dead
     // rows, but their generations cannot outrank the tombstone
-    StreamIvfPq.upsertBatch(b1, "vec_id", "embedding", dir, 0L)
-    StreamIvfPq.upsertBatch(b2, "vec_id", "embedding", dir, 1L)
+    ivfIdx(dir).upsert(b1, 0L)
+    ivfIdx(dir).upsert(b2, 1L)
     assert(top(10).take(8) == before.drop(2))
     // a LATER upsert resurrects: answers return to the original list
-    StreamIvfPq.upsertBatch(corpus.filter(col("vec_id").isin(deadIds: _*)),
-      "vec_id", "embedding", dir, 3L)
+    ivfIdx(dir).upsert(corpus.filter(col("vec_id").isin(deadIds: _*)), 3L)
     assert(top(10) == before)
     // delete again + compact: the dead code rows are physically gone
-    StreamIvfPq.deleteVecs(deadIds.toDF("vec_id"), "vec_id", dir, 4L)
-    StreamIvfPq.compact(spark, dir)
+    ivfIdx(dir).delete(deadIds.toDF("vec_id"), 4L)
+    ivfIdx(dir).compact()
     assert(spark.read.parquet(dir)
       .filter(col("vec_id").isin(deadIds: _*)).count() == 0,
       "tombstoned code rows not physically retired")
@@ -450,11 +458,10 @@ class StreamCompactionSpec extends SparkSpec {
     // the race: a resurrection landing INSIDE the compaction window
     // survives the tombstone retire (its file is outside the snapshot)
     val x = before.drop(2).head._1
-    StreamIvfPq.deleteVecs(Seq(x).toDF("vec_id"), "vec_id", dir, 5L)
+    ivfIdx(dir).delete(Seq(x).toDF("vec_id"), 5L)
     val snapshot = StreamState.listDataFiles(spark, dir)
-    StreamIvfPq.upsertBatch(corpus.filter(col("vec_id") === x),
-      "vec_id", "embedding", dir, 6L) // mid-window
-    StreamIvfPq.compactSnapshot(spark, dir, dir, snapshot)
+    ivfIdx(dir).upsert(corpus.filter(col("vec_id") === x), 6L) // mid-window
+    ivfIdx(dir).compactSnapshots(snapshot)
     assert(top(8).map(_._1).contains(x),
       "mid-compaction resurrection was erased by the tombstone retire")
   }
@@ -469,9 +476,9 @@ class StreamCompactionSpec extends SparkSpec {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    StreamDedup.upsertBatchWithLabels(b0, "doc_id", "text", root, cfg)
-    StreamDedup.upsertBatchWithLabels(b1, "doc_id", "text", root, cfg)
-    StreamDedup.upsertBatchWithLabels(b1, "doc_id", "text", root, cfg) // retry
+    dedupIdx(root, cfg, labels = true).upsert(b0, -1L)
+    dedupIdx(root, cfg, labels = true).upsert(b1, -1L)
+    dedupIdx(root, cfg, labels = true).upsert(b1, -1L) // retry
     // the batch clustering over the whole corpus is the target
     val want = graft.operators.Dedup.nearDupClusters(
       graft.operators.Dedup.minhashLsh(docs, "doc_id", "text",
@@ -481,8 +488,8 @@ class StreamCompactionSpec extends SparkSpec {
     val bandsSnap = StreamState.listDataFiles(spark, s"$root/bands")
     val sigsSnap = StreamState.listDataFiles(spark, s"$root/sigs")
     // … and a live ingest lands INSIDE the compaction window
-    StreamDedup.upsertBatchWithLabels(b2, "doc_id", "text", root, cfg)
-    StreamDedup.compactSnapshots(spark, bandsSnap, sigsSnap, root)
+    dedupIdx(root, cfg, labels = true).upsert(b2, -1L)
+    dedupIdx(root).compactSnapshots(bandsSnap, sigsSnap)
     // the late batch's bands/sigs were not erased: pairs derivable
     // from the index still equal the batch operator over the union,
     // and the maintained labels equal the batch clustering
@@ -517,9 +524,8 @@ class StreamCompactionSpec extends SparkSpec {
     val g = (40L, sl(gt, 1, 60)); val h = (50L, sl(gt, 8, 67))
     val i9 = (60L, sl(gt, 15, 74))
     def up(rows: Seq[(Long, String)], bid: Long) =
-      StreamState.release(StreamDedup.upsertBatchWithLabels(
-        rows.toDF("doc_id", "text"), "doc_id", "text", root, cfg,
-        batchId = bid))
+      StreamState.release(dedupIdx(root, cfg, labels = true)
+        .upsert(rows.toDF("doc_id", "text"), bid))
     def labels() = StreamDedup.indexLabels(spark, root)
       .as[(Long, Long)].collect().toSet
     def pairIds() = StreamDedup.indexPairs(spark, root, cfg)
@@ -530,8 +536,7 @@ class StreamCompactionSpec extends SparkSpec {
       (40L, 40L), (50L, 40L), (60L, 40L)))
     // delete the bridge (splits {10,20,30}: survivors lose their only
     // partner) and the clique's canonical (promotes min(50,60))
-    StreamDedup.deleteDocs(spark, root,
-      Seq(20L, 40L).toDF("id"), 2L, cfg)
+    dedupIdx(root, cfg, labels = true).delete(Seq(20L, 40L).toDF("doc_id"), 2L)
     assert(labels() == Set((50L, 50L), (60L, 50L)))
     assert(pairIds() == Set((50L, 60L)))
     // the index still ingests: a fresh doc with the dead bridge's text
@@ -545,7 +550,7 @@ class StreamCompactionSpec extends SparkSpec {
       (70L, 10L), (50L, 50L), (60L, 50L)))
     // compaction physically retires the still-dead doc's derived data
     // and keeps the resurrected one's
-    StreamDedup.compact(spark, root)
+    dedupIdx(root).compact()
     val sigIds = spark.read.parquet(s"$root/sigs")
       .select("id").as[Long].collect().toSet
     val bandIds = spark.read.parquet(s"$root/bands")
@@ -567,15 +572,14 @@ class StreamCompactionSpec extends SparkSpec {
     val a = (10L, sl(1, 60)); val b = (20L, sl(16, 75))
     val c = (30L, sl(31, 90)); val d = (80L, sl(16, 75))
     def up(rows: Seq[(Long, String)], bid: Long): Set[(Long, Long)] = {
-      val pairs = StreamDedup.upsertBatchWithLabels(
-        rows.toDF("doc_id", "text"), "doc_id", "text", root, cfg,
-        batchId = bid)
+      val pairs = dedupIdx(root, cfg, labels = true)
+        .upsert(rows.toDF("doc_id", "text"), bid)
       try pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
       finally StreamState.release(pairs)
     }
     up(Seq(a, c), 0L)
     up(Seq(b), 1L)
-    StreamDedup.deleteDocs(spark, root, Seq(20L).toDF("id"), 2L, cfg)
+    dedupIdx(root, cfg, labels = true).delete(Seq(20L).toDF("doc_id"), 2L)
     assert(StreamDedup.indexLabels(spark, root).count() == 0)
     // the resurrecting upsert: b pairs with its live history partners
     // (a, c) and with d, which arrives beside it
@@ -634,12 +638,11 @@ class StreamCompactionSpec extends SparkSpec {
     val root = tmp("sci-delx")
     val cfg = StreamDedup.Config(threshold = 0.5)
     (0 until 3).foreach { k =>
-      StreamState.release(StreamDedup.upsertBatchWithLabels(
-        docs.filter(col("doc_id") % 3 === k), "doc_id", "text", root,
-        cfg, batchId = k.toLong))
+      StreamState.release(dedupIdx(root, cfg, labels = true)
+        .upsert(docs.filter(col("doc_id") % 3 === k), k.toLong))
     }
-    StreamDedup.deleteDocs(spark, root,
-      docs.filter(col("doc_id") % 7 === 3).select("doc_id"), 3L, cfg)
+    dedupIdx(root, cfg, labels = true)
+      .delete(docs.filter(col("doc_id") % 7 === 3).select("doc_id"), 3L)
     val live = docs.filter(col("doc_id") % 7 =!= 3)
     val wantPairs = graft.operators.Dedup.minhashLsh(live, "doc_id",
         "text", cfg.shingleSize, cfg.numHashes, cfg.bands, cfg.threshold)
@@ -671,8 +674,8 @@ class StreamCompactionSpec extends SparkSpec {
     // StreamDedup.attach), where unreleased deltas would pin executor
     // blocks until a driver GC happens to run
     for (i <- 0 to 2) {
-      StreamState.release(StreamDedup.upsertBatchWithLabels(
-        docs.filter(col("doc_id") % 3 === i), "doc_id", "text", root, cfg))
+      StreamState.release(dedupIdx(root, cfg, labels = true)
+        .upsert(docs.filter(col("doc_id") % 3 === i), -1L))
     }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"ingest left pinned RDDs behind: $leaked")
@@ -685,23 +688,23 @@ class StreamCompactionSpec extends SparkSpec {
     val b1 = docs.filter(col("doc_id") % 3 === 0)
     val b2 = docs.filter(col("doc_id") % 3 === 1)
     val b3 = docs.filter(col("doc_id") % 3 === 2)
-    StreamSketch.upsertBatch(b1, "text", root, 1L)
-    StreamSketch.upsertBatch(b2, "text", root, 2L)
+    sketchIdx(root).upsert(b1, 1L)
+    sketchIdx(root).upsert(b2, 2L)
     val snapshot = StreamState.listDataFiles(spark, root)
     // mid-window: a genuinely NEW batch …
-    StreamSketch.upsertBatch(b3, "text", root, 3L)
+    sketchIdx(root).upsert(b3, 3L)
     // … and an at-least-once REDELIVERY of batch 1 that slipped past
     // the watermark check (the watermark is still −1 here) — the
     // pre-r12 design double-counted exactly this row set
-    StreamSketch.upsertBatch(b1, "text", root, 1L)
-    StreamSketch.compactSnapshot(spark, root, snapshot)
+    sketchIdx(root).upsert(b1, 1L)
+    sketchIdx(root).compactSnapshots(snapshot)
     assert(StreamSketch.readWatermark(spark, root) == 2L)
     val got = cells(StreamSketch.readSketch(spark, root))
     val want = cells(Sketch.cmsSketch(docs, "text", 4, 3))
     assert(got == want,
       "mid-compaction interleaving lost or double-counted a batch")
     // the next compaction folds the survivors in and still agrees
-    StreamSketch.compact(spark, root)
+    sketchIdx(root).compact()
     assert(StreamSketch.readWatermark(spark, root) == 3L)
     assert(cells(StreamSketch.readSketch(spark, root)) == want)
   }
@@ -710,11 +713,11 @@ class StreamCompactionSpec extends SparkSpec {
     val root = tmp("sci-cms-crash")
     val b1 = docs.filter(col("doc_id") % 2 === 0)
     val b2 = docs.filter(col("doc_id") % 2 === 1)
-    StreamSketch.upsertBatch(b1, "text", root, 1L)
-    StreamSketch.upsertBatch(b2, "text", root, 2L)
-    StreamSketch.compact(spark, root) // watermark 2, merge id −4
+    sketchIdx(root).upsert(b1, 1L)
+    sketchIdx(root).upsert(b2, 2L)
+    sketchIdx(root).compact() // watermark 2, merge id −4
     val extra = docs.filter(col("doc_id") % 5 === 0)
-    StreamSketch.upsertBatch(extra, "text", root, 3L)
+    sketchIdx(root).upsert(extra, 3L)
     val want = cells(Sketch.cmsSketch(docs.union(extra), "text", 4, 3))
     assert(cells(StreamSketch.readSketch(spark, root)) == want)
     // simulate the crash: a later compaction appended its merge
@@ -727,7 +730,7 @@ class StreamCompactionSpec extends SparkSpec {
     assert(cells(StreamSketch.readSketch(spark, root)) == want,
       "half-written merge generation was double-counted")
     // re-running compaction retires the wreckage and converges
-    StreamSketch.compact(spark, root)
+    sketchIdx(root).compact()
     assert(StreamSketch.readWatermark(spark, root) == 3L)
     assert(cells(StreamSketch.readSketch(spark, root)) == want)
     assert(spark.read.parquet(root).select("batch_id").distinct().count() == 1L)
@@ -767,28 +770,26 @@ class StreamCompactionSpec extends SparkSpec {
       df.filter(col(idCol) % 2 === b)
     val tables = Seq(
       Partitioned("text index (bucket)", r => Seq(r), _ => (),
-        (r, b) => StreamTextIndex.upsertBatch(half(docs, "doc_id", b),
-          "doc_id", "text", r, b),
-        StreamTextIndex.compact(spark, _)),
+        (r, b) => textIdx(r).upsert(half(docs, "doc_id", b), b),
+        textIdx(_).compact()),
       Partitioned("sketch (r)", r => Seq(r), _ => (),
-        (r, b) => StreamSketch.upsertBatch(half(docs, "doc_id", b), "text",
-          r, b),
-        StreamSketch.compact(spark, _)),
+        (r, b) => sketchIdx(r).upsert(half(docs, "doc_id", b), b),
+        sketchIdx(_).compact()),
       Partitioned("IVF-PQ (cluster)", r => Seq(r),
         r => Similarity.buildIvfPq(emb.filter(col("vec_id") <= maxVec / 2),
           "vec_id", "embedding", r),
-        (r, b) => StreamIvfPq.upsertBatch(half(vecs, "vec_id", b), "vec_id",
-          "embedding", r, b),
-        StreamIvfPq.compact(spark, _)),
+        (r, b) => ivfIdx(r).upsert(half(vecs, "vec_id", b), b),
+        ivfIdx(_).compact()),
       Partitioned("semantic (cl)", r => Seq(s"$r/vecs"), _ => (),
-        (r, b) => StreamState.release(StreamSemDedup.upsertBatch(
-          half(sem, "id", b), "id", "v", semModel, r, b)),
-        StreamSemDedup.compact(spark, _)),
+        (r, b) => StreamState.release(
+          new StreamSemDedup.Index(spark, r, "id", "v", semModel)
+            .upsert(half(sem, "id", b), b)),
+        new StreamSemDedup.Index(spark, _, "id", "v", semModel).compact()),
       Partitioned("near-dup (pb, pid)", r => Seq(s"$r/bands", s"$r/sigs"),
         _ => (),
         (r, b) => StreamState.release(StreamDedup.upsertBatch(
           half(docs, "doc_id", b), "doc_id", "text", r, near, b)),
-        StreamDedup.compact(spark, _)))
+        dedupIdx(_).compact()))
     for (t <- tables) {
       val root = tmp("layout")
       t.init(root)
@@ -805,8 +806,8 @@ class StreamCompactionSpec extends SparkSpec {
     // labels (pl): every fold rewrites its directories to one file each
     val root = tmp("layout-labels")
     for (b <- 0L to 1L) {
-      StreamState.release(StreamDedup.upsertBatchWithLabels(
-        half(docs, "doc_id", b), "doc_id", "text", root, near, b))
+      StreamState.release(dedupIdx(root, near, labels = true)
+        .upsert(half(docs, "doc_id", b), b))
       val files = filesPerDir(Seq(s"$root/labels"))
       assert(files.nonEmpty && files.values.forall(_ == 1),
         s"labels (pl): files per directory after fold $b: $files")
@@ -823,7 +824,7 @@ class StreamCompactionSpec extends SparkSpec {
       val batch = docs.filter(
         (col("doc_id") * 2 > maxId) === lit(b == 1L))
       val gens = gained(Seq(StreamState.genLogPath(idx)))(
-        StreamTextIndex.upsertBatch(batch, "doc_id", "text", idx, b))
+        textIdx(idx).upsert(batch, b))
       assert(gens.values.toSeq == Seq(1), s"_docs: upsert $b added $gens")
       val g = gained(oneFile)(StreamPretrain.ingestBatch(batch, "doc_id",
         "text", "lang", "source", fz, root, b, recordStats = true))

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
 class StreamIvfPqRefitSpec extends SparkSpec {
   import spark.implicits._
 
+  private def ivfIdx(root: String) =
+    new StreamIvfPq.Index(spark, root, "vec_id", "embedding")
+
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/root"
 
@@ -35,8 +38,7 @@ class StreamIvfPqRefitSpec extends SparkSpec {
     // the drifted state a refit repairs
     Similarity.buildIvfPq(corpus.filter(col("vec_id") <= maxId / 2),
       "vec_id", "embedding", root)
-    StreamIvfPq.upsertBatch(corpus.filter(col("vec_id") > maxId / 2),
-      "vec_id", "embedding", root, 0L)
+    ivfIdx(root).upsert(corpus.filter(col("vec_id") > maxId / 2), 0L)
     assert(StreamIvfPq.resolve(spark, root) == root) // still flat gen 0
     // refit on the CURRENT corpus and swap
     val vdir = StreamIvfPq.refit(corpus, "vec_id", "embedding", root)
@@ -78,12 +80,12 @@ class StreamIvfPqRefitSpec extends SparkSpec {
     val late = corpus.filter(col("vec_id") > maxId / 2)
     Similarity.buildIvfPq(base, "vec_id", "embedding", root)
     val vdir = StreamIvfPq.refit(base, "vec_id", "embedding", root)
-    StreamIvfPq.upsertBatch(late, "vec_id", "embedding", root, 0L)
+    ivfIdx(root).upsert(late, 0L)
     // the batch landed in the NEW generation's cell partitions …
     assert(spark.read.parquet(vdir).filter(col("batch_id") === 0L).count() ==
       late.count())
     // … is compacted there …
-    StreamIvfPq.compact(spark, root)
+    ivfIdx(root).compact()
     assert(spark.read.parquet(vdir).count() == corpus.count())
     // … and cellStats reads the same generation (total = corpus)
     assert(StreamIvfPq.cellStats(spark, root)
@@ -99,7 +101,7 @@ class StreamIvfPqRefitSpec extends SparkSpec {
     assert(imb0 >= 1.0)
     // healthy index, threshold above its imbalance → the window must
     // leave the frozen model alone (no flapping)
-    val calm = Maintenance.run(spark, pipeRoot, ivfPqRoots = Seq(root),
+    val calm = Maintenance.run(spark, pipeRoot, indexes = Seq(ivfIdx(root)),
       ivfPqRefit = Seq(Maintenance.IvfPqRefitPolicy(root,
         _ => corpus, "vec_id", "embedding",
         imbalanceThreshold = imb0 * 1.5 + 0.01)))
@@ -117,8 +119,8 @@ class StreamIvfPqRefitSpec extends SparkSpec {
     val members = corpus.filter(col("vec_id").isin(heavyIds: _*))
     val shift1 = members.withColumn("vec_id", col("vec_id") + lit(maxId))
     val shift2 = members.withColumn("vec_id", col("vec_id") + lit(2 * maxId))
-    StreamIvfPq.upsertBatch(shift1, "vec_id", "embedding", root, 1L)
-    StreamIvfPq.upsertBatch(shift2, "vec_id", "embedding", root, 2L)
+    ivfIdx(root).upsert(shift1, 1L)
+    ivfIdx(root).upsert(shift2, 2L)
     val imb1 = StreamIvfPq.imbalance(spark, root)
     assert(imb1 > imb0, s"drift must raise the signal: $imb0 -> $imb1")
     // drifted index, threshold between the calm and drifted readings →
@@ -126,7 +128,7 @@ class StreamIvfPqRefitSpec extends SparkSpec {
     val live = corpus.select("vec_id", "embedding")
       .union(shift1.select("vec_id", "embedding"))
       .union(shift2.select("vec_id", "embedding"))
-    val report = Maintenance.run(spark, pipeRoot, ivfPqRoots = Seq(root),
+    val report = Maintenance.run(spark, pipeRoot, indexes = Seq(ivfIdx(root)),
       ivfPqRefit = Seq(Maintenance.IvfPqRefitPolicy(root,
         _ => live, "vec_id", "embedding",
         imbalanceThreshold = (imb0 + imb1) / 2, retireOld = true)))

@@ -28,8 +28,8 @@ class StreamSemDedupSpec extends SparkSpec {
     // the public face that rides annotate: refusals over a single
     // batch vs the direct-pair rule computed from assignCells' cells
     val root = tmp()
-    val refused = StreamSemDedup.upsertBatch(emb, "id", "v", m, root, 0L)
-      .collect().map(_.getLong(0)).toSet
+    val refused = new StreamSemDedup.Index(spark, root, "id", "v", m)
+      .upsert(emb, 0L).collect().map(_.getLong(0)).toSet
     val cells = Similarity.assignCells(emb, "id", "v", m.centroids, m.scale)
       .withColumnRenamed("id", "cid")
     val withCell = emb.join(cells, col("id") === col("cid"))
@@ -58,7 +58,7 @@ class StreamSemDedupSpec extends SparkSpec {
     val root = tmp()
     val refused = scala.collection.mutable.Set.empty[Long]
     def ingest(b: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
-      val r = StreamSemDedup.upsertBatch(b, "id", "v", m, root, bid)
+      val r = new StreamSemDedup.Index(spark, root, "id", "v", m).upsert(b, bid)
       refused ++= r.collect().map(_.getLong(0))
       graft.streaming.StreamState.release(r)
     }

@@ -254,6 +254,40 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the live-registry results sink and the outlier sink write a replayed batch once") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("replay").toString
+    val registry = new graft.operators.FilterRegistry(None)
+    registry.create("errors", "error")
+    val lines = LogPipeline.parse(Seq(
+      "2015-07-20T11:35:41.851+00:00 error one",
+      "2015-07-21T11:35:42.851+00:00 error two",
+      "2015-07-21T11:35:43.851+00:00 checkout three").toDF(), "value")
+    val results = s"$dir/results"
+    def resultRows = spark.read.parquet(results).count()
+    val writeResults = LogPipeline.dynamicResultsBatch(registry, results, Seq("date")) _
+    writeResults(lines, 3L)
+    writeResults(lines, 3L) // a restarted query replays its newest batch
+    assert(resultRows == 2)
+    // a write that crashed before staging completed leaves files the
+    // replay discards
+    Seq(1).toDF("x").write.parquet(s"$results/_batch-4/date=2015_07_20")
+    writeResults(lines, 4L)
+    assert(resultRows == 4)
+    assert(!new java.io.File(s"$results/_batch-4").exists())
+    val stats = ((0 until 30).map(i => ("f1", 1700000000L + i * 300L, 10L)) ++
+      Seq(("f1", 1700000000L + 30 * 300L, 100L), // spike (evaluated)
+        ("f1", 1700000000L + 31 * 300L, 10L))) // newest (skipped)
+      .toDF("filter_id", "bucket", "cnt")
+    val outliers = s"$dir/outliers"
+    val writeOutliers = LogPipeline.outlierBatch(outliers,
+      graft.ml.Outliers.Config(scoreThreshold = 0.4)) _
+    writeOutliers(stats, 0L)
+    writeOutliers(stats, 0L)
+    assert(spark.read.parquet(outliers).count() == 1)
+  }
+
   test("combined stats: metric-1 match counts union metric-2 classifier errors") {
     implicit val s = spark
     import s.implicits._
@@ -350,7 +384,7 @@ class StreamingSpec extends SparkSpec {
     // the stored index answers the same pair set as a batch query, and
     // stays correct after a duplicate-absorbing compaction
     assert(ids(StreamDedup.indexPairs(spark, root, cfg)) == want)
-    StreamDedup.compact(spark, root)
+    new StreamDedup.Index(spark, root, "doc_id", "text").compact()
     assert(ids(StreamDedup.indexPairs(spark, root, cfg)) == want)
   }
 
@@ -370,14 +404,14 @@ class StreamingSpec extends SparkSpec {
     // ingest in three batches; labels are folded in incrementally and
     // must land on the batch fixpoint after the last one
     (0 until 3).foreach { k =>
-      StreamDedup.upsertBatchWithLabels(
-        docs.filter(col("doc_id") % 3 === k), "doc_id", "text", root, cfg)
+      new StreamDedup.Index(spark, root, "doc_id", "text", cfg, labels = true)
+        .upsert(docs.filter(col("doc_id") % 3 === k), -1L)
     }
     assert(labelMap(StreamDedup.indexLabels(spark, root)) == want)
     // idempotence of the storage face: an empty follow-up batch (no
     // new pairs) leaves the table byte-identical in content
-    StreamDedup.upsertBatchWithLabels(
-      docs.filter(col("doc_id") < 0), "doc_id", "text", root, cfg)
+    new StreamDedup.Index(spark, root, "doc_id", "text", cfg, labels = true)
+      .upsert(docs.filter(col("doc_id") < 0), -1L)
     assert(labelMap(StreamDedup.indexLabels(spark, root)) == want)
   }
 

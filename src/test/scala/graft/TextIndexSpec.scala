@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 
 class TextIndexSpec extends SparkSpec {
 
+  private def textIdx(root: String) =
+    new graft.streaming.StreamTextIndex.Index(spark, root, "doc_id", "text")
+
   private lazy val docs = Tables.load(spark, sfDir, "documents")
 
   private def indexDir(): String = {
@@ -126,17 +129,17 @@ class TextIndexSpec extends SparkSpec {
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 === 1)
     val b2 = docs.filter(col("doc_id") % 3 === 2)
-    S.upsertBatch(b0, "doc_id", "text", root, 0L)
+    textIdx(root).upsert(b0, 0L)
     // a document is greppable right after its OWN batch
     val early = S.lookup(spark, root, "spark").as[Long].collect().toSet
     val scanB0 = b0.filter(array_contains(
         TextFunctions.tokenSet(lower(col("text"))), "spark"))
       .select("doc_id").as[Long].collect().toSet
     assert(early == scanB0 && early.nonEmpty)
-    S.upsertBatch(b1, "doc_id", "text", root, 1L)
-    S.compact(spark, root)
-    S.upsertBatch(b1, "doc_id", "text", root, 1L) // post-compaction retry
-    S.upsertBatch(b2, "doc_id", "text", root, 2L)
+    textIdx(root).upsert(b1, 1L)
+    textIdx(root).compact()
+    textIdx(root).upsert(b1, 1L) // post-compaction retry
+    textIdx(root).upsert(b2, 2L)
     // final posting set == batch-built index's
     val oneShot = indexDir()
     val batchPostings = spark.read.parquet(oneShot)
@@ -163,8 +166,7 @@ class TextIndexSpec extends SparkSpec {
       .createTempDirectory("stextindex2").toString + "/idx"
     val S = graft.streaming.StreamTextIndex
     (0 until 4).foreach { k =>
-      S.upsertBatch(docs.filter(pmod(col("doc_id"), lit(4)) === k),
-        "doc_id", "text", root, k.toLong)
+      textIdx(root).upsert(docs.filter(pmod(col("doc_id"), lit(4)) === k), k.toLong)
     }
     def dataFiles(): Long = {
       import scala.jdk.CollectionConverters._
@@ -176,7 +178,7 @@ class TextIndexSpec extends SparkSpec {
       .select("tok", "id").as[(String, Long)].collect().toSet
     val rep = graft.streaming.Maintenance.run(spark,
       java.nio.file.Files.createTempDirectory("mroot").toString,
-      indexRoots = Seq(root))
+      indexes = Seq(textIdx(root)))
     assert(rep.compactedIndexes == Seq(root))
     val after = dataFiles()
     assert(after < before, s"compaction did not shrink files: $before -> $after")

@@ -14,8 +14,12 @@ in that side's checkout. Both sides are built before the first pair, so
 no build lands between the runs of a pair.
 
 Prints every run, then for each end-to-end metric of BENCHMARK.json: the
-parent and change medians, how many pairs the change won, and the
-interquartile range of the parent's runs. For pretrain_ingest it also
+parent and change medians, how many pairs the change won, the
+interquartile range of the parent's runs, and a no-regression verdict
+against the metric's bound: "no worse", "WORSE" (the change median is
+worse than the parent's by more than the bound), or "unresolved" (the
+parent's IQR is wider than the bound of its median and not every change
+run beats every parent run). For pretrain_ingest it also
 prints, per cycle, each side's median ingest time (the `cycle_ms=` field
 of the details line; cycle 1 starts cold, later cycles probe a history)
 and how many pairs the change won, and whether each seed's kept_id_hash
@@ -99,6 +103,22 @@ def iqr(xs):
     return q[2] - q[0]
 
 
+def verdict(p, c, lower, bound):
+    """The no-regression verdict on one metric: WORSE when the change's
+    median is worse than the parent's by more than `bound` (a fraction
+    of the parent median); else unresolved when the parent's IQR is
+    wider than `bound` of its median and not every change run beats
+    every parent run; else no worse."""
+    mp, mc = statistics.median(p), statistics.median(c)
+    worse = (mc - mp if lower else mp - mc) / abs(mp) if mp else 0.0
+    if worse > bound:
+        return "WORSE"
+    dominated = max(c) < min(p) if lower else min(c) > max(p)
+    if mp and iqr(p) / abs(mp) > bound and not dominated:
+        return "unresolved"
+    return "no worse"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="git revision to compare against")
@@ -152,7 +172,7 @@ def main():
                                    got["change"][1].get("kept_id_hash")))
         n = len(runs["parent"])
         print(f"\n{a.workload}: {n} complete pairs (parent {a.parent})")
-        print(f"{'metric':<14} {'parent':>12} {'change':>12} {'wins':>6} {'parent IQR':>12}")
+        print(f"{'metric':<14} {'parent':>12} {'change':>12} {'wins':>6} {'parent IQR':>12}  verdict")
         for spec in metrics:
             k = spec["name"]
             p = [r[k] for r in runs["parent"] if k in r]
@@ -162,7 +182,7 @@ def main():
             lower = spec["better"] == "lower"
             wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
             print(f"{k:<14} {statistics.median(p):>12.4f} {statistics.median(c):>12.4f} "
-                  f"{wins:>3}/{len(p):<2} {iqr(p):>12.4f}")
+                  f"{wins:>3}/{len(p):<2} {iqr(p):>12.4f}  {verdict(p, c, lower, spec['bound'])}")
         if cycles["parent"]:
             print(f"\n{'cycle ingest ms':<16} {'parent':>10} {'change':>10} {'wins':>6}")
             for k in range(min(len(r) for r in cycles["parent"] + cycles["change"])):
